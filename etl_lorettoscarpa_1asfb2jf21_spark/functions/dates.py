@@ -11,7 +11,7 @@ ISO-8601, same as pandas ``isocalendar().week`` (app/etl.py:33).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MONTH_PATTERN = "MM/yyyy"
@@ -33,8 +33,3 @@ def time_attributes(date_col: Column | str) -> dict[str, Column]:
         "data_inicio": F.trunc(d, "month"),
         "data_fim": F.last_day(d),
     }
-
-
-def with_time_attributes(df: DataFrame, date_col: str) -> DataFrame:
-    """Attach ano/mes/semana/data_inicio/data_fim columns."""
-    return df.withColumns(time_attributes(date_col))

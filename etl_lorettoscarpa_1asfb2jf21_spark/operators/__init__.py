@@ -7,13 +7,12 @@ dedup      - exact / MinHash-LSH / SimHash / n-gram-Jaccard / embedding dedup (X
 similarity - brute-force + LSH-bucketed top-k vector search (X2)
 """
 
-from .upsert import insert_if_absent, upsert_ignore
+from .upsert import insert_if_absent
 from .surrogate import with_surrogate_key
 from .validate import validate_contract, split_valid_invalid
 
 __all__ = [
     "insert_if_absent",
-    "upsert_ignore",
     "with_surrogate_key",
     "validate_contract",
     "split_valid_invalid",

@@ -37,42 +37,43 @@ def with_surrogate_key(
     id_col: str,
     order_by: Sequence[str],
     strategy: str = "dense",
-    offset: int = 0,
+    offset: int | DataFrame = 0,
     dense_max_rows: int = DENSE_MAX_ROWS,
 ) -> DataFrame:
     """Attach an integer surrogate key column named ``id_col``.
 
-    ``dense`` guards itself: inputs over ``dense_max_rows`` raise
-    (use ``sparse`` — fully parallel, unique, non-dense — instead).
-    The check is a ``limit(n+1).count()``, which stops scanning as soon
-    as the bound is exceeded rather than counting the full input.
+    ``offset`` is an int, or the existing table: ids then continue after
+    its max ``id_col`` (0 when empty), a one-row aggregate cross-joined
+    in the plan, so building the key launches no job.
+
+    ``dense`` guards itself: a row numbered past ``dense_max_rows`` raises
+    when the plan runs (use ``sparse`` — fully parallel, unique,
+    non-dense — instead).
     """
+    if isinstance(offset, DataFrame):
+        base = offset.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("_id_base"))
+        df = df.crossJoin(F.broadcast(base))
+        start = F.col("_id_base")
+    else:
+        start = F.lit(offset)
     if strategy == "sparse":
         # stays LONG: monotonically_increasing_id packs the partition id
         # into the high bits (values ≥ 2^33 on any multi-partition input),
         # so an int32 cast would wrap and collide — sparse ids are wide by
         # construction, which is the density/width trade the caller opted
         # into
-        key = F.monotonically_increasing_id() + F.lit(offset)
-        return df.withColumn(id_col, key.cast("long"))
+        key = (F.monotonically_increasing_id() + start).cast("long")
     elif strategy == "dense":
-        probe = df.limit(dense_max_rows + 1).count()
-        if probe > dense_max_rows:
-            raise ValueError(
+        rn = F.row_number().over(Window.orderBy(*[F.col(c) for c in order_by]))
+        key = F.when(
+            rn > dense_max_rows,
+            F.raise_error(F.lit(
                 f"dense surrogate keys need a global single-partition sort; "
                 f"input exceeds dense_max_rows={dense_max_rows} — use "
                 f"strategy='sparse' for fact-sized tables"
-            )
-        w = Window.orderBy(*[F.col(c) for c in order_by])
-        key = F.row_number().over(w) + F.lit(offset)
+            )),
+        ).otherwise(rn + start).cast("int")
     else:
         raise ValueError(f"unknown surrogate strategy: {strategy!r}")
-    return df.withColumn(id_col, key.cast("int"))
-
-
-def next_offset(existing: DataFrame | None, id_col: str) -> int:
-    """max(existing id), 0 when table empty/absent — append-time id base."""
-    if existing is None:
-        return 0
-    row = existing.agg(F.max(F.col(id_col)).alias("m")).collect()[0]
-    return int(row["m"] or 0)
+    out = df.withColumn(id_col, key)
+    return out.drop("_id_base") if isinstance(offset, DataFrame) else out

@@ -36,22 +36,3 @@ def insert_if_absent(
         return deduped
     return deduped.join(existing.select(*key).distinct(), on=key, how="left_anti")
 
-
-def upsert_ignore(
-    spark_table: str, batch: DataFrame, key: Sequence[str]
-) -> int:
-    """Materializing variant: append-if-absent into a saved table, returning
-    the number of rows appended. Creates the table if missing."""
-    spark = batch.sparkSession
-    if spark.catalog.tableExists(spark_table):
-        existing = spark.table(spark_table)
-        to_insert = insert_if_absent(batch, existing, key)
-    else:
-        to_insert = insert_if_absent(batch, None, key)
-    # count() materializes the plan once; cache to avoid recompute on write
-    to_insert = to_insert.cache()
-    n = to_insert.count()
-    if n:
-        to_insert.write.mode("append").saveAsTable(spark_table)
-    to_insert.unpersist()
-    return n

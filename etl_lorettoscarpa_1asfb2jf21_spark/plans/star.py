@@ -6,7 +6,9 @@ dim_classificacao → fato_lancamento, each an ``INSERT … ON CONFLICT DO
 NOTHING``. Here each loader is a lazy DataFrame lineage over one cached
 staging frame; idempotence comes from operators.upsert.insert_if_absent
 (dedup-within-batch + left-anti against existing), surrogate keys from
-operators.surrogate (row_number, offset by max existing id).
+operators.surrogate (row_number offset by max existing id, in the plan):
+run_etl launches no Spark job. The publish writes the six tables at once,
+the fact one file per month, and audits with two concurrent union counts.
 
 Scale notes: dims are distinct-projections of staging (partial+final hash
 aggregate, map-side combined); the fact build is a 5-way star join where
@@ -17,15 +19,18 @@ dim cardinality, never by fact size.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.dates import month_string_to_date, time_attributes
 from ..functions.hashing import business_key_hash
 from ..functions.locale import normalize_valor
-from ..operators.surrogate import next_offset, with_surrogate_key
+from ..operators.surrogate import with_surrogate_key
 from ..operators.upsert import insert_if_absent
 from ..operators.validate import split_valid_invalid
 from ..schemas import REQUIRED_COLUMNS
@@ -70,16 +75,33 @@ class Warehouse:
     fato_lancamento: DataFrame | None = None
 
     def counts(self) -> dict[str, int]:
-        return {
-            name: (df.count() if df is not None else 0)
+        """Row count per table (0 when absent), from one union query."""
+        names = [
+            df.select(F.lit(name).alias("t"))
             for name, df in vars(self).items()
-        }
+            if df is not None
+        ]
+        out = dict.fromkeys(vars(self), 0)
+        if names:
+            out.update(reduce(DataFrame.union, names).groupBy("t").count().collect())
+        return out
 
 
 def _append(existing: DataFrame | None, new: DataFrame) -> DataFrame:
     if existing is None:
         return new
     return existing.unionByName(new)
+
+
+def _upsert_dim(
+    rows: DataFrame, existing: DataFrame | None, id_col: str, key: list[str]
+) -> DataFrame:
+    """ON CONFLICT(key) DO NOTHING into a SERIAL dim, ids after existing's."""
+    new = insert_if_absent(rows, existing, key)
+    keyed = with_surrogate_key(
+        new, id_col, key, offset=0 if existing is None else existing
+    ).select(id_col, *rows.columns)
+    return _append(existing, keyed)
 
 
 def _load_dim_tempo(staging: DataFrame, existing: DataFrame | None) -> DataFrame:
@@ -98,11 +120,7 @@ def _load_dim_tempo(staging: DataFrame, existing: DataFrame | None) -> DataFrame
         .withColumns(time_attributes("_d"))
         .select("ano", "mes", "semana", "data_inicio", "data_fim")
     )
-    new = insert_if_absent(months, existing, ["ano", "mes"])
-    keyed = with_surrogate_key(
-        new, "id_tempo", ["ano", "mes"], offset=next_offset(existing, "id_tempo")
-    ).select("id_tempo", "ano", "mes", "semana", "data_inicio", "data_fim")
-    return _append(existing, keyed)
+    return _upsert_dim(months, existing, "id_tempo", ["ano", "mes"])
 
 
 def _load_simple_dim(
@@ -118,12 +136,7 @@ def _load_simple_dim(
     vals = staging.select(F.col(src_col).alias(name_col))
     if not_null:
         vals = vals.filter(F.col(name_col).isNotNull())
-    vals = vals.distinct()
-    new = insert_if_absent(vals, existing, [name_col])
-    keyed = with_surrogate_key(
-        new, id_col, [name_col], offset=next_offset(existing, id_col)
-    ).select(id_col, name_col)
-    return _append(existing, keyed)
+    return _upsert_dim(vals.distinct(), existing, id_col, [name_col])
 
 
 def _load_dim_grupo(
@@ -136,11 +149,7 @@ def _load_dim_grupo(
         .join(F.broadcast(dim_tipo), F.col("Tipo") == dim_tipo["nome_tipo"], "inner")
         .select("id_tipo", "nome_grupo")
     )
-    new = insert_if_absent(pairs, existing, ["id_tipo", "nome_grupo"])
-    keyed = with_surrogate_key(
-        new, "id_grupo", ["id_tipo", "nome_grupo"], offset=next_offset(existing, "id_grupo")
-    ).select("id_grupo", "id_tipo", "nome_grupo")
-    return _append(existing, keyed)
+    return _upsert_dim(pairs, existing, "id_grupo", ["id_tipo", "nome_grupo"])
 
 
 def _load_dim_categoria(
@@ -168,14 +177,7 @@ def _load_dim_categoria(
         )
         .select(F.col("dg.id_grupo"), F.col("s.nome_categoria"))
     )
-    new = insert_if_absent(resolved, existing, ["id_grupo", "nome_categoria"])
-    keyed = with_surrogate_key(
-        new,
-        "id_categoria",
-        ["id_grupo", "nome_categoria"],
-        offset=next_offset(existing, "id_categoria"),
-    ).select("id_categoria", "id_grupo", "nome_categoria")
-    return _append(existing, keyed)
+    return _upsert_dim(resolved, existing, "id_categoria", ["id_grupo", "nome_categoria"])
 
 
 def _load_fato(staging: DataFrame, wh: Warehouse, existing: DataFrame | None) -> DataFrame:
@@ -233,7 +235,8 @@ def run_etl(staging: DataFrame, warehouse: Warehouse | None = None) -> Warehouse
     """EP2: ordered loader chain over one cached staging frame.
 
     Pass an existing Warehouse for incremental (idempotent) loads; re-running
-    with the same staging batch grows no table (tested).
+    with the same staging batch grows no table (tested). Lazy: builds the
+    plans only and launches no Spark job (tested).
     """
     wh = warehouse or Warehouse()
     staging = staging.cache()
@@ -264,26 +267,45 @@ GOLD_TABLES = [
 ]
 
 
+def _in_pool(spark: SparkSession, fn, items) -> list:
+    """``[fn(x) for x in items]`` on one thread per gold table; each task
+    inherits the caller's job group and tags."""
+    task = inheritable_thread_target(spark)(fn)
+    with ThreadPoolExecutor(max_workers=len(GOLD_TABLES)) as pool:
+        return list(pool.map(task, items))
+
+
+def _fact_with_month(wh: Warehouse) -> DataFrame:
+    """The fact as written: with dim_tempo's (ano, mes) to partition by."""
+    return wh.fato_lancamento.join(
+        F.broadcast(wh.dim_tempo.select("id_tempo", "ano", "mes")), "id_tempo"
+    )
+
+
 def write_warehouse(wh: Warehouse, base_path: str) -> None:
     """Persist the gold layer; the fact is partitioned by (ano, mes).
+
+    The six tables are written concurrently: each dim is a few tiny jobs,
+    which serial writes would leave the cores idle between.
 
     Dims are small — one parquet file each (coalesce(1): no point paying a
     shuffle's worth of tiny files). The fact carries denormalized (ano, mes)
     from dim_tempo — standard lakehouse practice so month-scoped rollups hit
     partition pruning (and dynamic partition pruning on dim_tempo joins)
     instead of scanning all history. At 100 TB this is the difference
-    between reading one month and reading a decade.
+    between reading one month and reading a decade. Rebalancing the fact
+    on (ano, mes) writes a month as one file, not one per shuffle partition.
     """
-    for name in GOLD_TABLES[:-1]:
-        getattr(wh, name).coalesce(1).write.mode("overwrite").parquet(
-            f"{base_path}/{name}"
-        )
-    fact = wh.fato_lancamento.join(
-        F.broadcast(wh.dim_tempo.select("id_tempo", "ano", "mes")), "id_tempo"
-    )
-    fact.write.mode("overwrite").partitionBy("ano", "mes").parquet(
-        f"{base_path}/fato_lancamento"
-    )
+
+    def write(name: str) -> None:
+        if name == "fato_lancamento":
+            out = _fact_with_month(wh).hint("rebalance", "ano", "mes").write
+            out = out.partitionBy("ano", "mes")
+        else:
+            out = getattr(wh, name).coalesce(1).write
+        out.mode("overwrite").parquet(f"{base_path}/{name}")
+
+    _in_pool(wh.fato_lancamento.sparkSession, write, GOLD_TABLES)
 
 
 # ------------------------------------------------- write-audit-publish
@@ -514,42 +536,45 @@ def publish_warehouse(
     frames, and raises PublishConflictError — same guarantee — if another
     publisher claimed the next generation first (compare-and-swap on the
     generation chain; ``expected_generation`` pins the CAS base
-    explicitly, defaulting to the chain head observed at entry)."""
+    explicitly, defaulting to the chain head observed at entry).
+
+    The tables are written concurrently, the fact one file per month; the
+    audit counts sources and read-back in two concurrent union queries."""
     import uuid
 
     from pyspark import StorageLevel
 
     version = version or uuid.uuid4().hex
     vdir = f"{base_path}/_v/{version}"
-    spark0 = wh.fato_lancamento.sparkSession
+    spark = wh.fato_lancamento.sparkSession
     base_gen = (
         expected_generation
         if expected_generation is not None
-        else _current_generation(spark0, base_path)
+        else _current_generation(spark, base_path)
     )
 
     # persist the source frames FIRST so the write and the audit count
     # share one computation of each lineage instead of recomputing the
     # full upstream plan per consumer (spill-safe level — a huge gold
     # layer must not be pinned to executor memory)
-    cached = Warehouse()
-    for name in GOLD_TABLES:
-        setattr(
-            cached, name, getattr(wh, name).persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    spark = cached.fato_lancamento.sparkSession
+    cached = Warehouse(**{
+        name: df.persist(StorageLevel.MEMORY_AND_DISK) for name, df in vars(wh).items()
+    })
     try:
         write_warehouse(cached, vdir)  # WRITE: into the immutable version dir
 
         # AUDIT: re-read what actually landed on disk and compare counts
-        back = _read_warehouse_dir(spark, vdir)
+        written = {**vars(cached), "fato_lancamento": _fact_with_month(cached)}
+        back = Warehouse(**{
+            name: spark.read.schema(df.schema).parquet(f"{vdir}/{name}")
+            for name, df in written.items()
+        })
+        expect, got = _in_pool(spark, Warehouse.counts, [cached, back])
         for name in GOLD_TABLES:
-            expect = getattr(cached, name).count()
-            got = getattr(back, name).count()
-            if expect != got:
+            if expect[name] != got[name]:
                 raise RuntimeError(
-                    f"audit failed for {name}: wrote {expect} rows, "
-                    f"read back {got}; version {version} NOT published"
+                    f"audit failed for {name}: wrote {expect[name]} rows, "
+                    f"read back {got[name]}; version {version} NOT published"
                 )
     finally:
         for name in GOLD_TABLES:
@@ -636,9 +661,8 @@ def vacuum_versions(
 
 
 def _read_warehouse_dir(spark: SparkSession, vdir: str) -> Warehouse:
-    wh = Warehouse()
-    for name in GOLD_TABLES:
-        setattr(wh, name, spark.read.parquet(f"{vdir}/{name}"))
+    tables = _in_pool(spark, lambda name: spark.read.parquet(f"{vdir}/{name}"), GOLD_TABLES)
+    wh = Warehouse(**dict(zip(GOLD_TABLES, tables)))
     wh.fato_lancamento = wh.fato_lancamento.drop("ano", "mes")
     return wh
 

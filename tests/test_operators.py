@@ -45,14 +45,25 @@ def test_surrogate_dense_deterministic(spark):
     assert out1 == out2 == {"a": 1, "b": 2, "c": 3}
     out3 = with_surrogate_key(df, "id", ["name"], offset=10).collect()
     assert sorted(r["id"] for r in out3) == [11, 12, 13]
+    # a table offset continues after its max id (0 when it is empty)
+    existing = spark.createDataFrame([(4,), (7,)], "id int")
+    out4 = with_surrogate_key(df, "id", ["name"], offset=existing).collect()
+    assert sorted(r["id"] for r in out4) == [8, 9, 10]
+    assert list(out4[0].asDict()) == ["name", "id"]
+    out5 = with_surrogate_key(df, "id", ["name"], offset=existing.limit(0)).collect()
+    assert sorted(r["id"] for r in out5) == [1, 2, 3]
 
 
 def test_surrogate_dense_refuses_fact_sized_input(spark):
     # dense = unpartitioned window = single-task global sort: dimension
     # builds only. The guard must refuse anything above dense_max_rows.
+    # It lives in the plan, so it fires when an action runs.
+    from pyspark.errors import SparkRuntimeException
+
     big = spark.range(0, 50).selectExpr("CAST(id AS STRING) AS name")
-    with pytest.raises(ValueError, match="dense_max_rows"):
-        with_surrogate_key(big, "id", ["name"], dense_max_rows=10)
+    keyed = with_surrogate_key(big, "id", ["name"], dense_max_rows=10)
+    with pytest.raises(SparkRuntimeException, match="dense_max_rows"):
+        keyed.collect()
     # sparse has no such bound (fully parallel, non-dense)
     out = with_surrogate_key(big, "id", ["name"], strategy="sparse").collect()
     assert len({r["id"] for r in out}) == 50
