@@ -2,29 +2,26 @@
 near-duplicate *pairs* (minhash/ngram/embedding dedup output) into duplicate
 *groups* with one canonical survivor per group.
 
-Algorithm: iterative minimum-label propagation. Every node starts labeled
-with its own id; each round every node adopts the minimum label among itself
-and its neighbors; converged when no label changes. Rounds needed = graph
-diameter (near-dup graphs are overwhelmingly tiny cliques/chains, so 2-4
-rounds in practice; ``max_iter`` bounds pathological chains).
+Algorithm: alternating large-star/small-star rounds (Kiveris et al. 2014,
+"Connected Components in MapReduce and Beyond"), O(log² n) rounds whatever
+the diameter. Near-dup graphs are overwhelmingly small cliques and chains;
+one round contracts a clique to a star.
 
 Scale design (100 TB corpora → billions of nodes, edges ≪ nodes²):
-  * each round is one shuffle: edges ⋈ labels on node id, then a min-
-    aggregate on the destination id — both hash on the same key, so AQE
-    reuses the exchange layout;
-  * convergence check is a driver-side label-sum comparison (labels are
-    elementwise non-increasing, so an unchanged exact sum is a fixpoint
-    proof) — one scalar aggregate per round, no new-vs-old join;
-  * for adversarial long-chain graphs switch to the large-star/small-star
-    algorithm (Kiveris et al. 2014, "Connected Components in MapReduce"),
-    which converges in O(log^2 n) rounds — same join/agg primitives.
+  * each star step is one shuffle, a grouping of both edge orientations
+    into per-node neighbour sets; there is no label table to join;
+  * a round is one lazily built plan under one eager localCheckpoint;
+  * the stop test is exact and in the plan: an Observation on the
+    round's last grouping counts the nodes with more than one parent, and
+    the checkpoint's own job fills it — no per-round collect and no
+    confirmation round.
 """
 
 from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Guards the session-scoped constraintPropagation toggle below: catalog
@@ -41,8 +38,8 @@ _CP_STATE: dict[int, list] = {}  # id(spark) -> [depth, saved_value]
 
 class _constraint_propagation_off:
     """Refcounted, lock-guarded disable of Catalyst constraint propagation
-    for the enclosed plan constructions (see connected_components for the
-    Spark 4.1 Union/localCheckpoint bug this works around). Any frame
+    for the enclosed plan constructions (see connected_components_star for
+    the Spark 4.1 Union/localCheckpoint bug this works around). Any frame
     RETURNED from the guarded region must be eagerly checkpointed inside
     it — plans analyzed after exit run under the caller's conf again."""
 
@@ -71,181 +68,21 @@ class _constraint_propagation_off:
         return False
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Label every node with the minimum node id of its connected component.
-
-    ``nodes``: one row per node (``id_col``); isolated nodes allowed.
-    ``edges``: undirected pairs (``src_col``, ``dst_col``), any orientation.
-    Returns (id_col, component) — component = min id reachable from the node.
-    """
-    # Catalyst's Union constraint rewrite chokes ("key not found: _id#N")
-    # when an input plan contains a localCheckpoint barrier whose
-    # LogicalRDD carries constraints referencing pre-checkpoint attribute
-    # ids (observed on Spark 4.1 when edges come from minhash_lsh_pairs,
-    # whose gram pipeline checkpoints lazily). Constraint propagation
-    # buys nothing here — every round materializes eagerly and the
-    # per-round plans are two joins deep — so disable it for the loop
-    # and restore the caller's setting after. The toggle is refcounted
-    # under a module lock (concurrent catalog queries share the session
-    # conf), and the loop EAGERLY checkpoints its final union before the
-    # conf is restored, so every Union this workaround exists for is
-    # optimized while the conf is off — the returned frame is a
-    # materialized LogicalRDD, safe to analyze under any conf.
-    with _constraint_propagation_off(nodes.sparkSession):
-        return _connected_components_loop(
-            nodes, edges, id_col, src_col, dst_col, max_iter
-        )
-
-
-def _connected_components_loop(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-) -> DataFrame:
-    # Symmetrize once; edges are reused every round so cache them.
-    sym = (
-        edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b"))
-        .union(edges.select(F.col(dst_col).alias("_a"), F.col(src_col).alias("_b")))
-        .distinct()
-    )
-    sym.cache()
-
-    # Only edge-touched nodes can ever change labels — propagate over that
-    # (typically tiny) subgraph and union the untouched singletons at the
-    # end. On a 100 TB corpus the near-dup graph is orders of magnitude
-    # smaller than the node set; looping over all nodes would make every
-    # round cost O(corpus) instead of O(edges).
-    # localCheckpoint (eager): the returned lazy frame's singleton branch
-    # must read materialized ids, not re-derive them through the (possibly
-    # very expensive) edge-producing plan after the loop finishes.
-    touched = (
-        sym.select(F.col("_a").alias("_id")).distinct().localCheckpoint(eager=True)
-    )
-    labels = touched.select("_id", F.col("_id").alias("_lbl"))
-
-    # Convergence test: labels only ever decrease elementwise (min of self,
-    # neighbors, label-of-label), so the label SUM is strictly decreasing
-    # until the fixpoint — an unchanged sum proves convergence. One scalar
-    # aggregate per round on the just-materialized frame, no new-vs-old
-    # join. decimal(38,0) keeps the sum exact at billions of 64-bit ids.
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("_lbl").cast("decimal(38,0)")).alias("_s")
-        ).collect()[0]["_s"]
-
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
-        # Neighbor labels: for each edge (a, b), b receives a's current label.
-        neighbor = (
-            sym.join(labels, sym["_a"] == labels["_id"])
-            .select(F.col("_b").alias("_id"), F.col("_lbl"))
-        )
-        # localCheckpoint truncates the lineage each round — without it the
-        # logical plan nests one join+agg per iteration and Catalyst
-        # re-optimizes an exponentially growing tree (driver OOM by ~10
-        # rounds). Eager so the convergence check below reads materialized
-        # blocks. (Cluster caveat: localCheckpoint blocks don't survive
-        # executor loss; long jobs on preemptible nodes should use
-        # checkpoint() with a reliable checkpoint dir instead.)
-        propagated = (
-            labels.union(neighbor)
-            .groupBy("_id")
-            .agg(F.min("_lbl").alias("_lbl"))
-        )
-        # Pointer-doubling shortcut: additionally adopt the label OF my
-        # label ("my root's root"), halving path lengths every round —
-        # convergence drops from O(diameter) to O(log diameter) rounds,
-        # which is what makes adversarial chain graphs safe under a small
-        # max_iter. One extra self-join per round on the already-small
-        # label table.
-        p = propagated
-        new_labels = (
-            p.alias("x")
-            .join(
-                p.select(F.col("_id").alias("_lid"), F.col("_lbl").alias("_llbl")),
-                F.col("x._lbl") == F.col("_lid"),
-                "left",
-            )
-            .select(
-                F.col("x._id").alias("_id"),
-                F.least(
-                    F.col("x._lbl"), F.coalesce(F.col("_llbl"), F.col("x._lbl"))
-                ).alias("_lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = _label_sum(new_labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds; "
-            "the graph's effective diameter exceeds 2^max_iter — raise "
-            "max_iter (rounds are O(log diameter) with shortcutting)"
-        )
-
-    singletons = (
-        nodes.select(F.col(id_col).alias("_id"))
-        .join(touched, "_id", "left_anti")
-        .select("_id", F.col("_id").alias("_lbl"))
-    )
-    # Eager checkpoint: (a) optimizes the final Union while the caller's
-    # constraintPropagation workaround is still active (the returned
-    # frame would otherwise be analyzed at action time, after the conf
-    # is restored); (b) the (id, component) output feeds joins in every
-    # consumer, so materializing the two-long-column frame once is the
-    # consumption that would happen anyway.
-    out = (
-        labels.union(singletons)
-        .select(F.col("_id").alias(id_col), F.col("_lbl").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    sym.unpersist()
-    return out
-
-
 def duplicate_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str,
     pair_a: str = "id_a",
     pair_b: str = "id_b",
-    engine: str = "star",
 ) -> DataFrame:
     """Cluster near-duplicate pairs into groups; canonical = min id.
 
     Returns (id_col, cluster_id, is_canonical). Downstream dedup keeps
     ``is_canonical`` rows — one survivor per duplicate group, singletons
-    survive trivially (their cluster is themselves).
-
-    ``engine``: "star" (default — large-star/small-star, O(log² n)
-    rounds edge-locally: no label table to join, no per-round eager
-    label materialization; measured stable 25-28 s at ~sf1 where
-    min-label swung 37-170 s under session block pressure) or
-    "minlabel" (shortcutted label propagation — kept as the alternative
-    for property tests and for graphs where its per-round cost wins).
-    Both produce the identical component = min-reachable-id labeling,
-    so oracles are engine-blind.
+    survive trivially (their cluster is themselves). The components come
+    from :func:`connected_components_star`.
     """
-    if engine == "minlabel":
-        cc = connected_components
-    elif engine == "star":
-        cc = connected_components_star
-    else:
-        raise ValueError(f"unknown clustering engine: {engine!r}")
-    comp = cc(
+    comp = connected_components_star(
         docs.select(id_col), pairs, id_col=id_col, src_col=pair_a, dst_col=pair_b
     )
     return comp.select(
@@ -263,33 +100,84 @@ def connected_components_star(
     dst_col: str = "dst",
     max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
+    """Label every node with the minimum node id of its connected component,
+    by alternating large-star/small-star rounds (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond").
 
-    Same contract as :func:`connected_components`; the DEFAULT engine for
-    :func:`duplicate_clusters` since round 8 — provably O(log² n) rounds
-    regardless of diameter, and every round is edge-local (two groupBy
-    aggregations, no label table to join), so per-round cost is O(|edges|)
-    with no auxiliary state. Measured stable (25-28 s at ~sf1) where
-    min-label propagation swung 37-170 s with session state; min-label is
-    kept as the alternative engine. Property-tested equal to min-label
-    and to sequential union-find.
+    ``nodes``: one row per node (``id_col``); isolated nodes allowed.
+    ``edges``: undirected pairs (``src_col``, ``dst_col``), any orientation;
+    self-loops and duplicates allowed. An edge endpoint missing from
+    ``nodes`` is labelled too, unless its only edges are self-loops.
+    Returns (id_col, component). Property-tested equal to sequential
+    union-find.
 
-    Mechanics per Kiveris: maintain a parent pointer as an edge list
-    (u, parent). large-star: for every node u, connect every STRICTLY
-    LARGER neighbor to min(N(u) ∪ {u}). small-star: connect every
-    neighbor <= u (and u itself) to that same min. Alternating the two
-    contracts every tree toward its minimum; fixpoint = forest of stars.
-    Convergence check mirrors the default engine's exact-sum argument:
-    the (node, parent) pair-sum only decreases.
+    Mechanics per Kiveris: the edge list is a set of parent pointers.
+    With Γ(u) the undirected neighbours of u and m(u) = min(Γ(u) ∪ {u}),
+    large-star links every neighbour v > u to m(u); small-star links every
+    neighbour v <= u, and u itself, to m(u). The rounds take O(log² n)
+    regardless of diameter and stop at a forest of stars rooted at each
+    component's minimum.
+
+    Every step is one shuffle: both orientations of each edge are
+    exploded and grouped into (u, collect_set(v)), so no node-to-minimum
+    self-join is needed. A round is one lazily built plan under one eager
+    ``localCheckpoint``, placed after the grouping of small-star's output
+    that the next large-star reads. That grouping also collects each
+    node's parents, the targets of its own pointers, and an
+    ``Observation`` on it counts the nodes with more than one. The
+    checkpoint's job fills it, so the stop test costs no job. It is exact:
+    small-star gives u the parent m(u), and gives each smaller neighbour
+    of u the same m(u). One parent per node therefore means m is equal
+    across every edge, so it is each component's minimum, and the output
+    is a star forest with root self-loops, which the next round would
+    return unchanged. The loop stops in the first round that reaches the
+    fixpoint, with no confirmation round.
+    A neighbour set is one array row, so a component's root holds the whole
+    component in memory in the closing round.
     """
-    # Same Spark 4.1 Union/localCheckpoint constraint-rewrite hazard as
-    # the min-label engine (the symmetrize/withself unions sit directly
-    # above whatever lazily-checkpointed plan produced the edges).
+    # Catalyst's Union constraint rewrite chokes ("key not found: _id#N")
+    # when an input plan contains a localCheckpoint barrier whose
+    # LogicalRDD carries constraints referencing pre-checkpoint attribute
+    # ids (observed on Spark 4.1 when edges come from minhash_lsh_pairs,
+    # whose gram pipeline checkpoints lazily). Constraint propagation
+    # buys nothing here, so it is off while the rounds and the final
+    # union are built; the union is checkpointed eagerly inside the guard.
     with _constraint_propagation_off(nodes.sparkSession):
         return _connected_components_star_loop(
             nodes, edges, id_col, src_col, dst_col, max_iter
         )
+
+
+def _neighbourhoods(edges: DataFrame, parents: bool = False) -> DataFrame:
+    """(_u, _n): each node's undirected neighbour set, in one shuffle. With
+    ``parents``, also (_p): the targets of the node's own (_u, _v) edges."""
+
+    def orient(a: str, b: str, up: bool):
+        return F.struct(
+            F.col(a).alias("_a"), F.col(b).alias("_b"), F.lit(up).alias("_up")
+        )
+
+    both = F.explode(F.array(orient("_u", "_v", True), orient("_v", "_u", False)))
+    aggs = [F.collect_set("_e._b").alias("_n")]
+    if parents:
+        aggs.append(F.collect_set(F.when(F.col("_e._up"), F.col("_e._b"))).alias("_p"))
+    return (
+        edges.select(both.alias("_e"))
+        .groupBy(F.col("_e._a").alias("_u"))
+        .agg(*aggs)
+    )
+
+
+def _star_step(nbrs: DataFrame, large: bool) -> DataFrame:
+    """(_u, _v) = (v, m(u)) for the neighbours v that the step keeps."""
+    u = F.col("_u")
+    if large:
+        keep = F.filter("_n", lambda v: v > u)
+    else:
+        keep = F.concat(F.filter("_n", lambda v: v < u), F.array(u))
+    return nbrs.select(
+        F.explode(keep).alias("_u"), F.least(u, F.array_min("_n")).alias("_v")
+    )
 
 
 def _connected_components_star_loop(
@@ -300,75 +188,45 @@ def _connected_components_star_loop(
     dst_col: str,
     max_iter: int,
 ) -> DataFrame:
-    # Parent edges start as the symmetrized input; self-loops are the
-    # fixpoint representation of singletons inside the loop.
-    e = (
+    # Round 1 reads the input directly: collect_set symmetrizes and
+    # deduplicates it. Self-loops are the roots' representation inside
+    # the loop.
+    nbrs = _neighbourhoods(
         edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v"))
-        .union(edges.select(F.col(dst_col).alias("_u"), F.col(src_col).alias("_v")))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
-
-    def _star(cur: DataFrame, large: bool) -> DataFrame:
-        # Neighborhoods are UNDIRECTED: rebuild both orientations of the
-        # (directed) stored edge list each round — star outputs are
-        # child→parent pointers, but Γ(u) must see parents' children too.
-        # The neighborhood view of u also includes u itself (self-edge),
-        # so m is min(Γ(u) ∪ {u}) exactly as the paper defines it.
-        sym = cur.union(cur.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
-        withself = sym.union(sym.select(F.col("_u"), F.col("_u")))
-        m = withself.groupBy("_u").agg(F.min("_v").alias("_m"))
-        nbr = withself.join(m, "_u")
-        if large:
-            # (v, m) for v > u: long tails hook onto u's minimum
-            out = nbr.filter(F.col("_v") > F.col("_u")).select(
-                F.col("_v").alias("_u"), F.col("_m").alias("_v")
-            )
-        else:
-            # (v, m) for v <= u, plus (u, m): flatten small neighbors
-            out = nbr.filter(F.col("_v") <= F.col("_u")).select(
-                F.col("_v").alias("_u"), F.col("_m").alias("_v")
-            )
-        return out.distinct()
-
-    # Unlike min-label (where an unchanged label-sum PROVES the fixpoint
-    # by monotonicity), star rounds rearrange edges non-monotonically, so
-    # the stop test is set equality up to hash collision: (count, id-sum,
-    # xxhash64 checksum) of the distinct edge set — one scalar aggregate
-    # per round, no old-vs-new join.
-    def _edge_key(frame: DataFrame):
-        row = frame.agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("_u").cast("decimal(38,0)") + F.col("_v")).alias("_s"),
-            F.sum(F.xxhash64("_u", "_v").cast("decimal(38,0)")).alias("_h"),
-        ).collect()[0]
-        return (row["_n"], row["_s"], row["_h"])
-
-    prev = None
+    open_nodes = None
     for _ in range(max_iter):
-        e = _star(e, large=True).localCheckpoint(eager=True)
-        e = _star(e, large=False).localCheckpoint(eager=True)
-        key = _edge_key(e)
-        if key == prev:
+        small = _star_step(
+            _neighbourhoods(_star_step(nbrs, large=True)), large=False
+        )
+        obs = Observation()
+        # One eager checkpoint per round: it truncates the lineage and its
+        # job fills the observation, so the stop test needs no job.
+        nbrs = (
+            _neighbourhoods(small, parents=True)
+            .observe(obs, F.count_if(F.size("_p") > 1).alias("_open"))
+            .localCheckpoint(eager=True)
+        )
+        open_nodes = obs.get["_open"]
+        if open_nodes == 0:
             break
-        prev = key
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components_star did not converge in {max_iter} rounds; "
+            f"{open_nodes} nodes were not yet stars (had more than one parent) "
+            "after the last round"
         )
 
-    # Fixpoint is a star forest: every node points at its root (roots
-    # appear only on the right, or as self-loops).
-    roots = e.groupBy("_u").agg(F.min("_v").alias("_lbl"))
-    touched = e.select("_u").distinct()
+    # Fixpoint is a star forest: every node's one parent is its root, and
+    # roots are their own parents.
+    roots = nbrs.select("_u", F.array_min("_p").alias("_lbl"))
     singles = (
         nodes.select(F.col(id_col).alias("_u"))
-        .join(touched, "_u", "left_anti")
+        .join(roots.select("_u"), "_u", "left_anti")
         .select("_u", F.col("_u").alias("_lbl"))
     )
-    # Eager for the same two reasons as the min-label engine's final
-    # union: optimize under the disabled-conf guard, and materialize the
-    # two-column labeling every consumer joins against anyway.
+    # Eager: optimize the union under the disabled-conf guard, and
+    # materialize the two-column labeling every consumer joins anyway.
     return (
         roots.union(singles)
         .select(F.col("_u").alias(id_col), F.col("_lbl").alias("component"))
@@ -397,7 +255,7 @@ def pagerank_scaled(
 
     Scale design: each iteration is one hash join edges⋈ranks on the src
     key plus one sum-aggregate on dst — the same shuffle pair as
-    connected_components, partial-aggregated map-side; edges and degrees
+    the star steps, partial-aggregated map-side; edges and degrees
     are computed once and cached. ``scale`` trades precision headroom for
     overflow headroom: int64 holds n_nodes·scale·damping_pct, so 1e9 is
     safe beyond 1e8 nodes. Iterations are a Python loop over lazy plans;

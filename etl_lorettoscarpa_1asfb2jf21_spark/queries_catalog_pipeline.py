@@ -89,7 +89,7 @@ _PAIRS_SQL = """
 )
 def x1_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 clustering: near-dup *pairs* → duplicate *groups* via connected
-    components (iterative min-label propagation, operators/graph.py);
+    components (large-star/small-star rounds, operators/graph.py);
     canonical survivor = min doc_id per component. The DuckDB oracle
     computes the identical transitive closure with a recursive CTE.
 
@@ -2387,14 +2387,11 @@ def tp13_curation_funnel_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-sized shuffle per stage — the fingerprint groupBy
     (exact), the banded bucket self-join (LSH candidates; bucket-bounded,
-    never all-pairs), large-star/small-star CC (engine="star": O(log² n)
-    edge-local rounds with no label table — on this funnel's inflated
-    ~sf1 duplicate graph the min-label engine's per-round label
-    materializations dominated the whole query, see SCALING.md), and the
-    per-source cap window (partitions by source). Quality and token
+    never all-pairs), large-star/small-star CC (O(log² n) edge-local
+    rounds with no label table, one grouping shuffle per star step), and
+    the per-source cap window (partitions by source). Quality and token
     stages are map-side. The DuckDB twin replays every rung including
-    the recursive-CTE closure — the funnel is hash-checked end to end
-    (both CC engines produce the identical min-id labeling).
+    the recursive-CTE closure — the funnel is hash-checked end to end.
     """
     from .functions.text import gopher_quality_filter_expr, word_stats_exprs
     from .operators.dedup import exact_dedup, minhash_lsh_pairs
@@ -2406,9 +2403,7 @@ def tp13_curation_funnel_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         surv, "text", "doc_id", num_hashes=16, bands=4,
         jaccard_threshold=0.5, portable=True,
     )
-    clusters = duplicate_clusters(
-        surv, pairs.select("id_a", "id_b"), "doc_id", engine="star"
-    )
+    clusters = duplicate_clusters(surv, pairs.select("id_a", "id_b"), "doc_id")
     nd = surv.join(
         clusters.filter(F.col("is_canonical")).select("doc_id"), "doc_id"
     )

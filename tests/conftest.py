@@ -27,3 +27,69 @@ def sf_small() -> str:
 @pytest.fixture(scope="session")
 def sf_medium() -> str:
     return SF_MEDIUM
+
+
+@pytest.fixture(scope="session")
+def union_find_components():
+    """Sequential oracle for connected components: ``f(node_ids, edges)`` ->
+    {node: min id of its component}, for every node and every endpoint of
+    a non-self-loop edge."""
+
+    def components(node_ids, edges):
+        parent: dict[int, int] = {}
+
+        def find(x: int) -> int:
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        labelled = set(node_ids) | {x for a, b in edges if a != b for x in (a, b)}
+        comp_min: dict[int, int] = {}
+        for x in sorted(labelled):
+            comp_min.setdefault(find(x), x)
+        return {x: comp_min[find(x)] for x in labelled}
+
+    return components
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(fn)`` runs ``fn`` under a fresh job group. Returns
+    (fn's result, the ids of every job launched while it ran, the ids
+    under its group).
+
+    Job ids are sequential, so a marker job before and after bounds the
+    window. The status tracker is fed asynchronously, in event order:
+    once the closing marker is visible, every earlier job is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker() -> int:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        while not tracker.getJobIdsForGroup(group):
+            time.sleep(0.05)
+        return tracker.getJobIdsForGroup(group)[0]
+
+    def run(fn):
+        group = f"under-test-{uuid.uuid4().hex}"
+        first = marker()
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            last = marker()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, set(range(first + 1, last)), set(tracker.getJobIdsForGroup(group))
+
+    return run

@@ -550,11 +550,11 @@ def test_compaction_shrinks_file_count(spark, tmp_path, sf_small):
 
 
 def test_connected_components_labels_min_id(spark):
-    """Min-label propagation: chain {1-2-3}, pair {10,11}, isolate {99} —
-    every node gets the component's minimum id, even across multi-hop
-    chains (label must traverse, not just look one edge away)."""
+    """Chain {1-2-3}, pair {10,11}, isolate {99}: every node gets the
+    component's minimum id, even across multi-hop chains (the label must
+    traverse, not just look one edge away)."""
     from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
-        connected_components,
+        connected_components_star,
         duplicate_clusters,
     )
 
@@ -562,7 +562,7 @@ def test_connected_components_labels_min_id(spark):
     edges = spark.createDataFrame([(2, 1), (2, 3), (10, 11)], ["src", "dst"])
     got = {
         r["id"]: r["component"]
-        for r in connected_components(nodes, edges).collect()
+        for r in connected_components_star(nodes, edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
 
@@ -576,15 +576,116 @@ def test_connected_components_labels_min_id(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 12-node path graph needs ~diameter rounds; the loop must converge
+    """A 12-node path graph needs several rounds; the loop must converge
     (not stop after one round) and still produce one component."""
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import connected_components
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
+        connected_components_star,
+    )
 
     n = 12
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    got = {r["id"]: r["component"] for r in connected_components(nodes, edges).collect()}
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components_star(nodes, edges).collect()
+    }
     assert got == {i: 0 for i in range(n)}
+
+
+def _path(n: int) -> list[tuple[int, int]]:
+    return [(i, i + 1) for i in range(n - 1)]
+
+
+CC_STOP_SHAPES = {
+    "path2": (range(2), _path(2)),
+    "path3": (range(3), [(2, 0), (0, 1)]),
+    "path60": (range(60), _path(60)),
+    "path200": (range(200), _path(200)),
+    "star_centre_not_min": (range(1, 9), [(5, v) for v in (1, 2, 3, 4, 6, 7, 8)]),
+    "stars_joined_leaf_to_leaf": (
+        range(1, 12),
+        [(5, 6), (5, 7), (5, 8), (8, 1), (1, 9), (1, 10), (1, 11)],
+    ),
+    "self_loops_dup_reversed": (
+        range(1, 9),
+        [(3, 3), (1, 2), (2, 1), (1, 2), (4, 4), (7, 3), (6, 5), (5, 6)],
+    ),
+    "empty": (range(5), []),
+    "endpoint_missing_from_nodes": (
+        range(1, 5),
+        [(1, 100), (100, 101), (200, 200), (2, 3)],
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(CC_STOP_SHAPES))
+def test_connected_components_star_stops_exactly(spark, union_find_components, shape):
+    """The in-round stop test ends the loop only at the fixpoint: on shapes
+    that need several rounds, or whose first large-star step is not yet a
+    star forest, the labels still equal sequential union-find. An endpoint
+    missing from ``nodes`` is labelled; one whose only edge is a self-loop
+    is not."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    node_ids, edges = CC_STOP_SHAPES[shape]
+    nodes = spark.createDataFrame([(i,) for i in node_ids], "id long")
+    edges_df = spark.createDataFrame(edges, "src long, dst long")
+    rows = connected_components_star(nodes, edges_df).collect()
+    got = {r["id"]: r["component"] for r in rows}
+    assert len(rows) == len(got)
+    assert got == union_find_components(node_ids, edges)
+
+
+def test_connected_components_star_has_no_confirmation_round(
+    spark, union_find_components
+):
+    """A graph whose first round already yields the star forest converges
+    with max_iter=1. In the 4-cycle, large-star leaves node 4 with two
+    smaller neighbours, so the stop test must judge the round's output,
+    where every node has one parent, not large-star's."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    edges = [(1, 2), (2, 3), (3, 4), (4, 1), (10, 11), (11, 12), (12, 10)]
+    nodes = spark.createDataFrame([(i,) for i in range(1, 13)], "id long")
+    edges_df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components_star(nodes, edges_df, max_iter=1).collect()
+    }
+    assert got == union_find_components(range(1, 13), edges)
+
+
+@pytest.mark.parametrize(
+    "edges, budget",
+    [
+        ([(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)], 10),
+        (_path(60), 30),
+    ],
+    ids=["two_triangles", "path60"],
+)
+def test_connected_components_star_job_budget(
+    spark, jobs_during, union_find_components, edges, budget
+):
+    """One eager checkpoint per round and a stop test that rides on it: the
+    whole closure, collect included, stays within a fixed job budget, and
+    every job carries the caller's job group."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    ids = sorted({x for e in edges for x in e})
+    nodes = spark.createDataFrame([(i,) for i in ids], "id long")
+    edges_df = spark.createDataFrame(edges, "src long, dst long")
+    rows, launched, grouped = jobs_during(
+        lambda: connected_components_star(nodes, edges_df).collect()
+    )
+    assert {r["id"]: r["component"] for r in rows} == union_find_components(ids, edges)
+    assert launched == grouped
+    assert len(launched) <= budget, len(launched)
 
 
 def test_scd2_merge_tracks_history(spark):
@@ -631,16 +732,18 @@ def test_scd2_merge_tracks_history(spark):
 
 
 def test_connected_components_chain_converges_in_log_rounds(spark):
-    """Pointer-doubling: a 60-node path graph (diameter 59) must converge
-    well inside max_iter=8 (2^8 ≫ 59 after halving each round)."""
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import connected_components
+    """A 60-node path graph (diameter 59) must converge inside max_iter=8:
+    star rounds contract paths in O(log² n) rounds, not O(diameter)."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
+        connected_components_star,
+    )
 
     n = 60
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     got = {
         r["id"]: r["component"]
-        for r in connected_components(nodes, edges, max_iter=8).collect()
+        for r in connected_components_star(nodes, edges, max_iter=8).collect()
     }
     assert got == {i: 0 for i in range(n)}
 

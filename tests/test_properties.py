@@ -149,44 +149,6 @@ def test_upsert_idempotence_property(spark, existing_rows, batch_rows):
     assert again.count() == 0
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 24), st.integers(0, 24)),
-        min_size=0,
-        max_size=40,
-    )
-)
-@SLOW
-def test_connected_components_matches_union_find(spark, edge_list):
-    """Distributed min-label propagation == sequential union-find on any
-    random graph over 25 nodes (self-loops and duplicate edges included)."""
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import connected_components
-
-    n = 25
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edge_list:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {i: min(j for j in range(n) if find(j) == find(i)) for i in range(n)}
-
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    edges = (
-        spark.createDataFrame(edge_list, "src long, dst long")
-        if edge_list
-        else spark.createDataFrame([], "src long, dst long")
-    )
-    got = {r["id"]: r["component"] for r in connected_components(nodes, edges).collect()}
-    assert got == expected
-
-
 snap_keys = st.integers(0, 5)
 snap_vals = st.sampled_from(["a", "b", "c"])
 
@@ -255,99 +217,59 @@ def test_scd2_matches_sequential_reference(spark, snapshots):
         min_size=0,
         max_size=60,
     ),
-    st.integers(min_value=31, max_value=40),
+    st.integers(min_value=16, max_value=40),
 )
-def test_connected_components_matches_union_find(spark, edges, n_nodes):
+def test_connected_components_star_matches_union_find(
+    spark, union_find_components, edges, n_nodes
+):
     """For ANY random graph (self-loops, duplicate/reversed edges, isolated
-    nodes included), distributed min-label + pointer-doubling must produce
-    exactly the component labeling of a sequential union-find."""
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
-        connected_components,
-    )
-
-    parent = list(range(n_nodes))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # canonical label = min node id per component
-    want = {}
-    roots = {}
-    for x in range(n_nodes):
-        r = find(x)
-        roots.setdefault(r, x)  # first (smallest) node seen per root
-        want[x] = min(roots[r], x)
-        roots[r] = want[x]
-    # second pass so every member gets the final min
-    for x in range(n_nodes):
-        want[x] = roots[find(x)]
-
-    nodes_df = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
-    edges_df = spark.createDataFrame(
-        [(a, b) for a, b in edges] or [(0, 0)], "src long, dst long"
-    )
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(nodes_df, edges_df).collect()
-    }
-    assert got == want
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)),
-        min_size=0,
-        max_size=30,
-    ),
-    st.integers(min_value=16, max_value=20),
-)
-def test_connected_components_star_matches_union_find(spark, edges, n_nodes):
-    """The alternating large-star/small-star engine (the adversarial-
-    diameter fallback) must agree with sequential union-find on ANY random
-    graph, exactly like the default min-label engine."""
+    nodes, edge endpoints missing from ``nodes`` included), the large-star/
+    small-star closure must produce exactly the component labeling of a
+    sequential union-find. Missing endpoints are labelled unless their
+    only edges are self-loops."""
     from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
         connected_components_star,
     )
 
-    parent = list(range(n_nodes))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp_min: dict[int, int] = {}
-    for x in range(n_nodes):
-        r = find(x)
-        comp_min[r] = min(comp_min.get(r, x), x)
-    want = {x: comp_min[find(x)] for x in range(n_nodes)}
-
     nodes_df = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
-    edges_df = spark.createDataFrame(
-        [(a, b) for a, b in edges] or [(0, 0)], "src long, dst long"
-    )
+    edges_df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["id"]: r["component"]
         for r in connected_components_star(nodes_df, edges_df).collect()
     }
-    assert got == want
+    assert got == union_find_components(range(n_nodes), edges)
+
+
+@SLOW
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 24), st.integers(0, 24)),
+        min_size=0,
+        max_size=40,
+    )
+)
+def test_connected_components_matches_union_find(
+    spark, union_find_components, edge_list
+):
+    """The dedup entry point ``duplicate_clusters`` (custom id and pair
+    columns) must group any random pair list over 25 docs exactly like
+    sequential union-find: cluster id = min id of the component, and
+    ``is_canonical`` only on that min id."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import (
+        duplicate_clusters,
+    )
+
+    n = 25
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(edge_list, "left_id long, right_id long")
+    got = {
+        r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+        for r in duplicate_clusters(
+            docs, pairs, "doc_id", pair_a="left_id", pair_b="right_id"
+        ).collect()
+    }
+    want = union_find_components(range(n), edge_list)
+    assert got == {x: (c, x == c) for x, c in want.items()}
 
 
 def test_connected_components_star_long_chain(spark):

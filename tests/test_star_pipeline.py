@@ -219,40 +219,7 @@ def test_publish_crash_leaves_readers_on_old_version(spark, staging, tmp_path):
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
 
 
-def _jobs_during(spark, fn):
-    """Run ``fn`` under a fresh job group. Returns (fn's result, the ids
-    of every job launched while it ran, the ids under its group).
-
-    Job ids are sequential, so a marker job before and after bounds the
-    window. The status tracker is fed asynchronously, in event order:
-    once the closing marker is visible, every earlier job is too."""
-    import time
-    import uuid
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def marker() -> int:
-        group = f"marker-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        sc.parallelize([0], 1).count()
-        while not tracker.getJobIdsForGroup(group):
-            time.sleep(0.05)
-        return tracker.getJobIdsForGroup(group)[0]
-
-    group = f"under-test-{uuid.uuid4().hex}"
-    first = marker()
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        last = marker()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, set(range(first + 1, last)), set(tracker.getJobIdsForGroup(group))
-
-
-def test_load_path_job_budget(spark, staging, tmp_path):
+def test_load_path_job_budget(spark, staging, tmp_path, jobs_during):
     """run_etl only builds plans: it launches no Spark job, on a fresh or
     an incremental load. Every job publish_warehouse launches, from its
     pool threads too, carries the caller's job group."""
@@ -263,15 +230,15 @@ def test_load_path_job_budget(spark, staging, tmp_path):
 
     valid, _ = staging
     base = str(tmp_path / "gold_jobs")
-    wh, launched, grouped = _jobs_during(spark, lambda: run_etl(valid))
+    wh, launched, grouped = jobs_during(lambda: run_etl(valid))
     assert launched == grouped == set()
-    _, launched, grouped = _jobs_during(spark, lambda: publish_warehouse(wh, base))
+    _, launched, grouped = jobs_during(lambda: publish_warehouse(wh, base))
     assert grouped and launched == grouped
 
     prev = read_warehouse(spark, base)
-    wh, launched, grouped = _jobs_during(spark, lambda: run_etl(valid, prev))
+    wh, launched, grouped = jobs_during(lambda: run_etl(valid, prev))
     assert launched == grouped == set()
-    _, launched, grouped = _jobs_during(spark, lambda: publish_warehouse(wh, base))
+    _, launched, grouped = jobs_during(lambda: publish_warehouse(wh, base))
     assert grouped and launched == grouped
 
 
