@@ -184,10 +184,10 @@ def cosine_batch_udf():
 
     The sanctioned Python fast path for dense linear algebra — higher-order
     functions (zip_with/aggregate) evaluate interpreted per element, ~100
-    ns/step; numpy does the same dot as a BLAS-backed batch operation. Use
-    when per-pair vector math dominates a stage (large candidate sets,
-    higher dims); the native expressions remain the default so most plans
-    stay entirely JVM-side.
+    ns/step; numpy does the same dot as a BLAS-backed batch operation.
+    No engine plan uses it (the cosine operators fold natively, so their
+    plans stay JVM-side and twin-checkable); bench.py, tools/ab_rounds.py
+    and tools/profile_query.py run it once to warm the Arrow worker.
     """
     import numpy as np
     import pandas
@@ -309,13 +309,13 @@ def nearest_cell_int_batch_udf(centroids, n_centroids: int):
     quantized (fixed-point) index family: scaled-int64 vec -> argmin cell
     by exact squared L2, ties toward the lower cell id.
 
-    Bit-identical to the native ``min(dist * n_centroids + cell)``
-    expression path (operators/similarity.py:quantized_kmeans_cells) and
-    to the DuckDB oracle twins: every operation is int64 arithmetic —
-    ||x||² - 2x·Cᵀ + ||c||² via numpy integer matmul (no float rounding
-    anywhere; magnitudes bounded by dim·(2·scale)²·n_centroids « 2⁶³) and
-    the same tie-break packing. Equality with the expression path is
-    asserted in tests/test_curation.py. The win is the same as
+    Bit-identical to the DuckDB oracle twins' ``min(dist * n_centroids +
+    cell)`` (operators/similarity.py:quantized_kmeans_cells): every
+    operation is int64 arithmetic — ||x||² - 2x·Cᵀ + ||c||² via numpy
+    integer matmul (no float rounding anywhere; magnitudes bounded by
+    dim·(2·scale)²·n_centroids « 2⁶³) and the same tie-break packing.
+    tests/test_ann_twins.py checks it through the catalog queries against
+    their twins. The win is the same as
     nearest_cell_batch_udf: one dense matmul per record batch instead of
     n_centroids interpreted zip_with/aggregate folds per row — at
     sqrt(n)-scaled centroid counts the interpreted path is the scaling
@@ -378,9 +378,9 @@ def pq_codes_int_batch_udf(codebooks, n_codes: int, sub_dim: int):
     oracle-checked pq_topk_quantized path: per subspace s the code is
     argmin over ||x_s - c||² computed as ||x_s||² - 2·x_s·Cₛᵀ + ||c||²
     in pure int64 (numpy integer matmul — no float anywhere), with the
-    same ``d²·n_codes + code`` tie-break packing as the native
-    expression path, so codes — and every downstream ADC/oracle hash —
-    are bit-identical (equality-tested in tests/test_operators.py).
+    same ``d²·n_codes + code`` tie-break packing as the DuckDB twins, so
+    codes — and every downstream ADC/oracle hash — are bit-identical
+    (tests/test_ann_twins.py).
 
     ``codebooks`` is the collected [(sub, code, int_vec)] list
     (n_subspaces·n_codes rows — the corpus is never collected).
@@ -430,9 +430,9 @@ def pq_codes_int_batch_udf(codebooks, n_codes: int, sub_dim: int):
 def int_sqdist_pair_batch_udf():
     """Arrow-batched EXACT-INTEGER pairwise squared L2 between two
     scaled-int64 vector columns: sum((a_i - b_i)²) in pure int64 numpy —
-    bit-identical to the native ``_int_sqdist_expr`` fold (integer
-    addition is order-free), so oracle hashes are unaffected by which
-    path runs (equality-tested in tests/test_operators.py).
+    bit-identical to the twins' SQL fold (integer addition is
+    order-free), so oracle hashes are unaffected by the kernel
+    (tests/test_ann_twins.py).
 
     The IVF candidate-scoring fast path: ranking the probed cells'
     candidates with the interpreted zip_with/aggregate fold costs

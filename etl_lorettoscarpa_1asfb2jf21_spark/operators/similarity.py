@@ -1,20 +1,23 @@
-"""Top-k vector similarity search over array<float> embeddings (X2).
+"""Vector similarity over array<float> embeddings: top-k search, near-dup
+pairs and semantic dedup (X1/X2).
 
-Two paths:
+* brute_force_topk — exact cosine top-k, the recall reference the
+  catalog ranks every index against.
+* lsh_topk / embedding_neardup_pairs — random-hyperplane (SimHash)
+  band buckets, exact re-verify on candidates.
+* ivf_topk / pq_topk / semantic_dedup — float indexes trained
+  driver-side on a bounded sample; corpus assignment and encoding run as
+  Arrow numpy kernels (functions.vectors).
+* The fixed-point family — ivf_topk_quantized, pq_topk_quantized,
+  ivfpq_topk_quantized, bq_topk, ivfbq_topk and the two quantized
+  SemDeDup forms — is integer-exact end to end, so every catalog query
+  over it has a DuckDB twin. Each splits into build_*/search_* halves
+  (build once, serve many; save_ann_index/load_ann_index).
+* mmr_topk — integer-exact diversified top-k.
 
-* brute_force_topk — exact: broadcast the (small) query set against the
-  corpus, cosine per pair via native higher-order functions, per-query top-k
-  with a window rank. Linear in |corpus| × |queries|; the corpus is never
-  shuffled — at 100 TB this is a single map-side pass over the corpus scan
-  plus a k-row-per-query aggregation.
-
-* lsh_topk — approximate: random-hyperplane (SimHash-for-cosine) bucketing.
-  Signature = sign bits of dot(v, hyperplane_j); candidates share a bucket in
-  at least one band; exact cosine re-rank within candidates. Sub-linear
-  candidate generation; recall tunable via (planes, bands).
-
-Embedding near-duplicate detection (cosine > threshold pairs) reuses the
-same bucketing (embedding_neardup_pairs).
+Each operator has one code path. ``lsh_topk`` alone keeps a
+``use_arrow`` switch: the catalog runs both its portable fold (the
+DuckDB-checkable form) and its Arrow signature kernel.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import array_lit, cosine_similarity_expr
+from ..functions.vectors import array_lit
 from .partitioning import spread
 
 # Corpus-derived re-rank shortlist depth. PQ/BQ approximate orderings are
@@ -94,15 +97,12 @@ def brute_force_topk(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k: (q_id, c_id, sim, rank) with rank<=k per query.
 
-    Ties broken by corpus id for determinism (oracle-comparable).
-    ``use_arrow=True`` swaps the per-pair cosine from native higher-order
-    functions to the Arrow-batched numpy kernel (functions.vectors.
-    cosine_batch_udf) — same values, BLAS throughput; the plan gains one
-    ArrowEvalPython node, everything else stays JVM-side.
+    Ties broken by corpus id for determinism (oracle-comparable). The
+    per-pair cosine is the native left-fold dot, so the whole plan stays
+    JVM-side and a SQL twin reproduces every sim bit-exactly.
 
     Norms are computed ONCE PER SIDE before the pair join (each corpus
     norm was re-derived |queries| times inside the per-pair cosine), and
@@ -125,20 +125,13 @@ def brute_force_topk(
     c = spread(corpus.select(F.col(corpus_id), F.col(corpus_vec))).withColumn(
         "_bf_cn", l2_norm_expr(corpus_vec)
     )
-    pairs = c.crossJoin(q)
-    if use_arrow:
-        from ..functions.vectors import cosine_batch_udf
-
-        cos = cosine_batch_udf()
-        sim = pairs.withColumn("sim", cos(F.col(query_vec), F.col(corpus_vec)))
-    else:
-        denom = F.col("_bf_qn") * F.col("_bf_cn")
-        sim = pairs.withColumn(
-            "sim",
-            F.when(denom > 0, dot_expr(query_vec, corpus_vec) / denom).otherwise(
-                F.lit(0.0)
-            ),
-        )
+    denom = F.col("_bf_qn") * F.col("_bf_cn")
+    sim = c.crossJoin(q).withColumn(
+        "sim",
+        F.when(denom > 0, dot_expr(query_vec, corpus_vec) / denom).otherwise(
+            F.lit(0.0)
+        ),
+    )
     # two-phase per-query top-k: a plain per-query window would sort the
     # ENTIRE corpus's scores in one task per query (see per_key_topn)
     return per_key_topn(
@@ -455,16 +448,14 @@ def embedding_neardup_pairs(
     planes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    use_arrow: bool = True,
     quantized_verify: bool = False,
     checkpoint: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, sim) pairs with cosine >= threshold, LSH-blocked.
 
-    ``use_arrow=False`` is the PORTABLE form: native left-fold dots for
-    both the signature bits and the verify, reproducible bit-exactly by a
-    SQL engine folding the same literal hyperplanes (oracle-checkable).
-    The Arrow kernels remain the production default for throughput.
+    PORTABLE form: native left-fold dots for both the signature bits and
+    the verify, reproducible bit-exactly by a SQL engine folding the same
+    literal hyperplanes (oracle-checkable: x1_embedding_neardup's twin).
 
     ``quantized_verify=True`` swaps the verify dot (only) to the
     FIXED-POINT Arrow kernel (vectors.qdot_unit_batch_udf): normalized
@@ -475,7 +466,7 @@ def embedding_neardup_pairs(
     BOTH-fast-AND-oracle-checkable verify: `sim` becomes the quantized
     cosine (within 2^-20·dim of the float value — ~6e-5 at dim 64, far
     inside any near-dup threshold's noise floor). Signature bits stay on
-    whichever path ``use_arrow`` selects.
+    the portable fold.
     """
     from .dedup import bucket_pairs
 
@@ -502,7 +493,7 @@ def embedding_neardup_pairs(
     # 10^9-row scale. Candidate ids and the fold dot are unchanged, so
     # output — and the DuckDB oracle, which uses this exact
     # pairs-then-join shape — is bit-identical.
-    b = _explode_band_buckets(norm, "_v", hps, bands, use_arrow=use_arrow).select(
+    b = _explode_band_buckets(norm, "_v", hps, bands, use_arrow=False).select(
         F.col("_pid").alias("_id"),
         F.col("_band").alias("band"),
         F.col("_bucket").alias("bucket"),
@@ -539,7 +530,7 @@ def embedding_neardup_pairs(
             "_v",
             hps,
             bands,
-            use_arrow=use_arrow,
+            use_arrow=False,
         ).select(
             F.col("_pid").alias("_id"),
             F.col("_q"),
@@ -555,22 +546,11 @@ def embedding_neardup_pairs(
     cand = bucket_pairs(b, "_id", ["band", "bucket"], strategy="selfjoin")
     va = norm.select(F.col("_pid").alias("id_a"), F.col("_v").alias("_va"))
     vb = norm.select(F.col("_pid").alias("id_b"), F.col("_v").alias("_vb"))
-    # Verify with the Arrow batch kernel by default, not dot_expr: at low
-    # thresholds the candidate set is millions of pairs and the
-    # higher-order-function dot evaluates interpreted per element (~100ns
-    # x 64 dims x pairs); one einsum per record batch is ~10x. (Vectors
-    # are unit-normalized, so cosine == dot; the kernel's norm recompute
-    # is a no-op pass.) The portable path folds the same dot natively.
-    if use_arrow:
-        from ..functions.vectors import cosine_batch_udf
-
-        sim_col = cosine_batch_udf()(F.col("_va"), F.col("_vb"))
-    else:
-        sim_col = dot_expr(F.col("_va"), F.col("_vb"))
+    # vectors are unit-normalized, so the verify dot IS the cosine
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("sim", sim_col)
+        .withColumn("sim", dot_expr(F.col("_va"), F.col("_vb")))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -662,15 +642,15 @@ def ivf_topk(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index.
 
     Train: k-means over a bounded corpus sample (driver-side numpy Lloyd —
     the sample is O(n_centroids), never the corpus) learns ``n_centroids``
     coarse centroids. Index: each corpus vector is assigned to its
-    nearest centroid — one broadcast join + per-partition argmin, a single
-    linear pass. Search: each query probes its ``nprobe`` nearest centroid
+    nearest centroid by the Arrow matmul kernel
+    (functions.vectors.nearest_cell_batch_udf) — a single map-only pass.
+    Search: each query probes its ``nprobe`` nearest centroid
     cells only, so the exact-cosine re-rank touches ~nprobe/n_centroids of
     the corpus instead of all of it.
 
@@ -686,8 +666,9 @@ def ivf_topk(
     def nearest_cells(vec_c: str, probes: int):
         """Array of the ``probes`` nearest centroid cell ids — pure per-row
         expression (centroids are unit-vector literals, the row vector is
-        pre-normalized, so each cell score is a single dot product), making
-        corpus assignment a map-only pass with NO shuffle of the corpus."""
+        pre-normalized, so each cell score is a single dot product). The
+        query side needs the sorted cell ARRAY for nprobe > 1, and the
+        query set is tiny."""
         entries = F.array(
             *[
                 F.struct(
@@ -713,22 +694,13 @@ def ivf_topk(
     )
     qn = queries.select(F.col(query_id), normalize_expr(query_vec).alias(query_vec))
 
-    if use_arrow:
-        # corpus assignment via the Arrow matmul kernel (same argmax +
-        # tie-break as the native comparator, equality-tested); the query
-        # side stays native — nprobe>1 needs the sorted cell ARRAY, and
-        # the query set is tiny
-        from ..functions.vectors import nearest_cell_batch_udf
+    # corpus assignment: argmax dot, ties toward the lower cell — the same
+    # order as the query side's comparator
+    from ..functions.vectors import nearest_cell_batch_udf
 
-        indexed = cn.withColumn(
-            "cell", nearest_cell_batch_udf(centroids)(F.col(corpus_vec))
-        )
-    else:
-        indexed = cn.select(
-            F.col(corpus_id),
-            F.col(corpus_vec),
-            F.explode(nearest_cells(corpus_vec, 1)).alias("cell"),
-        )
+    indexed = cn.withColumn(
+        "cell", nearest_cell_batch_udf(centroids)(F.col(corpus_vec))
+    )
     probed = qn.select(
         F.col(query_id),
         F.col(query_vec),
@@ -754,7 +726,6 @@ def pq_topk(
     n_subspaces: int = 8,
     n_codes: int = 16,
     rerank: int = 5,
-    use_arrow: bool = False,
     seed: int = 42,
     query_id: str = "q_id",
     query_vec: str = "q_vec",
@@ -772,14 +743,11 @@ def pq_topk(
 
     Train: per-subspace k-means on a bounded sample (driver numpy, flat
     cost in corpus size — same policy as ivf_topk). Encode: map-only, the
-    corpus is never shuffled — either fully native per-subspace
-    argmin-over-literals expressions (``use_arrow=False``), or one numpy
-    argmin kernel per record batch (functions.vectors.pq_codes_batch_udf,
-    equality-tested). Re-measured at sf0.1: the Arrow kernel is >2× the
-    native path end-to-end — n_subspaces·n_codes interpreted aggregate
-    expressions per row don't amortize — so the catalog queries pass
-    ``use_arrow=True``; the native path remains the dependency-free
-    fallback and the equality reference. Search: each query's per-subspace
+    corpus is never shuffled — one numpy argmin kernel per record batch
+    (functions.vectors.pq_codes_batch_udf; ties toward the lower code).
+    Measured at sf0.1 it is >2× the n_subspaces·n_codes interpreted
+    argmin-over-literals expressions per row it replaced. Search: each
+    query's per-subspace
     ADC lookup table is computed NATIVELY from its vector (codebooks ride
     the plan as literals; the LUT frame is one map-side projection over
     the query batch — queries are NEVER collected, so plan size and
@@ -832,47 +800,14 @@ def pq_topk(
                     C[j] = members.mean(axis=0)
         codebooks.append(C)
 
-    def subspace_code(vec_c: str, s: int):
-        """argmin-over-codes for subspace s — native expressions only."""
-        entries = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.slice(F.col(vec_c), s * sub_dim + 1, sub_dim),
-                            array_lit(list(c)),
-                            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ).alias("d2"),
-                    F.lit(j).alias("code"),
-                )
-                for j, c in enumerate(codebooks[s])
-            ]
-        )
-        best = F.array_sort(
-            entries,
-            lambda a, b: F.when(a["d2"] < b["d2"], -1)
-            .when(a["d2"] > b["d2"], 1)
-            .otherwise(a["code"] - b["code"]),
-        )
-        return F.element_at(best, 1)["code"]
+    from ..functions.vectors import pq_codes_batch_udf
 
     cn = spread(corpus.select(F.col(corpus_id), normalize_expr(corpus_vec).alias("_v")))
-    if use_arrow:
-        from ..functions.vectors import pq_codes_batch_udf
-
-        codes = pq_codes_batch_udf(codebooks)(F.col("_v"))
-        encoded = cn.select(F.col(corpus_id), codes.alias("_codes")).select(
-            F.col(corpus_id),
-            *[F.col("_codes")[s].alias(f"_c{s}") for s in range(n_subspaces)],
-        )
-    else:
-        encoded = cn.select(
-            F.col(corpus_id),
-            *[subspace_code("_v", s).alias(f"_c{s}") for s in range(n_subspaces)],
-        )
+    codes = pq_codes_batch_udf(codebooks)(F.col("_v"))
+    encoded = cn.select(F.col(corpus_id), codes.alias("_codes")).select(
+        F.col(corpus_id),
+        *[F.col("_codes")[s].alias(f"_c{s}") for s in range(n_subspaces)],
+    )
 
     # Per-query LUT computed NATIVELY from the query vector — one flat
     # array (n_subspaces·n_codes sqdist folds, built as a single F.expr:
@@ -948,7 +883,6 @@ def semantic_dedup(
     threshold: float = 0.3,
     n_centroids: int = 16,
     seed: int = 42,
-    use_arrow: bool = True,
     checkpoint: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -965,7 +899,7 @@ def semantic_dedup(
     Scale design (the whole point of SemDeDup vs all-pairs): the O(n²)
     cosine comparison is confined to cells of ~n/n_centroids vectors —
     candidate generation is LINEAR in the corpus (one map-only
-    assignment pass with centroid literals folded in, exactly like
+    assignment pass through the Arrow matmul kernel, exactly like
     ivf_topk's index step), and the within-cell self-join is a hash
     join on cell id. Cross-cell duplicates are missed BY DESIGN
     (quantifiable: the caller can measure recall on a sample, as
@@ -973,40 +907,16 @@ def semantic_dedup(
     cells stay bounded (~10⁴-10⁵ rows); skewed cells are AQE skew-join
     territory.
     """
-    from ..functions.vectors import array_lit, dot_expr, normalize_expr
+    from ..functions.vectors import dot_expr, nearest_cell_batch_udf, normalize_expr
 
     centroids = train_unit_centroids(corpus, vec_col, n_centroids, seed=seed)
 
-    def nearest_cell(vec_c: str):
-        entries = F.array(
-            *[
-                F.struct(
-                    dot_expr(vec_c, array_lit(c)).alias("sim"),
-                    F.lit(i).alias("cell"),
-                )
-                for i, c in centroids
-            ]
-        )
-        ordered = F.array_sort(
-            entries,
-            lambda a, b: F.when(a["sim"] > b["sim"], -1)
-            .when(a["sim"] < b["sim"], 1)
-            .otherwise(a["cell"] - b["cell"]),
-        )
-        return ordered[0]["cell"]
-
-    # normalize below the spread() exchange so the n_centroids cell scores
-    # and the pair dot products all reuse one normalized copy per row
+    # normalize below the spread() exchange so the cell scores and the
+    # pair dot products all reuse one normalized copy per row; assignment
+    # is one (n, dim) @ (dim, cells) matmul per Arrow batch — measured 2x+
+    # over n_centroids interpreted higher-order dots per row
     cn = spread(corpus.select(F.col(id_col), normalize_expr(vec_col).alias("_v")))
-    if use_arrow:
-        # one (n, dim) @ (dim, cells) matmul per Arrow batch — measured 2x+
-        # over n_centroids interpreted higher-order dots per row (same
-        # pattern as the LSH signature kernel); assignment stays map-only
-        from ..functions.vectors import nearest_cell_batch_udf
-
-        cn = cn.withColumn("cell", nearest_cell_batch_udf(centroids)(F.col("_v")))
-    else:
-        cn = cn.withColumn("cell", nearest_cell("_v"))
+    cn = cn.withColumn("cell", nearest_cell_batch_udf(centroids)(F.col("_v")))
     # Lazy localCheckpoint: the assignment feeds both pair-join sides, and
     # the barrier computes it once AND truncates the lineage so Catalyst
     # doesn't re-optimize the kernel subtree per branch (a cache() variant
@@ -1056,178 +966,41 @@ def _int_sqdist_expr(a: str, b: str):
     )
 
 
-def _kmeans_unroll_max() -> int:
-    """Row-count ceiling for the all-JVM unrolled Lloyd plan (below).
-
-    The unrolled plan wins where the per-iteration DRIVER round-trip
-    (fresh kernel plan + Catalyst pass + collect, measured ~0.45 s warm
-    each, round-12 profiling) dominates; the kernel chain wins where the
-    per-ROW assignment cost dominates, because its numpy matmul is far
-    cheaper than the interpreted zip_with/aggregate argmin the unrolled
-    expressions pay (round-10: the interpreted fold was the measured
-    cliff at 200k x 128-d). **Default 0 = OFF**: measured at sf0.1
-    (2000x64-d PQ build, n_iter=3, warm, same window) the kernel chain
-    runs 1.8-2.0 s total vs the unrolled plan's 4.5-5.2 s — and that is
-    AFTER fixing three real costs in the unrolled form (SQL-string
-    expressions instead of ~150 Py4J lambda builds per build,
-    single-reference linear plan instead of per-iteration tree doubling,
-    dim-unrolled arithmetic + spread instead of single-task zip_with
-    folds). Root causes that remain: each AQE exchange stage costs about
-    as much as a whole job round-trip on this host, the unrolled chain
-    needs >=2 aggregate exchanges + 1 broadcast per iteration vs the
-    kernel chain's one shuffle+collect, and lazy localCheckpoint under
-    AQE executes the chain's intermediate stages eagerly anyway. Kept
-    env-gated for hardware where driver latency dominates stage floors
-    (e.g. a remote driver); the equality test (tests/test_operators.py)
-    pins bit-identity so flipping the gate can never change values.
-    When 0, builders skip the gate count job entirely — the default
-    path is byte-for-byte the round-12 plan."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_KMEANS_UNROLL_MAX", "0"))
+def _div0(s: int, n: int) -> int:
+    """SQL BIGINT ``div``: integer division truncating toward zero."""
+    return -((-s) // n) if s < 0 else s // n
 
 
-def _unrolled_pq_lloyd(
-    frame: DataFrame,
-    vec_col: str,
-    n_sub: int,
-    sub_dim: int,
-    n_cells: int,
-    n_iter: int,
-    init_cents: DataFrame,
-):
-    """ALL-JVM multi-iteration fixed-point Lloyd (round-12 verdict #1:
-    'collapse the Lloyd iteration chain'): the whole n_iter recurrence is
-    ONE Catalyst plan — each iteration's codebook is a one-row broadcast
-    aggregate consumed by the next iteration's assignment — so a build
-    pays ZERO per-iteration driver round-trips (no kernel re-pickle, no
-    re-planning, no collect) where the kernel chain pays one ~0.45 s
-    job+collect floor per iteration. Spark's exchange reuse collapses the
-    diamond consumers of each iteration's broadcast (verified in the
-    committed plans: one corpus-pass aggregate per iteration).
+def _sums_sql(vec_col: str, width: int) -> str:
+    """Element-wise ``sum`` aggregate over an int array column, as ONE
+    SQL string (the per-position Column form was ~300 Py4J round-trips of
+    plan-build latency)."""
+    return "array(" + ",".join(f"sum({vec_col}[{i}])" for i in range(width)) + ")"
 
-    Bit-identical to the kernel-chain recurrence (equality-tested in
-    tests/test_operators.py): the per-subspace assignment is the same
-    ``min(d²·n_cells + cell) % n_cells`` int64 packing the kernels
-    compute, the update is the same order-free integer sums with
-    truncating ``div``, and empty (sub, cell) pairs keep their previous
-    centroid via the coalesce in the merge transform.
 
-    ``init_cents``: (_sub INT, _cell INT, _cv ARRAY<BIGINT>) — in-plan.
-    Returns (cents, attach) where ``cents`` is the final codebook in the
-    same schema and ``attach(df)`` adds the one-row broadcast codebook
-    column ``_cb`` plus the final per-row code array ``_codes``
-    (ARRAY<BIGINT>, matching pq_codes_int_batch_udf's output type).
-
-    Every bulky expression is ONE ``F.expr`` SQL string: the nested
-    lambda form of the same tree (filter/transform/aggregate Columns)
-    costs hundreds of Py4J round-trips PER ITERATION to construct —
-    measured ~5 s of pure plan-build latency per PQ build, swamping the
-    chain it replaces (the same lesson as the round-11 array-of-sums
-    F.expr in the kernel loop).
-    """
-    sums_sql = "array(" + ",".join(f"sum(_sv[{i}])" for i in range(sub_dim)) + ")"
-
-    def one_code_sql(s: int) -> str:
-        # fully dim-unrolled squared distance (arr[i] is 0-based): a
-        # zip_with + aggregate fold pays per-element lambda dispatch and
-        # an array allocation per (row, cell) — measured ~2x the whole
-        # chain's execution at 2000x64-d
-        sqd = " + ".join(
-            f"({vec_col}[{s * sub_dim + i}] - c._cv[{i}]) * "
-            f"({vec_col}[{s * sub_dim + i}] - c._cv[{i}])"
-            for i in range(sub_dim)
-        )
-        packed = (
-            f"transform(filter(_cb, c -> c._sub = {s}), "
-            f"c -> ({sqd}) * CAST({n_cells} AS BIGINT) "
-            "+ CAST(c._cell AS BIGINT))"
-        )
-        return f"CAST(array_min({packed}) % {n_cells} AS BIGINT)"
-
-    codes_sql = "array(" + ",".join(one_code_sql(s) for s in range(n_sub)) + ")"
-    slices_sql = "array(" + ",".join(
-        f"slice({vec_col}, {s * sub_dim + 1}, {sub_dim})" for s in range(n_sub)
-    ) + ")"
-    merge_sql = (
-        "transform(_cb, p -> named_struct("
-        "'_sub', p._sub, '_cell', p._cell, "
-        "'_cv', coalesce(get(filter(_nb, "
-        "x -> x._sub = p._sub AND x._cell = p._cell), 0)._cv, p._cv)))"
+def _int_centroid_rows(cents: DataFrame) -> list[tuple[int, list[int]]]:
+    """Collect an integer centroid table (_cell, _cvec) as sorted
+    ``(cell, int_vec)`` rows — n_centroids rows, never the corpus."""
+    return sorted(
+        (int(r["_cell"]), [int(x) for x in r["_cvec"]]) for r in cents.collect()
     )
 
-    # the small-regime frame is typically a one-file scan (single
-    # partition): spread it so the interpreted assignment runs wide
-    # instead of in one task (§2.5 input skew; values order-free)
-    frame = spread(frame)
 
-    cb = init_cents.agg(
-        F.array_sort(F.collect_list(F.struct("_sub", "_cell", "_cv"))).alias("_cb")
-    )
-    for _ in range(n_iter):
-        # ONE reference to the previous codebook per iteration: the merge
-        # reads _cb off the same crossJoin row the assignment uses (the
-        # column is constant, so first() per group is deterministic and
-        # map-side partial aggregation ships it once per group, not per
-        # row). A second reference (cb.crossJoin(newb)) would DOUBLE the
-        # logical plan per iteration — measured ~4 s of eager analysis
-        # per build at n_iter=3.
-        pairs = (
-            frame.crossJoin(F.broadcast(cb))
-            .select(
-                "_cb",
-                F.posexplode(
-                    F.arrays_zip(
-                        F.expr(codes_sql).alias("_c"),
-                        F.expr(slices_sql).alias("_v"),
-                    )
-                ).alias("_sub", "_z"),
-            )
-            .select(
-                "_cb",
-                "_sub",
-                F.col("_z._c").cast("int").alias("_cell"),
-                F.col("_z._v").alias("_sv"),
-            )
+def _assign_int_cells(
+    df: DataFrame, vec_col: str, cents_rows: list, n_centroids: int, keep: list
+) -> DataFrame:
+    """``keep`` plus ``_cell``, each row's exact-integer nearest centroid
+    (functions.vectors.nearest_cell_int_batch_udf: int64 matmul, ties
+    toward the lower cell). With no centroids (an empty training corpus)
+    no row has a cell, so the result is empty."""
+    from ..functions.vectors import nearest_cell_int_batch_udf
+
+    if not cents_rows:
+        return df.select(*keep, F.lit(None).cast("long").alias("_cell")).filter(
+            F.lit(False)
         )
-        upd = (
-            pairs.groupBy("_sub", "_cell")
-            .agg(
-                F.expr(sums_sql).alias("_sv2"),
-                F.count(F.lit(1)).alias("_n"),
-                F.first("_cb").alias("_cb"),
-            )
-            .select(
-                F.struct(
-                    F.col("_sub"),
-                    F.col("_cell"),
-                    F.expr("transform(_sv2, s -> s div _n)").alias("_cv"),
-                ).alias("_u"),
-                "_cb",
-            )
-        )
-        cb = upd.agg(
-            F.collect_list("_u").alias("_nb"), F.first("_cb").alias("_cb")
-        ).select(F.expr(merge_sql).alias("_cb"))
-
-    # lazy checkpoint of the FINAL one-row codebook: the artifact feeds
-    # several downstream actions (store/codes projections, searches,
-    # save_ann_index) — without the barrier each separate ACTION would
-    # re-execute the whole n_iter chain (exchange reuse only spans one
-    # query); with it the chain runs exactly once
-    cb = cb.localCheckpoint(eager=False)
-    cents = cb.select(F.explode("_cb").alias("_e")).select(
-        F.col("_e._sub").alias("_sub"),
-        F.col("_e._cell").alias("_cell"),
-        F.col("_e._cv").alias("_cv"),
-    )
-
-    def attach(df: DataFrame) -> DataFrame:
-        return df.crossJoin(F.broadcast(cb)).withColumn(
-            "_codes", F.expr(codes_sql)
-        )
-
-    return cents, attach
+    kern = nearest_cell_int_batch_udf(cents_rows, n_centroids)
+    return df.select(*keep, kern(F.col(vec_col)).alias("_cell"))
 
 
 def quantized_kmeans_cells(
@@ -1237,10 +1010,7 @@ def quantized_kmeans_cells(
     n_centroids: int = 16,
     n_iter: int = 3,
     scale: int = 10**6,
-    use_arrow: bool = True,
     with_vec: bool = False,
-    n_rows: int | None = None,
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """DISTRIBUTED fixed-point Lloyd: returns (centroids(_cell,_cvec),
     assignment(corpus_id,_cell)) after ``n_iter`` exact-integer rounds.
@@ -1260,29 +1030,14 @@ def quantized_kmeans_cells(
     truncating integer mean per dimension; empty cells keep their
     previous centroid. Every step is int64 arithmetic, so the trained
     index is bit-identical on any engine (see ivf_topk_quantized /
-    semantic_dedup_quantized for the oracle twins). Per iteration: one
-    assignment pass + one posexplode hash-aggregate — the corpus is never
-    collected (only the n_centroids-row centroid table moves to the
-    driver/executors, whether as broadcast literals or kernel constants).
-
-    ``n_rows``/``dim`` are optional caller hints for the env-gated
-    unroll experiment below (skip its bounded gate aggregate when the
-    caller already knows them). The experiment — the whole recurrence as
-    ONE unrolled Catalyst tree (see _unrolled_pq_lloyd) — is OFF by
-    default after measurement (see _kmeans_unroll_max); values are
-    bit-identical on both sides (tests/test_operators.py), so flipping
-    it can never change a result.
-
-    ``use_arrow=True`` (default) runs each assignment pass through the
-    EXACT-INTEGER Arrow kernel (functions.vectors.
-    nearest_cell_int_batch_udf): pure int64 matmul arithmetic, so the
-    result — and every oracle hash — is bit-identical to the native
-    zip_with/aggregate expression path (equality-tested); the kernel
-    replaces n_centroids interpreted 64-element folds per row with one
-    dense matmul per record batch, which is what keeps assignment from
-    dominating once n_centroids scales ~sqrt(corpus) (SemDeDup). The
-    expression path remains the dependency-light fallback and equality
-    reference.
+    semantic_dedup_quantized for the oracle twins). Each assignment pass
+    runs the EXACT-INTEGER Arrow kernel (functions.vectors.
+    nearest_cell_int_batch_udf): one dense int64 matmul per record batch
+    instead of n_centroids interpreted 64-element folds per row, which is
+    what keeps assignment from dominating once n_centroids scales
+    ~sqrt(corpus) (SemDeDup). The corpus is never collected — only the
+    n_centroids-row centroid table moves to the driver. An empty corpus
+    gives no centroids and an empty assignment.
     """
     corpq = corpus.select(
         F.col(corpus_id), quantize_expr(corpus_vec, scale).alias("_qv")
@@ -1306,143 +1061,51 @@ def quantized_kmeans_cells(
         )
     )
 
-    def assign(cc: DataFrame) -> DataFrame:
-        if use_arrow:
-            from ..functions.vectors import nearest_cell_int_batch_udf
+    # The CENTROIDS STAY ON THE DRIVER between iterations (they are the
+    # kernel constant anyway — a bounded n_centroids×dim int artifact,
+    # same rule as PQ codebooks). Per iteration: ONE job — assignment
+    # kernel mapped over corpq feeding a hash agg of per-cell
+    # element-wise sums — then the truncating integer means update
+    # driver-side. No per-iteration join + localCheckpoint lineage: its
+    # PHYSICAL PLANNING alone cost ~0.9 s per iteration. No posexplode
+    # above the kernel column either: Spark plans Python eval ABOVE
+    # Generate, so exploding next to the kernel output would re-evaluate
+    # the kernel on dim× the rows (measured 2.7 s → 90 s per iteration at
+    # 200k×128-d). Integer sums are order-free and `s div n` is replayed
+    # exactly in Python (_div0), so centroids — and every oracle twin —
+    # are bit-identical to an in-engine update.
+    from ..functions.vectors import nearest_cell_int_batch_udf
 
-            cents_rows = sorted(
-                (int(r["_cell"]), [int(x) for x in r["_cvec"]])
-                for r in cc.collect()  # n_centroids rows, never the corpus
-            )
-            kern = nearest_cell_int_batch_udf(cents_rows, n_centroids)
-            return corpq.select(
-                F.col(corpus_id), kern(F.col("_qv")).alias("_cell")
-            )
-        d = corpq.crossJoin(F.broadcast(cc))
-        packed = _int_sqdist_expr("_qv", "_cvec") * n_centroids + F.col("_cell")
-        return (
-            d.select(F.col(corpus_id), packed.alias("_p"))
-            .groupBy(corpus_id)
-            .agg(F.min("_p").alias("_mp"))
-            .select(F.col(corpus_id), (F.col("_mp") % n_centroids).alias("_cell"))
-        )
-
-    if use_arrow:
-        # Env-gated experiment (measured OFF by default — see
-        # _kmeans_unroll_max): corpora under the cap take the UNROLLED
-        # all-JVM plan; the gate aggregate (count + dim) only runs when
-        # the experiment is enabled, so the default path is job-for-job
-        # the round-12 kernel chain. Values are bit-identical on both
-        # sides of the gate (equality-tested).
-        um = _kmeans_unroll_max()
-        if um > 0 and (n_rows is None or dim is None):
-            row0 = corpq.agg(
-                F.count(F.lit(1)).alias("n"), F.min(F.size("_qv")).alias("d")
-            ).first()
-            n_g = int(row0["n"])
-            dim_g = int(row0["d"]) if row0["d"] is not None else None
-        else:
-            n_g, dim_g = n_rows, dim
-        if um > 0 and n_g and dim_g and n_g <= um:
-            init = cents.select(
-                F.lit(0).cast("int").alias("_sub"),
-                F.col("_cell").cast("int").alias("_cell"),
-                F.col("_cvec").alias("_cv"),
-            )
-            fcents, attach = _unrolled_pq_lloyd(
-                corpq, "_qv", 1, dim_g, n_centroids, n_iter, init
-            )
-            out_c = fcents.select("_cell", F.col("_cv").alias("_cvec"))
-            keep = [F.col(corpus_id)] + ([F.col("_qv")] if with_vec else [])
-            assigned = attach(corpq).select(
-                *keep, F.get("_codes", 0).alias("_cell")
-            )
-            return out_c, assigned
-        # The kernel path keeps the CENTROIDS ON THE DRIVER between
-        # iterations (they are collected for the kernel constant anyway —
-        # a bounded n_centroids×dim int artifact, same rule as PQ
-        # codebooks). Per iteration: ONE job — assignment kernel mapped
-        # over corpq feeding a hash agg of per-cell element-wise sums
-        # (array-of-sums built as a single F.expr; the per-dim Column
-        # form was ~300 Py4J round-trips of plan-build latency) — then
-        # the truncating integer means update driver-side. This replaces
-        # the old per-iteration join + localCheckpoint lineage, whose
-        # PHYSICAL PLANNING alone cost ~0.9 s per iteration (the x2
-        # action floor was mostly driver latency, round-10 verdict #2).
-        # No posexplode above the kernel column: Spark plans Python eval
-        # ABOVE Generate, so exploding next to the kernel output would
-        # re-evaluate the kernel on dim× the rows (measured 2.7 s → 90 s
-        # per iteration at 200k×128-d). Integer sums are order-free and
-        # `s div n` (truncate toward zero) is replayed exactly in Python,
-        # so centroids — and every oracle twin — are bit-identical to the
-        # old distributed-update form; empty cells keep their previous
-        # centroid, exactly as before.
-        from ..functions.vectors import nearest_cell_int_batch_udf
-
-        def _div0(s: int, n: int) -> int:  # BIGINT div: truncate toward 0
-            return -((-s) // n) if s < 0 else s // n
-
-        cents_rows = sorted(
-            (int(r["_cell"]), [int(x) for x in r["_cvec"]])
-            for r in cents.collect()
-        )
-        dim_i = len(cents_rows[0][1])
-        sums = "array(" + ",".join(f"sum(_qv[{i}])" for i in range(dim_i)) + ")"
-        for _ in range(n_iter):
-            kern = nearest_cell_int_batch_udf(cents_rows, n_centroids)
-            got = {
-                int(r["_cell"]): (
-                    [int(x) for x in r["_sv"]],
-                    int(r["_n"]),
-                )
-                for r in corpq.select(kern(F.col("_qv")).alias("_cell"), "_qv")
-                .groupBy("_cell")
-                .agg(F.expr(sums).alias("_sv"), F.count(F.lit(1)).alias("_n"))
-                .collect()
-            }
-            cents_rows = [
-                (
-                    cell,
-                    [_div0(s, got[cell][1]) for s in got[cell][0]]
-                    if cell in got
-                    else prev,
-                )
-                for cell, prev in cents_rows
-            ]
-        cents = corpus.sparkSession.createDataFrame(
-            list(cents_rows), "_cell INT, _cvec ARRAY<BIGINT>"
-        )
+    cents_rows = _int_centroid_rows(cents)
+    for _ in range(n_iter if cents_rows else 0):  # empty corpus: no training
         kern = nearest_cell_int_batch_udf(cents_rows, n_centroids)
-        keep = [F.col(corpus_id)] + ([F.col("_qv")] if with_vec else [])
-        return cents, corpq.select(*keep, kern(F.col("_qv")).alias("_cell"))
-
-    for _ in range(n_iter):
-        assigned = assign(cents)
-        pos = assigned.join(corpq, corpus_id).select(
-            "_cell", F.posexplode("_qv").alias("_k", "_val")
-        )
-        means = (
-            pos.groupBy("_cell", "_k")
-            .agg(F.sum("_val").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .select("_cell", "_k", F.expr("_s div _n").alias("_m"))
-        )
-        newc = (
-            means.groupBy("_cell")
-            .agg(F.array_sort(F.collect_list(F.struct("_k", "_m"))).alias("_ps"))
-            .select("_cell", F.expr("transform(_ps, x -> x._m)").alias("_nv"))
-        )
-        cents = (
-            cents.join(newc, "_cell", "left")
-            .select("_cell", F.coalesce("_nv", "_cvec").alias("_cvec"))
-            .localCheckpoint(eager=False)
-        )
-
-    out = assign(cents)
-    if with_vec:
-        out = corpq.join(out, corpus_id).select(
-            F.col(corpus_id), "_qv", "_cell"
-        )
-    return cents, out
+        got = {
+            int(r["_cell"]): (
+                [int(x) for x in r["_sv"]],
+                int(r["_n"]),
+            )
+            for r in corpq.select(kern(F.col("_qv")).alias("_cell"), "_qv")
+            .groupBy("_cell")
+            .agg(
+                F.expr(_sums_sql("_qv", len(cents_rows[0][1]))).alias("_sv"),
+                F.count(F.lit(1)).alias("_n"),
+            )
+            .collect()
+        }
+        cents_rows = [
+            (
+                cell,
+                [_div0(s, got[cell][1]) for s in got[cell][0]]
+                if cell in got
+                else prev,
+            )
+            for cell, prev in cents_rows
+        ]
+    cents = corpus.sparkSession.createDataFrame(
+        list(cents_rows), "_cell INT, _cvec ARRAY<BIGINT>"
+    )
+    keep = [F.col(corpus_id)] + ([F.col("_qv")] if with_vec else [])
+    return cents, _assign_int_cells(corpq, "_qv", cents_rows, n_centroids, keep)
 
 
 # ======================================================================
@@ -1672,7 +1335,6 @@ def build_ivf_index(
     scale: int = 10**6,
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> dict:
     """Train + encode the IVFFlat index (see ivf_topk_quantized): the
     integer-exact coarse quantizer plus the cell-assigned quantized
@@ -1680,8 +1342,7 @@ def build_ivf_index(
     rows) and ``store`` (corpus_id, _cqv, _cell — one row per corpus
     vector; the 'flat' part of IVFFlat, scanned per probed cell)."""
     cents, final_assign = quantized_kmeans_cells(
-        corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale, use_arrow,
-        with_vec=True,
+        corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale, with_vec=True
     )
     # the store IS the assignment projection — re-quantizing the corpus
     # and joining it back on corpus_id was a second corpus-sized
@@ -1705,12 +1366,12 @@ def search_ivf_index(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """IVFFlat search against a built/loaded index: probe the nprobe
-    nearest cells, exact-int64 scan of the probed cells' stored vectors,
-    shortlist, exact cosine re-rank on ``corpus`` (the float vectors the
-    index references by id). Per batch this reads ~nprobe/n_centroids of
+    nearest cells, exact-int64 scan of the probed cells' stored vectors
+    (functions.vectors.int_sqdist_pair_batch_udf), shortlist, exact
+    cosine re-rank on ``corpus`` (the float vectors the index references
+    by id). Per batch this reads ~nprobe/n_centroids of
     the store and never touches the training path."""
     _validate_index_meta(index, "ivf", scale=scale)
     cents = index["centroids"]
@@ -1737,12 +1398,9 @@ def search_ivf_index(
     # probes is nprobe·|queries| rows — broadcast it so the store scan
     # stays map-side instead of shuffling the quantized corpus by cell
     cand = F.broadcast(probes).join(index["store"], "_cell")
-    if use_arrow:
-        from ..functions.vectors import int_sqdist_pair_batch_udf
+    from ..functions.vectors import int_sqdist_pair_batch_udf
 
-        d2 = int_sqdist_pair_batch_udf()(F.col("_qv"), F.col("_cqv"))
-    else:
-        d2 = _int_sqdist_expr("_qv", "_cqv")
+    d2 = int_sqdist_pair_batch_udf()(F.col("_qv"), F.col("_cqv"))
     # two-phase per-query head over the probed-cell candidates
     # (nprobe/n_centroids of the corpus per query — still data-sized)
     short = per_key_topn(
@@ -1769,7 +1427,6 @@ def ivf_topk_quantized(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """IVF top-k with a DISTRIBUTED, INTEGER-EXACT k-means coarse quantizer.
 
@@ -1786,8 +1443,8 @@ def ivf_topk_quantized(
 
     Search is the faithful IVFFlat two-stage: candidates in the probed
     cells are RANKED BY EXACT int64 squared distance on the stored
-    (quantized) vectors — FAISS IVFFlat's scan, here an Arrow int-matmul
-    batch or the equivalent native fold, both bit-identical — and only a
+    (quantized) vectors — FAISS IVFFlat's scan, here one exact int64
+    numpy batch op per Arrow batch — and only a
     ``max(k, shortlist)``-deep shortlist per query pays the fold-exact
     double cosine on the ORIGINAL float vectors (ties toward the lower
     corpus id at both stages, so the whole pipeline stays
@@ -1798,18 +1455,16 @@ def ivf_topk_quantized(
 
     Scale design: k-means here trains DISTRIBUTED on the full corpus (vs
     train_unit_centroids' bounded-sample driver Lloyd) — per iteration one
-    broadcast-join assignment pass (centroids are n_centroids rows) plus
-    one posexplode/groupBy for the per-dim means (|corpus|·dim rows,
-    hash-aggregated); no corpus collect at any point. Probing reads
+    kernel assignment pass feeding a per-cell array-of-sums hash
+    aggregate (see quantized_kmeans_cells); no corpus collect at any
+    point. Probing reads
     nprobe/n_centroids of the corpus per query; the cosine stage is
     bounded by shortlist·|queries| rows.
     """
-    index = build_ivf_index(
-        corpus, n_centroids, n_iter, scale, corpus_id, corpus_vec, use_arrow
-    )
+    index = build_ivf_index(corpus, n_centroids, n_iter, scale, corpus_id, corpus_vec)
     return search_ivf_index(
         queries, corpus, index, k, nprobe, shortlist, scale,
-        query_id, query_vec, corpus_id, corpus_vec, use_arrow,
+        query_id, query_vec, corpus_id, corpus_vec,
     )
 
 
@@ -1821,7 +1476,6 @@ def semantic_dedup_quantized(
     n_centroids: int = 16,
     n_iter: int = 3,
     scale: int = 10**6,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """SemDeDup over the DISTRIBUTED fixed-point k-means cells — the
     oracle-checkable sibling of semantic_dedup: cell assignment is the
@@ -1846,8 +1500,7 @@ def semantic_dedup_quantized(
 
     src = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     _, af = quantized_kmeans_cells(
-        src, "_id", "_v", n_centroids=n_centroids, n_iter=n_iter, scale=scale,
-        use_arrow=use_arrow,
+        src, "_id", "_v", n_centroids=n_centroids, n_iter=n_iter, scale=scale
     )
     # one compute of (cell, vec, norm) feeding output + both join sides
     cellv = (
@@ -1883,6 +1536,101 @@ def semantic_dedup_quantized(
     )
 
 
+def _pq_lloyd(
+    frame: DataFrame,
+    corpus_id: str,
+    vec_col: str,
+    n_subspaces: int,
+    sub_dim: int,
+    n_codes: int,
+    n_iter: int,
+):
+    """Exact-integer per-subspace Lloyd for PQ codebooks, shared by
+    build_pq_index (over the quantized corpus) and build_ivfpq_index
+    (over the coarse residuals). ``frame`` holds ``corpus_id`` and the
+    int64 vector column ``vec_col``.
+
+    Init: the n_codes smallest-``corpus_id`` vectors, sliced per
+    subspace, from a distributed top-N (no full-corpus window shuffle).
+    The driver re-sort matches JVM order: BIGINT ids trivially, STRING
+    ids because UTF8String byte order equals Python code-point order.
+
+    The codebook stays ON THE DRIVER between iterations (it is the kernel
+    constant anyway — a bounded n_subspaces×n_codes×sub_dim int
+    artifact). Per iteration: ONE job — the code kernel
+    (functions.vectors.pq_codes_int_batch_udf, ties toward the lower
+    code) mapped over ``frame``, positionally zipped with the subspace
+    slices, feeding a per-(sub, cell) element-wise-sums hash aggregate —
+    then the truncating integer means update driver-side (_div0). A
+    per-iteration join + localCheckpoint lineage instead cost ~0.7 s of
+    physical planning per iteration. Integer sums are order-free, so
+    codebooks — and the oracle twins — are bit-identical to an in-engine
+    update; empty (sub, cell) pairs keep their previous centroid.
+
+    Returns (codebook (_sub, _cell, _cv), the final encode: a ``_codes``
+    column with each row's n_subspaces-code array). An empty ``frame``
+    gives an empty codebook.
+    """
+    from ..functions.vectors import pq_codes_int_batch_udf
+
+    head = sorted(
+        frame.select(F.col(corpus_id).alias("_i"), vec_col)
+        .orderBy("_i")
+        .limit(n_codes)
+        .collect(),
+        key=lambda r: r["_i"],
+    )
+    cb_rows = sorted(
+        (s, i, [int(x) for x in r[vec_col][s * sub_dim : (s + 1) * sub_dim]])
+        for i, r in enumerate(head)
+        for s in range(n_subspaces)
+    )
+    slices = F.array(
+        *[
+            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
+            for s in range(n_subspaces)
+        ]
+    )
+    for _ in range(n_iter):
+        kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
+        pairs = frame.select(
+            F.posexplode(
+                F.arrays_zip(kern(F.col(vec_col)).alias("_c"), slices.alias("_v"))
+            ).alias("_sub", "_z")
+        ).select(
+            "_sub",
+            F.col("_z._c").alias("_cell"),
+            F.col("_z._v").alias("_sv"),
+        )
+        got = {
+            (int(r["_sub"]), int(r["_cell"])): (
+                [int(x) for x in r["_sv2"]],
+                int(r["_n"]),
+            )
+            for r in pairs.groupBy("_sub", "_cell")
+            .agg(
+                F.expr(_sums_sql("_sv", sub_dim)).alias("_sv2"),
+                F.count(F.lit(1)).alias("_n"),
+            )
+            .collect()
+        }
+        cb_rows = [
+            (
+                sub,
+                cell,
+                [_div0(s, got[(sub, cell)][1]) for s in got[(sub, cell)][0]]
+                if (sub, cell) in got
+                else prev,
+            )
+            for sub, cell, prev in cb_rows
+        ]
+    codebook = frame.sparkSession.createDataFrame(
+        list(cb_rows), "_sub INT, _cell INT, _cv ARRAY<BIGINT>"
+    )
+    kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
+    return codebook, kern(F.col(vec_col)).alias("_codes")
+
+
 def build_pq_index(
     corpus: DataFrame,
     n_subspaces: int = 8,
@@ -1892,20 +1640,15 @@ def build_pq_index(
     dim: int = 64,
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
-    n_rows: int | None = None,
 ) -> dict:
     """Train + encode the flat-PQ index (see pq_topk_quantized): exact
-    integer per-subspace Lloyd codebooks, then every corpus vector
-    encoded to n_subspaces small codes. Artifacts: ``codebook`` (_sub,
-    _cell, _cv — n_subspaces·n_codes rows, broadcast at search time) and
-    ``codes`` (corpus_id, _codes — ONE row per vector carrying the
-    n_subspaces-code array; round 8 widened this from the long
-    (corpus_id, _sub, _cell) form so the ADC scan is a row-local LUT
-    fold instead of an n_subspaces× explode join + corpus-sized hash
+    integer per-subspace Lloyd codebooks (_pq_lloyd), then every corpus
+    vector encoded to n_subspaces small codes. Artifacts: ``codebook``
+    (_sub, _cell, _cv — n_subspaces·n_codes rows, broadcast at search
+    time) and ``codes`` (corpus_id, _codes — ONE row per vector carrying
+    the n_subspaces-code array, so the ADC scan is a row-local LUT fold
+    instead of an n_subspaces× explode join + corpus-sized hash
     aggregate — see search_pq_index)."""
-    sub_dim = dim // n_subspaces
-
     from ..functions.vectors import _assert_packed_argmin_safe
 
     _assert_packed_argmin_safe(scale, scale, dim, n_codes)
@@ -1913,208 +1656,17 @@ def build_pq_index(
     corpq = corpus.select(
         F.col(corpus_id), quantize_expr(corpus_vec, scale).alias("_qv")
     ).localCheckpoint(eager=False)
-    # The long-form subs view + per-_sub window init exist only on the
-    # non-arrow path; the arrow path inits its driver-side codebook from
-    # a distributed top-N over corpq (below) — same rows, no dim-exploded
-    # checkpoint and no full-corpus window shuffle.
-    if not use_arrow:
-        subs = _to_subs(
-            corpq, [corpus_id], "_qv", n_subspaces, sub_dim
-        ).localCheckpoint(eager=False)
-        w_init = Window.partitionBy("_sub").orderBy(corpus_id)
-        cents = (
-            subs.withColumn("_rn", F.row_number().over(w_init))
-            .filter(F.col("_rn") <= n_codes)
-            .select(
-                "_sub", (F.col("_rn") - 1).alias("_cell"), F.col("_sv").alias("_cv")
-            )
-        )
-
-    def assign(cc: DataFrame) -> DataFrame:
-        if use_arrow:
-            from ..functions.vectors import pq_codes_int_batch_udf
-
-            cb_rows = [
-                (int(r["_sub"]), int(r["_cell"]), [int(x) for x in r["_cv"]])
-                for r in cc.collect()  # n_subspaces*n_codes rows only
-            ]
-            kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-            return corpq.select(
-                F.col(corpus_id),
-                F.posexplode(kern(F.col("_qv"))).alias("_sub", "_cell"),
-            )
-        d = subs.join(F.broadcast(cc), "_sub")
-        packed = _int_sqdist_expr("_sv", "_cv") * n_codes + F.col("_cell")
-        return (
-            d.select(F.col(corpus_id), "_sub", packed.alias("_p"))
-            .groupBy(corpus_id, "_sub")
-            .agg(F.min("_p").alias("_mp"))
-            .select(
-                F.col(corpus_id), "_sub", (F.col("_mp") % n_codes).alias("_cell")
-            )
-        )
-
-    if use_arrow:
-        # Env-gated experiment (measured OFF by default — see
-        # _kmeans_unroll_max): the whole per-subspace Lloyd recurrence as
-        # one unrolled Catalyst tree. Values bit-identical
-        # (equality-tested); no gate job when disabled.
-        um = _kmeans_unroll_max()
-        n_g = n_rows if n_rows is not None else (corpq.count() if um > 0 else None)
-        if um > 0 and n_g and n_g <= um:
-            w_h = Window.orderBy(F.col(corpus_id))
-            head = (
-                corpq.orderBy(corpus_id)
-                .limit(n_codes)
-                .select(
-                    (F.row_number().over(w_h) - 1).cast("int").alias("_cell"),
-                    "_qv",
-                )
-            )
-            init = head.select(
-                "_cell",
-                F.posexplode(
-                    F.array(
-                        *[
-                            F.slice("_qv", s * sub_dim + 1, sub_dim)
-                            for s in range(n_subspaces)
-                        ]
-                    )
-                ).alias("_sub", "_cv"),
-            ).select(F.col("_sub").cast("int").alias("_sub"), "_cell", "_cv")
-            cents, attach = _unrolled_pq_lloyd(
-                corpq, "_qv", n_subspaces, sub_dim, n_codes, n_iter, init
-            )
-            codes_wide = attach(corpq).select(F.col(corpus_id), "_codes")
-            meta = _index_meta(
-                corpus, "pq", n_subspaces=n_subspaces, n_codes=n_codes,
-                scale=scale, dim=dim,
-            )
-            return {"codebook": cents, "codes": codes_wide, "meta": meta}
-        # Same driver-side codebook recurrence as build_ivfpq_index (one
-        # job per iteration: kernel map + positional zip + per-(sub,cell)
-        # array-of-sums agg; truncating means replayed exactly in Python;
-        # empty cells keep their previous centroid) — replaces the
-        # per-iteration join + localCheckpoint lineage whose physical
-        # planning dominated the serve-path floor at small corpora and
-        # whose assignment re-join moved corpus-sized rows at scale.
-        from ..functions.vectors import pq_codes_int_batch_udf
-
-        def _div0(s: int, n: int) -> int:  # BIGINT div: truncate toward 0
-            return -((-s) // n) if s < 0 else s // n
-
-        # init = the n_codes smallest-corpus_id quantized vectors sliced
-        # per subspace — exactly the old per-_sub row_number()<=n_codes
-        # window rows (corpus_id unique; every vector appears in every
-        # subspace partition), via a distributed top-N instead of a
-        # full-corpus window shuffle. Driver re-sort matches JVM order
-        # (BIGINT trivially; STRING because UTF8String byte order equals
-        # Python code-point order).
-        head = sorted(
-            corpq.select(F.col(corpus_id).alias("_i"), "_qv")
-            .orderBy("_i")
-            .limit(n_codes)
-            .collect(),
-            key=lambda r: r["_i"],
-        )
-        cb_rows = sorted(
-            (s, i, [int(x) for x in r["_qv"][s * sub_dim : (s + 1) * sub_dim]])
-            for i, r in enumerate(head)
-            for s in range(n_subspaces)
-        )
-        slices = F.array(
-            *[
-                F.slice(F.col("_qv"), s * sub_dim + 1, sub_dim)
-                for s in range(n_subspaces)
-            ]
-        )
-        sums = "array(" + ",".join(f"sum(_sv[{i}])" for i in range(sub_dim)) + ")"
-        for _ in range(n_iter):
-            kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-            pairs = corpq.select(
-                F.posexplode(
-                    F.arrays_zip(kern(F.col("_qv")).alias("_c"), slices.alias("_v"))
-                ).alias("_sub", "_z")
-            ).select(
-                "_sub",
-                F.col("_z._c").alias("_cell"),
-                F.col("_z._v").alias("_sv"),
-            )
-            got = {
-                (int(r["_sub"]), int(r["_cell"])): (
-                    [int(x) for x in r["_sv2"]],
-                    int(r["_n"]),
-                )
-                for r in pairs.groupBy("_sub", "_cell")
-                .agg(F.expr(sums).alias("_sv2"), F.count(F.lit(1)).alias("_n"))
-                .collect()
-            }
-            cb_rows = [
-                (
-                    sub,
-                    cell,
-                    [_div0(s, got[(sub, cell)][1]) for s in got[(sub, cell)][0]]
-                    if (sub, cell) in got
-                    else prev,
-                )
-                for sub, cell, prev in cb_rows
-            ]
-        cents = corpus.sparkSession.createDataFrame(
-            list(cb_rows), "_sub INT, _cell INT, _cv ARRAY<BIGINT>"
-        )
-    else:
-        for _ in range(n_iter):
-            assigned = assign(cents)
-            pairs = assigned.join(subs, [corpus_id, "_sub"]).select(
-                "_sub", F.col("_cell"), "_sv"
-            )
-            newc = (
-                pairs.groupBy("_sub", "_cell")
-                .agg(
-                    *[F.sum(F.col("_sv")[i]).alias(f"_s{i}") for i in range(sub_dim)],
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .select(
-                    "_sub",
-                    "_cell",
-                    F.array(
-                        *[F.expr(f"_s{i} div _n") for i in range(sub_dim)]
-                    ).alias("_nv"),
-                )
-            )
-            cents = (
-                cents.join(newc, ["_sub", "_cell"], "left")
-                .select("_sub", "_cell", F.coalesce("_nv", "_cv").alias("_cv"))
-                .localCheckpoint(eager=False)
-            )
-
+    cents, codes = _pq_lloyd(
+        corpq, corpus_id, "_qv", n_subspaces, dim // n_subspaces, n_codes, n_iter
+    )
     meta = _index_meta(
         corpus, "pq", n_subspaces=n_subspaces, n_codes=n_codes, scale=scale, dim=dim
     )
-    # wide code table: one row per vector, array position = subspace.
-    # The Arrow kernel already emits the per-vector code array (one map
-    # pass); the expression path groups its long-form assignment once
-    # at build time — either way the SEARCH-side scan never explodes.
-    if use_arrow:
-        kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-        codes_wide = corpq.select(
-            F.col(corpus_id), kern(F.col("_qv")).alias("_codes")
-        )
-    else:
-        codes_wide = (
-            assign(cents)
-            .groupBy(corpus_id)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_sub", "_cell"))
-                ).alias("_ps")
-            )
-            .select(
-                F.col(corpus_id),
-                F.transform("_ps", lambda p: p["_cell"]).alias("_codes"),
-            )
-        )
-    return {"codebook": cents, "codes": codes_wide, "meta": meta}
+    return {
+        "codebook": cents,
+        "codes": corpq.select(F.col(corpus_id), codes),
+        "meta": meta,
+    }
 
 
 def search_pq_index(
@@ -2233,7 +1785,6 @@ def pq_topk_quantized(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """PQ/ADC top-k with DISTRIBUTED fixed-point per-subspace codebooks —
     the oracle-checkable sibling of pq_topk. Each subspace's codebook is
@@ -2244,20 +1795,15 @@ def pq_topk_quantized(
     on the ORIGINAL vectors. Every stage reproduces bit-identically in SQL
     (see _pqq_oracle_sql).
 
-    Scale: codebooks are n_subspaces·n_codes rows (broadcast); training
-    touches the corpus long-form (|corpus|·n_subspaces rows) per
-    iteration with one broadcast-join + one hash-aggregate; ADC scan is
+    Scale: codebooks are n_subspaces·n_codes rows (broadcast); each
+    training iteration and the final encode is one map pass of the
+    EXACT-INTEGER Arrow kernel (functions.vectors.pq_codes_int_batch_udf
+    — a dense int64 matmul per subspace per record batch, with the same
+    tie-break packing as the twin) feeding one hash aggregate; only the
+    n_subspaces·n_codes-row codebook is ever collected. The ADC scan is
     one broadcast join of the per-query lookup table against the code
     table — the corpus vectors themselves are only read again for the
     shortlist re-rank.
-
-    ``use_arrow=True`` (default) runs each corpus-encode pass through the
-    EXACT-INTEGER Arrow kernel (functions.vectors.pq_codes_int_batch_udf)
-    — pure int64 matmul per subspace with the same tie-break packing, so
-    codes and every oracle hash are bit-identical to the expression path
-    (equality-tested); replaces n_subspaces·n_codes interpreted folds per
-    row with dense matmuls per record batch. Only the
-    n_subspaces·n_codes-row codebook is ever collected.
 
     ``shortlist=None`` (default) derives the re-rank depth from the corpus
     (derived_shortlist: max(1000, ceil(n/200))) — the ADC ordering is
@@ -2266,8 +1812,7 @@ def pq_topk_quantized(
     while the exact re-rank stays |queries|·n/200 rows.
     """
     index = build_pq_index(
-        corpus, n_subspaces, n_codes, n_iter, scale, dim,
-        corpus_id, corpus_vec, use_arrow,
+        corpus, n_subspaces, n_codes, n_iter, scale, dim, corpus_id, corpus_vec
     )
     return search_pq_index(
         queries, corpus, index, k, n_subspaces, shortlist, scale, dim,
@@ -2284,7 +1829,6 @@ def semantic_dedup_incremental_quantized(
     n_centroids: int = 16,
     n_iter: int = 3,
     scale: int = 10**6,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """INCREMENTAL SemDeDup: judge only a NEW batch of embeddings against
     an EXISTING corpus — the daily-ingest shape of semantic dedup (the
@@ -2299,7 +1843,8 @@ def semantic_dedup_incremental_quantized(
     also matter (documented asymmetric contract, same as
     incremental_neardup's new-batch probe).
 
-    Returns (id_col, cell, is_kept, pruned_by) for the BATCH rows.
+    Returns (id_col, cell, is_kept, pruned_by) for the BATCH rows; an
+    empty corpus has no cell to judge a batch row in, so it gives none.
     Fully oracle-checkable: every stage is the integer Lloyd recurrence
     plus the fold-exact double cosine (catalog x1_incremental_semdedup).
 
@@ -2311,30 +1856,15 @@ def semantic_dedup_incremental_quantized(
     """
     src = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     cents, _ = quantized_kmeans_cells(
-        src, "_id", "_v", n_centroids=n_centroids, n_iter=n_iter, scale=scale,
-        use_arrow=use_arrow,
+        src, "_id", "_v", n_centroids=n_centroids, n_iter=n_iter, scale=scale
     )
 
     def assign_to(df: DataFrame) -> DataFrame:
         qdf = df.select(
             F.col("_id"), F.col("_v"), quantize_expr("_v", scale).alias("_qv")
         )
-        if use_arrow:
-            from ..functions.vectors import nearest_cell_int_batch_udf
-
-            cents_rows = sorted(
-                (int(r["_cell"]), [int(x) for x in r["_cvec"]])
-                for r in cents.collect()
-            )
-            kern = nearest_cell_int_batch_udf(cents_rows, n_centroids)
-            return qdf.select("_id", "_v", kern(F.col("_qv")).alias("_cell"))
-        d = qdf.crossJoin(F.broadcast(cents))
-        packed = _int_sqdist_expr("_qv", "_cvec") * n_centroids + F.col("_cell")
-        return (
-            d.select("_id", "_v", packed.alias("_p"))
-            .groupBy("_id", "_v")
-            .agg(F.min("_p").alias("_mp"))
-            .select("_id", "_v", (F.col("_mp") % n_centroids).alias("_cell"))
+        return _assign_int_cells(
+            qdf, "_qv", _int_centroid_rows(cents), n_centroids, ["_id", "_v"]
         )
 
     from ..functions.vectors import dot_expr, l2_norm_expr
@@ -2379,16 +1909,14 @@ def build_ivfpq_index(
     dim: int = 64,
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
-    n_rows: int | None = None,
 ) -> dict:
     """Train + encode the IVFADC index (see ivfpq_topk_quantized): the
     coarse quantizer, the residual PQ codebooks, and every vector's
     residual codes TAGGED with its coarse cell. Artifacts: ``centroids``
-    (_cell, _cvec), ``codebook`` (_sub, _cell, _cv — residual-space),
-    ``codes`` (corpus_id, _cell, _codes — one row per vector with the
-    n_subspaces-code array; round 8 widened this from the long
-    per-subspace form so the ADC scan folds row-locally). The cell tag
+    (_cell, _cvec), ``codebook`` (_sub, _cell, _cv — residual-space,
+    trained by _pq_lloyd), ``codes`` (corpus_id, _cell, _codes — one row
+    per vector with the n_subspaces-code array, so the ADC scan folds
+    row-locally). The cell tag
     is folded into the code table at build time — searches filter
     probed cells straight off the codes; re-joining a separate
     assignment table per batch was a measured 39 s-per-search cliff at
@@ -2405,29 +1933,17 @@ def build_ivfpq_index(
         2 * scale, 2 * scale, dim, max(n_centroids, n_codes)
     )
 
-    # one corpus count feeds BOTH unroll gates (coarse k-means and the
-    # residual PQ below — res has exactly one row per corpus row) — and
-    # only when the env-gated unroll experiment is ON (default off: no
-    # gate job at all; see _kmeans_unroll_max)
-    _um = _kmeans_unroll_max()
-    n_g = n_rows if n_rows is not None else (
-        corpus.count() if (use_arrow and _um > 0) else None
-    )
-
     # 1. coarse quantizer + cell assignment (with_vec: the assignment
     #    carries the quantized vector, so the residual projection below
     #    needs NO join back to a separately re-quantized corpus — that
     #    join was a second corpus-sized shuffle/broadcast per build)
     cents, af = quantized_kmeans_cells(
-        corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale, use_arrow,
-        with_vec=True, n_rows=n_g, dim=dim,
+        corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale, with_vec=True
     )
 
     # 2. integer residuals against the assigned centroid — a map-side
     #    projection over the assignment (centroids are n_centroids rows,
-    #    broadcast): on the arrow path no corpus-keyed exchange remains
-    #    anywhere in the build (the non-arrow path still pays one inside
-    #    quantized_kmeans_cells' with_vec join-back)
+    #    broadcast): no corpus-keyed exchange remains anywhere in the build
     res = (
         af.join(F.broadcast(cents), "_cell")
         .select(
@@ -2438,219 +1954,15 @@ def build_ivfpq_index(
         .localCheckpoint(eager=False)
     )
 
-    # 3. per-subspace codebooks trained on the residuals (same integer
-    #    Lloyd construction as build_pq_index, keyed by subspace). The
-    #    non-arrow path keeps the long-form subs view + window init; the
-    #    arrow path inits driver-side from a distributed top-N (below) —
-    #    same rows, no full-corpus window shuffle, no subs checkpoint.
-    if not use_arrow:
-        subs = _to_subs(
-            res, [corpus_id], "_rv", n_subspaces, sub_dim
-        ).localCheckpoint(eager=False)
-        w_init = Window.partitionBy("_sub").orderBy(corpus_id)
-        pcents = (
-            subs.withColumn("_rn", F.row_number().over(w_init))
-            .filter(F.col("_rn") <= n_codes)
-            .select(
-                "_sub", (F.col("_rn") - 1).alias("_cell"), F.col("_sv").alias("_cv")
-            )
-        )
-
-    def assign(cc: DataFrame) -> DataFrame:
-        if use_arrow:
-            from ..functions.vectors import pq_codes_int_batch_udf
-
-            cb_rows = [
-                (int(r["_sub"]), int(r["_cell"]), [int(x) for x in r["_cv"]])
-                for r in cc.collect()
-            ]
-            kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-            return res.select(
-                F.col(corpus_id),
-                F.posexplode(kern(F.col("_rv"))).alias("_sub", "_code"),
-            )
-        d = subs.join(F.broadcast(cc), "_sub")
-        packed = _int_sqdist_expr("_sv", "_cv") * n_codes + F.col("_cell")
-        return (
-            d.select(F.col(corpus_id), "_sub", packed.alias("_p"))
-            .groupBy(corpus_id, "_sub")
-            .agg(F.min("_p").alias("_mp"))
-            .select(
-                F.col(corpus_id), "_sub", (F.col("_mp") % n_codes).alias("_code")
-            )
-        )
-
-    if use_arrow and _um > 0 and n_g and n_g <= _um:
-        # Env-gated experiment (measured OFF by default — see
-        # _kmeans_unroll_max): the residual PQ training and encode as ONE
-        # unrolled Catalyst plan. Values bit-identical (equality-tested).
-        w_h = Window.orderBy(F.col(corpus_id))
-        head = (
-            res.orderBy(corpus_id)
-            .limit(n_codes)
-            .select(
-                (F.row_number().over(w_h) - 1).cast("int").alias("_cell"),
-                "_rv",
-            )
-        )
-        init = head.select(
-            "_cell",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice("_rv", s * sub_dim + 1, sub_dim)
-                        for s in range(n_subspaces)
-                    ]
-                )
-            ).alias("_sub", "_cv"),
-        ).select(F.col("_sub").cast("int").alias("_sub"), "_cell", "_cv")
-        pcents, attach = _unrolled_pq_lloyd(
-            res, "_rv", n_subspaces, sub_dim, n_codes, n_iter, init
-        )
-        codes_wide = attach(res).select(F.col(corpus_id), "_cell", "_codes")
-        return {
-            "centroids": cents,
-            "codebook": pcents,
-            "codes": codes_wide,
-            "meta": _index_meta(
-                corpus, "ivfpq", n_centroids=n_centroids,
-                n_subspaces=n_subspaces, n_codes=n_codes, scale=scale, dim=dim,
-            ),
-        }
-    if use_arrow:
-        # Codebooks live ON THE DRIVER between iterations (they are
-        # collected for the kernel constant anyway — a bounded
-        # n_subspaces×n_codes×sub_dim int artifact). Per iteration: ONE
-        # job — the code kernel mapped over res, positionally zipped with
-        # the residual slices (no shuffle join back to `subs`), feeding a
-        # per-(sub, cell) element-wise-sums hash agg (array-of-sums as a
-        # single F.expr) — then the truncating integer means update
-        # driver-side. This replaces the per-iteration join +
-        # localCheckpoint lineage whose physical planning alone cost
-        # ~0.7 s per iteration (round-10 verdict #2: the x2 action floor
-        # was mostly driver latency). Integer sums are order-free and
-        # `s div n` is replayed exactly (truncate toward zero), so
-        # codebooks — and the oracle twins — are bit-identical; empty
-        # (sub, cell) pairs keep their previous centroid, as before.
-        from ..functions.vectors import pq_codes_int_batch_udf
-
-        def _div0(s: int, n: int) -> int:  # BIGINT div: truncate toward 0
-            return -((-s) // n) if s < 0 else s // n
-
-        # Codebook init, driver-side from a distributed top-N: the
-        # n_codes smallest-corpus_id residuals, sliced per subspace —
-        # exactly the rows the old per-_sub row_number()<=n_codes window
-        # over the exploded subs view produced (corpus_id is unique, and
-        # every residual appears in every subspace partition), without
-        # that window's full-corpus shuffle. Driver re-sort by the id
-        # matches the JVM order: BIGINT ids trivially, STRING ids because
-        # UTF8String's byte order equals Python's code-point order.
-        head = sorted(
-            res.select(F.col(corpus_id).alias("_i"), "_rv")
-            .orderBy("_i")
-            .limit(n_codes)
-            .collect(),
-            key=lambda r: r["_i"],
-        )
-        cb_rows = sorted(
-            (s, i, [int(x) for x in r["_rv"][s * sub_dim : (s + 1) * sub_dim]])
-            for i, r in enumerate(head)
-            for s in range(n_subspaces)
-        )
-        slices = F.array(
-            *[
-                F.slice(F.col("_rv"), s * sub_dim + 1, sub_dim)
-                for s in range(n_subspaces)
-            ]
-        )
-        sums = "array(" + ",".join(f"sum(_sv[{i}])" for i in range(sub_dim)) + ")"
-        for _ in range(n_iter):
-            kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-            pairs = res.select(
-                F.posexplode(
-                    F.arrays_zip(kern(F.col("_rv")).alias("_c"), slices.alias("_v"))
-                ).alias("_sub", "_z")
-            ).select(
-                "_sub",
-                F.col("_z._c").alias("_cell"),
-                F.col("_z._v").alias("_sv"),
-            )
-            got = {
-                (int(r["_sub"]), int(r["_cell"])): (
-                    [int(x) for x in r["_sv2"]],
-                    int(r["_n"]),
-                )
-                for r in pairs.groupBy("_sub", "_cell")
-                .agg(F.expr(sums).alias("_sv2"), F.count(F.lit(1)).alias("_n"))
-                .collect()
-            }
-            cb_rows = [
-                (
-                    sub,
-                    cell,
-                    [_div0(s, got[(sub, cell)][1]) for s in got[(sub, cell)][0]]
-                    if (sub, cell) in got
-                    else prev,
-                )
-                for sub, cell, prev in cb_rows
-            ]
-        pcents = corpus.sparkSession.createDataFrame(
-            list(cb_rows), "_sub INT, _cell INT, _cv ARRAY<BIGINT>"
-        )
-        kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-        codes_wide = res.select(
-            F.col(corpus_id), "_cell", kern(F.col("_rv")).alias("_codes")
-        )
-    else:
-        for _ in range(n_iter):
-            assigned = assign(pcents).withColumnRenamed("_code", "_cell")
-            pairs = assigned.join(subs, [corpus_id, "_sub"]).select(
-                "_sub", "_cell", "_sv"
-            )
-            # element-wise integer sums per position — same values as the
-            # old posexplode + (_sub,_cell,_k) agg (integer addition is
-            # order-free) without materializing sub_dim× the rows
-            newc = (
-                pairs.groupBy("_sub", "_cell")
-                .agg(
-                    *[F.sum(F.col("_sv")[i]).alias(f"_s{i}") for i in range(sub_dim)],
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .select(
-                    "_sub",
-                    "_cell",
-                    F.array(
-                        *[F.expr(f"_s{i} div _n") for i in range(sub_dim)]
-                    ).alias("_nv"),
-                )
-            )
-            pcents = (
-                pcents.join(newc, ["_sub", "_cell"], "left")
-                .select("_sub", "_cell", F.coalesce("_nv", "_cv").alias("_cv"))
-                .localCheckpoint(eager=False)
-            )
-        codes_wide = (
-            assign(pcents)
-            .groupBy(corpus_id)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_sub", "_code"))
-                ).alias("_ps")
-            )
-            .select(
-                F.col(corpus_id),
-                F.transform("_ps", lambda p: p["_code"]).alias("_codes"),
-            )
-            # cell tag only — af also carries _qv (with_vec=True), which
-            # would bloat the persisted codes artifact with a dim-wide
-            # array per vector and diverge save_ann_index's schema from
-            # the (corpus_id, _cell, _codes) contract
-            .join(af.select(F.col(corpus_id), "_cell"), corpus_id)
-        )
+    # 3. per-subspace codebooks trained on the residuals (the same integer
+    #    Lloyd as build_pq_index), then every residual encoded
+    pcents, codes = _pq_lloyd(
+        res, corpus_id, "_rv", n_subspaces, sub_dim, n_codes, n_iter
+    )
     return {
         "centroids": cents,
         "codebook": pcents,
-        "codes": codes_wide,
+        "codes": res.select(F.col(corpus_id), "_cell", codes),
         "meta": _index_meta(
             corpus, "ivfpq", n_centroids=n_centroids,
             n_subspaces=n_subspaces, n_codes=n_codes, scale=scale, dim=dim,
@@ -2808,7 +2120,6 @@ def ivfpq_topk_quantized(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """IVF-PQ / IVFADC (Jégou et al. 2011) — the canonical billion-vector
     index, composed here entirely in EXACT fixed-point arithmetic so the
@@ -2838,7 +2149,7 @@ def ivfpq_topk_quantized(
     """
     index = build_ivfpq_index(
         corpus, n_centroids, n_subspaces, n_codes, n_iter, scale, dim,
-        corpus_id, corpus_vec, use_arrow,
+        corpus_id, corpus_vec,
     )
     return search_ivfpq_index(
         queries, corpus, index, k, nprobe, n_subspaces, shortlist, scale,
@@ -3068,14 +2379,13 @@ def build_ivfbq_index(
     scale: int = 10**6,
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> dict:
     """Train + encode the IVF-BQ index (see ivfbq_topk): integer-exact
     coarse quantizer plus cell-tagged sign codes. Artifacts:
     ``centroids`` (_cell, _cvec) and ``codes`` (corpus_id, _cw, _cell —
     the per-cell Hamming scan table)."""
     cents, af = quantized_kmeans_cells(
-        corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale, use_arrow
+        corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale
     )
     cw = corpus.select(
         F.col(corpus_id),
@@ -3182,7 +2492,6 @@ def ivfbq_topk(
     query_vec: str = "q_vec",
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """IVF + binary quantization — the composition bq_topk's docstring
     promises: the coarse quantizer (quantized_kmeans_cells, exact
@@ -3207,8 +2516,7 @@ def ivfbq_topk(
     touches shortlist·|queries| rows.
     """
     index = build_ivfbq_index(
-        corpus, n_centroids, n_iter, dim, word_bits, scale,
-        corpus_id, corpus_vec, use_arrow,
+        corpus, n_centroids, n_iter, dim, word_bits, scale, corpus_id, corpus_vec
     )
     return search_ivfbq_index(
         queries, corpus, index, k, nprobe, dim, shortlist, word_bits, scale,

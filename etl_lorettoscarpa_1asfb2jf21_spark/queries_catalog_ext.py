@@ -389,9 +389,9 @@ def _hp_band_sql(dim: int = 64, planes: int = 16, bands: int = 4):
 
 
 def _neardup_oracle_sql(dim: int = 64, planes: int = 16, bands: int = 4) -> str:
-    """DuckDB twin of embedding_neardup_pairs(use_arrow=False,
-    quantized_verify=True) + its in-output recall gate: fold-normalized
-    vectors, literal-hyperplane sign bits, within-bucket pairing, and the
+    """DuckDB twin of embedding_neardup_pairs(quantized_verify=True) + its
+    in-output recall gate: fold-normalized vectors, literal-hyperplane
+    sign bits, within-bucket pairing, and the
     FIXED-POINT verify dot — elements floor-quantized at 2^20 so every
     product-sum is exact integer arithmetic in float64, order-free, hence
     bit-identical to the Spark Arrow einsum kernel (see
@@ -495,8 +495,7 @@ def x1_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_neardup_pairs(
-        e, "vec_id", "embedding", threshold=0.3, use_arrow=False,
-        quantized_verify=True,
+        e, "vec_id", "embedding", threshold=0.3, quantized_verify=True,
     )
 
     from .functions.vectors import cosine_similarity_expr
@@ -508,8 +507,7 @@ def x1_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the restricted run finds exactly the full run's in-sample pairs).
     s = e.filter(F.col("vec_id") < 200)
     sample_pairs = embedding_neardup_pairs(
-        s, "vec_id", "embedding", threshold=0.3, use_arrow=False,
-        quantized_verify=True,
+        s, "vec_id", "embedding", threshold=0.3, quantized_verify=True,
     )
     a = s.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     b = s.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
@@ -673,10 +671,10 @@ def x2_topk_pq_float(spark: SparkSession, sf_dir: str) -> DataFrame:
     No SQL twin (float k-means codebooks); ``exact_rank`` embeds the
     quality gate per returned row, as in x2_topk_lsh.
 
-    Encode uses the Arrow batch kernel: re-measured at sf0.1 it is >2×
-    the native argmin-expression path end-to-end (128 interpreted
-    aggregate exprs per row don't amortize; equality of the two encoders
-    is asserted in tests/test_operators.py).
+    Encode uses the Arrow batch kernel (pq_codes_batch_udf, checked
+    against a numpy reference in tests/test_operators.py): re-measured at
+    sf0.1 it was >2× the 128 interpreted argmin expressions per row it
+    replaced.
     """
     from .operators.similarity import pq_topk
 
@@ -685,7 +683,7 @@ def x2_topk_pq_float(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     corpus = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    approx = pq_topk(queries, corpus, k=10, n_subspaces=8, n_codes=16, use_arrow=True)
+    approx = pq_topk(queries, corpus, k=10, n_subspaces=8, n_codes=16)
     return _with_exact_rank(approx, queries, corpus)
 
 
@@ -1830,9 +1828,7 @@ def x2_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         f_pq = pool.submit(
             _run,
-            lambda: pq_topk(
-                queries, corpus, k=10, n_subspaces=8, n_codes=16, use_arrow=True
-            ),
+            lambda: pq_topk(queries, corpus, k=10, n_subspaces=8, n_codes=16),
         )
         f_ivfpq = pool.submit(
             _run,
@@ -2441,8 +2437,8 @@ def x2_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means can. x2_topk_ivf_float (driver-trained float Lloyd on a
     bounded sample, Arrow assignment kernel) remains the throughput
     variant; this one additionally demonstrates the index TRAINS
-    distributed: per iteration one broadcast-join assignment + one
-    hash-aggregated per-dim mean, no corpus collect anywhere.
+    distributed: per iteration one kernel assignment pass + one
+    hash-aggregated array of per-cell sums, no corpus collect anywhere.
     """
     from .operators.similarity import ivf_topk_quantized
 

@@ -9,9 +9,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_lorettoscarpa_1asfb2jf21_spark.functions.vectors import (
+    array_lit,
     cosine_similarity_expr,
+    dot_expr,
+    normalize_expr,
 )
-from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import semantic_dedup
+from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import (
+    semantic_dedup,
+    train_unit_centroids,
+)
 from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
 
 THRESH = 0.3
@@ -161,23 +167,62 @@ def test_opt2_zorder_is_map_only(spark, sf_small):
     assert "Exchange" not in plan
 
 
+def _native_cells(vec_c: str, centroids, probes: int):
+    """The native per-row assignment expression: the ``probes`` cells
+    with the highest dot against the unit centroids, ties toward the
+    lower cell. A reference for the Arrow assignment kernel."""
+    entries = F.array(
+        *[
+            F.struct(dot_expr(vec_c, array_lit(c)).alias("sim"), F.lit(i).alias("cell"))
+            for i, c in centroids
+        ]
+    )
+    ordered = F.array_sort(
+        entries,
+        lambda a, b: F.when(a["sim"] > b["sim"], -1)
+        .when(a["sim"] < b["sim"], 1)
+        .otherwise(a["cell"] - b["cell"]),
+    )
+    return F.transform(F.slice(ordered, 1, probes), lambda e: e["cell"])
+
+
 def test_semantic_dedup_arrow_matches_native(spark, sf_small):
-    """The Arrow matmul assignment kernel and the native higher-order
-    expression path must produce identical (cell, verdict, dominator)."""
+    """semantic_dedup (Arrow matmul assignment) gives the same (cell,
+    verdict, dominator) as the native path: cells from the per-row
+    sorted-dot expression, then the within-cell pairs at cosine >=
+    threshold."""
     e = load_table(spark, sf_small, "embeddings")
-    native = {
-        r["vec_id"]: (r["cell"], r["is_kept"], r["pruned_by"])
-        for r in semantic_dedup(
-            e, "vec_id", "embedding", threshold=THRESH, n_centroids=8, use_arrow=False
-        ).collect()
-    }
     arrow = {
         r["vec_id"]: (r["cell"], r["is_kept"], r["pruned_by"])
         for r in semantic_dedup(
-            e, "vec_id", "embedding", threshold=THRESH, n_centroids=8, use_arrow=True
+            e, "vec_id", "embedding", threshold=THRESH, n_centroids=8
         ).collect()
     }
-    assert native == arrow
+
+    centroids = train_unit_centroids(e, "embedding", 8)
+    cn = e.select("vec_id", normalize_expr("embedding").alias("_v")).withColumn(
+        "cell", _native_cells("_v", centroids, 1)[0]
+    )
+    a = cn.select("cell", F.col("vec_id").alias("_ida"), F.col("_v").alias("_va"))
+    b = cn.select("cell", F.col("vec_id").alias("_idb"), F.col("_v").alias("_vb"))
+    dominator = {
+        r["_idb"]: r["_p"]
+        for r in a.join(b, "cell")
+        .filter((F.col("_ida") < F.col("_idb")) & (dot_expr("_va", "_vb") >= THRESH))
+        .groupBy("_idb")
+        .agg(F.min("_ida").alias("_p"))
+        .collect()
+    }
+    native = {
+        r["vec_id"]: (
+            r["cell"],
+            r["vec_id"] not in dominator,
+            dominator.get(r["vec_id"]),
+        )
+        for r in cn.select("vec_id", "cell").collect()
+    }
+    assert arrow == native
+    assert len(native) == e.count() and 0 < len(dominator) < len(native)
 
 
 def test_semantic_dedup_arrow_node_visible(spark, sf_small):
@@ -194,10 +239,12 @@ def test_semantic_dedup_arrow_node_visible(spark, sf_small):
     assert "BatchEvalPython" not in plan
 
 
+
 def test_ivf_arrow_assignment_matches_native(spark, sf_small):
     """ivf_topk with the Arrow corpus-assignment kernel returns exactly
-    the native path's results (same cells -> same candidates -> same
-    top-k)."""
+    the native path's results: corpus cells from the per-row sorted-dot
+    expression the queries probe with, so the same candidates and the
+    same top-k."""
     from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import ivf_topk
 
     e = load_table(spark, sf_small, "embeddings")
@@ -205,35 +252,82 @@ def test_ivf_arrow_assignment_matches_native(spark, sf_small):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
+    got = {
+        (r["q_id"], r["rank"]): (r["c_id"], round(r["sim"], 9))
+        for r in ivf_topk(q, c, k=10).collect()
+    }
 
-    def run(arrow):
-        return {
-            (r["q_id"], r["rank"]): (r["c_id"], round(r["sim"], 9))
-            for r in ivf_topk(q, c, k=10, use_arrow=arrow).collect()
-        }
-
-    assert run(True) == run(False)
+    centroids = train_unit_centroids(c, "c_vec", 16)
+    indexed = c.select("c_id", normalize_expr("c_vec").alias("c_vec")).select(
+        "c_id", "c_vec", F.explode(_native_cells("c_vec", centroids, 1)).alias("cell")
+    )
+    probed = q.select("q_id", normalize_expr("q_vec").alias("q_vec")).select(
+        "q_id", "q_vec", F.explode(_native_cells("q_vec", centroids, 4)).alias("cell")
+    )
+    cands: dict[int, list] = {}
+    for r in (
+        indexed.join(probed, "cell")
+        .select("q_id", "c_id", dot_expr("q_vec", "c_vec").alias("sim"))
+        .collect()
+    ):
+        cands.setdefault(r["q_id"], []).append((-r["sim"], r["c_id"]))
+    want = {
+        (qid, rank): (cid, round(-neg, 9))
+        for qid, rows in cands.items()
+        for rank, (neg, cid) in enumerate(sorted(rows)[:10], start=1)
+    }
+    assert got == want
+    assert len(want) == 50
 
 
 def test_quantized_assignment_arrow_matches_expression(spark, sf_small):
-    """The exact-integer Arrow assignment kernel
-    (nearest_cell_int_batch_udf) is bit-identical to the native
-    min(dist*nc + cell) expression path — both are pure int64 arithmetic,
-    so every cell label (and therefore every quantized-index oracle hash)
-    must agree exactly."""
+    """quantized_kmeans_cells (the exact-integer Arrow kernel in every
+    assignment pass) trains the same centroids and cells as the native
+    expression: argmin of the packed ``dist*n_centroids + cell``,
+    truncating integer means, empty cells keep their centroid — restated
+    here in int64 numpy over the same quantized vectors and md5(id)
+    init. Every step is integer arithmetic, so equality is exact."""
+    import hashlib
+
+    import numpy as np
+
     from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import (
+        quantize_expr,
         quantized_kmeans_cells,
     )
 
     e = load_table(spark, sf_small, "embeddings").select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
     )
-    _, a_arrow = quantized_kmeans_cells(e, n_centroids=8, n_iter=2, use_arrow=True)
-    _, a_expr = quantized_kmeans_cells(e, n_centroids=8, n_iter=2, use_arrow=False)
-    got_arrow = {r["c_id"]: r["_cell"] for r in a_arrow.collect()}
-    got_expr = {r["c_id"]: r["_cell"] for r in a_expr.collect()}
-    assert got_arrow == got_expr
-    assert len(got_arrow) == e.count()
+    cents, assign = quantized_kmeans_cells(e, n_centroids=8, n_iter=2)
+    got_cells = {r["c_id"]: r["_cell"] for r in assign.collect()}
+    got_cents = sorted((r["_cell"], list(r["_cvec"])) for r in cents.collect())
+
+    rows = e.select("c_id", quantize_expr("c_vec").alias("_qv")).collect()
+    ids = [r["c_id"] for r in rows]
+    V = np.array([r["_qv"] for r in rows], dtype=np.int64)
+    nc = 8
+    init = sorted(
+        range(len(ids)),
+        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
+    )
+    C = V[init[:nc]].copy()
+
+    def cells(C):
+        d = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        return (d * nc + np.arange(nc)).min(axis=1) % nc
+
+    for _ in range(2):
+        a = cells(C)
+        for j in range(nc):
+            if (a == j).any():
+                s, n = V[a == j].sum(axis=0), int((a == j).sum())
+                C[j] = np.where(s < 0, -((-s) // n), s // n)
+    want_cells = dict(zip(ids, cells(C).tolist()))
+
+    assert got_cells == want_cells
+    assert got_cents == [(j, C[j].tolist()) for j in range(nc)]
+    assert len(got_cells) == e.count() and len(set(want_cells.values())) > 1
 
 
 def test_incremental_semdedup_judges_batch_against_corpus_only(spark):

@@ -283,23 +283,6 @@ def test_brute_force_topk(spark):
     assert [r["c_id"] for r in sorted(out, key=lambda r: r["rank"])] == [1, 2]
 
 
-def test_brute_force_topk_arrow_matches_native(spark):
-    corpus = spark.createDataFrame(VECS, ["c_id", "c_vec"])
-    queries = spark.createDataFrame(
-        [(100, [1.0, 0.05, 0.0, 0.0]), (101, [0.0, 0.2, 1.0, 0.0])],
-        ["q_id", "q_vec"],
-    )
-    native = {
-        (r["q_id"], r["c_id"], r["rank"], round(r["sim"], 12))
-        for r in brute_force_topk(queries, corpus, k=3).collect()
-    }
-    arrow = {
-        (r["q_id"], r["c_id"], r["rank"], round(r["sim"], 12))
-        for r in brute_force_topk(queries, corpus, k=3, use_arrow=True).collect()
-    }
-    assert arrow == native
-
-
 def test_lsh_topk_subset_of_exact(spark):
     corpus = spark.createDataFrame(VECS, ["c_id", "c_vec"])
     queries = spark.createDataFrame([(100, [1.0, 0.05, 0.0, 0.0])], ["q_id", "q_vec"])
@@ -883,27 +866,75 @@ def test_pq_topk_wide_batch_is_width_free(spark):
     assert got_wide == got_narrow
 
 
-def test_pq_arrow_encoder_matches_native(spark):
-    """The Arrow PQ encoder must produce the same top-k as the native
-    argmin-over-literals path (same codebooks, same seed)."""
-    import random
+def test_nearest_cell_kernel_matches_numpy(spark):
+    """nearest_cell_batch_udf (the corpus assignment of ivf_topk and
+    semantic_dedup) is the argmax of the dot between the L2-normalized
+    row and each centroid, ties toward the lower cell. Checked against a
+    per-pair numpy reference on random vectors with exact ties: cell 5
+    duplicates cell 2, and the zero vector scores 0 in every cell."""
+    import numpy as np
 
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import pq_topk
+    from etl_lorettoscarpa_1asfb2jf21_spark.functions.vectors import (
+        nearest_cell_batch_udf,
+    )
 
-    rng = random.Random(3)
-    corpus = spark.createDataFrame(
-        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(60)],
-        "c_id long, c_vec array<float>",
+    rng = np.random.default_rng(7)
+    C = rng.standard_normal((5, 6))
+    C = np.vstack([C, C[2], rng.standard_normal((2, 6))])
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    V = np.vstack([rng.standard_normal((300, 6)), np.zeros((1, 6))])
+
+    def nearest(v):
+        n = np.linalg.norm(v)
+        scores = [float(np.dot(v / n if n > 0 else v, c)) for c in C]
+        return scores.index(max(scores))
+
+    want = [nearest(v) for v in V]
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(V)], "i long, v array<double>"
     )
-    queries = spark.createDataFrame(
-        [(100, [1.0] + [0.0] * 7)], "q_id long, q_vec array<float>"
+    kern = nearest_cell_batch_udf([(j, c.tolist()) for j, c in enumerate(C)])
+    got = {r["i"]: r["cell"] for r in df.select("i", kern("v").alias("cell")).collect()}
+    assert [got[i] for i in range(len(V))] == want
+    assert want[-1] == 0 and want.count(2) > 10 and 5 not in want
+
+
+def test_pq_codes_kernel_matches_numpy(spark):
+    """pq_codes_batch_udf (pq_topk's encoder) is the per-subspace argmin
+    of the squared L2 distance to each code, ties toward the lower code.
+    Small-integer vectors and codebooks keep every distance exact in
+    float64 on both sides, so the reference's ties are real ties: code 4
+    duplicates code 1 in every subspace, and many points are equidistant
+    from two distinct codes."""
+    import numpy as np
+
+    from etl_lorettoscarpa_1asfb2jf21_spark.functions.vectors import (
+        pq_codes_batch_udf,
     )
-    kw = dict(k=5, n_subspaces=4, n_codes=8)
-    native = {(r["q_id"], r["c_id"], r["rank"])
-              for r in pq_topk(queries, corpus, use_arrow=False, **kw).collect()}
-    arrow = {(r["q_id"], r["c_id"], r["rank"])
-             for r in pq_topk(queries, corpus, use_arrow=True, **kw).collect()}
-    assert arrow == native
+
+    rng = np.random.default_rng(11)
+    n_sub, sub_dim, n_codes = 3, 2, 6
+    books = rng.integers(-2, 3, size=(n_sub, n_codes, sub_dim)).astype(float)
+    books[:, 4] = books[:, 1]
+    V = rng.integers(-3, 4, size=(300, n_sub * sub_dim)).astype(float)
+
+    def dists(v, s):
+        x = v[s * sub_dim : (s + 1) * sub_dim]
+        return [float(((x - c) ** 2).sum()) for c in books[s]]
+
+    want = [[dists(v, s).index(min(dists(v, s))) for s in range(n_sub)] for v in V]
+    n_ties = sum(
+        sorted(dists(v, s))[0] == sorted(dists(v, s))[1]
+        for v in V
+        for s in range(n_sub)
+    )
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(V)], "i long, v array<double>"
+    )
+    kern = pq_codes_batch_udf([b.tolist() for b in books])
+    got = {r["i"]: list(r["c"]) for r in df.select("i", kern("v").alias("c")).collect()}
+    assert [got[i] for i in range(len(V))] == want
+    assert n_ties > 50 and all(4 not in w for w in want)
 
 
 def test_pagerank_scaled_matches_reference_recurrence(spark):
@@ -1060,6 +1091,96 @@ def test_pq_quantized_recall_and_determinism(spark, sf_small):
     assert len(hits) / len(exact) >= 0.5
 
 
+def test_pq_quantized_int_kernel_matches_expression(spark, sf_small):
+    """pq_topk_quantized (the exact-integer PQ encode kernel in every
+    Lloyd pass and the final encode) returns exactly the results of the
+    native expression path: per-subspace argmin of the packed
+    ``d2*n_codes + code``, truncating integer means, empty codes kept,
+    then the int64 ADC shortlist — restated here in int64 numpy over the
+    same quantized vectors — and the shared exact re-rank. Full
+    result-set equality."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import (
+        _rerank_exact,
+        build_pq_index,
+        pq_topk_quantized,
+        quantize_expr,
+    )
+    from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
+
+    e = load_table(spark, sf_small, "embeddings")
+    queries = e.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    corpus = e.select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+    )
+    n_sub, n_codes, shortlist = 8, 8, 20
+    got = sorted(
+        (r["q_id"], r["c_id"], r["rank"], r["sim"])
+        for r in pq_topk_quantized(
+            queries, corpus, k=5, n_subspaces=n_sub, n_codes=n_codes, n_iter=2,
+            shortlist=shortlist,
+        ).collect()
+    )
+    index = build_pq_index(corpus, n_subspaces=n_sub, n_codes=n_codes, n_iter=2)
+    got_book = sorted(
+        (r["_sub"], r["_cell"], list(r["_cv"])) for r in index["codebook"].collect()
+    )
+    got_codes = {r["c_id"]: list(r["_codes"]) for r in index["codes"].collect()}
+
+    def quantized(df, id_col, vec_col):
+        rows = sorted(
+            df.select(id_col, quantize_expr(vec_col).alias("_qv")).collect(),
+            key=lambda r: r[id_col],
+        )
+        V = np.array([r["_qv"] for r in rows], dtype=np.int64)
+        return [r[id_col] for r in rows], V.reshape(len(rows), n_sub, -1)
+
+    c_ids, V = quantized(corpus, "c_id", "c_vec")
+    q_ids, Q = quantized(queries, "q_id", "q_vec")
+    B = V[:n_codes].transpose(1, 0, 2).copy()  # (sub, code, sub_dim)
+
+    def sub_d2(X):  # (rows, sub, code) exact squared distances
+        return ((X[:, :, None, :] - B[None, :, :, :]) ** 2).sum(axis=3)
+
+    def encode():
+        return (sub_d2(V) * n_codes + np.arange(n_codes)).min(axis=2) % n_codes
+
+    for _ in range(2):
+        codes = encode()
+        for s in range(n_sub):
+            for j in range(n_codes):
+                members = codes[:, s] == j
+                if members.any():
+                    t, n = V[members, s].sum(axis=0), int(members.sum())
+                    B[s, j] = np.where(t < 0, -((-t) // n), t // n)
+    codes = encode()
+    lut = sub_d2(Q)
+    adc = lut[:, np.arange(n_sub)[None, :], codes].sum(axis=2)  # (query, corpus)
+    short = [
+        (qid, c_ids[i])
+        for qi, qid in enumerate(q_ids)
+        for i in sorted(range(len(c_ids)), key=lambda i: (adc[qi, i], c_ids[i]))[
+            :shortlist
+        ]
+    ]
+    want = sorted(
+        (r["q_id"], r["c_id"], r["rank"], r["sim"])
+        for r in _rerank_exact(
+            spark.createDataFrame(short, "q_id long, c_id long"),
+            queries, corpus, 5, "q_id", "q_vec", "c_id", "c_vec",
+        ).collect()
+    )
+    assert got_book == [
+        (s, j, B[s, j].tolist()) for s in range(n_sub) for j in range(n_codes)
+    ]
+    assert got_codes == dict(zip(c_ids, codes.tolist()))
+    assert got == want
+    assert len(got) == 15
+
 def test_centroid_training_sample_covers_sorted_by_domain_frame(spark):
     """train_unit_centroids must draw its bounded sample corpus-wide, not
     from the first rows scanned: on a frame laid out by domain (all of
@@ -1085,105 +1206,6 @@ def test_centroid_training_sample_covers_sorted_by_domain_frame(spark):
     # exactly one unit centroid must sit in the negative orthant
     signs = {c[0] > 0 for _, c in cents}
     assert signs == {True, False}
-
-
-def test_pq_quantized_int_kernel_matches_expression(spark, sf_small):
-    """The exact-integer PQ encode kernel (pq_codes_int_batch_udf) is
-    bit-identical to the native per-subspace min(d2*n_codes + code)
-    expression path — full result-set equality, so the pqq oracle hash
-    is unaffected by the kernel."""
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import (
-        pq_topk_quantized,
-    )
-    from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_small, "embeddings")
-    queries = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    kw = dict(k=5, n_subspaces=8, n_codes=8, n_iter=2, shortlist=20)
-    got_a = sorted(
-        (r["q_id"], r["c_id"], r["rank"], r["sim"])
-        for r in pq_topk_quantized(queries, corpus, use_arrow=True, **kw).collect()
-    )
-    got_e = sorted(
-        (r["q_id"], r["c_id"], r["rank"], r["sim"])
-        for r in pq_topk_quantized(queries, corpus, use_arrow=False, **kw).collect()
-    )
-    assert got_a == got_e
-    assert len(got_a) > 0
-
-
-def test_unrolled_lloyd_matches_kernel_chain(spark, sf_small, monkeypatch):
-    """The all-JVM unrolled Lloyd plan (similarity._unrolled_pq_lloyd —
-    the small-corpus side of the round-13 regime gate) must be
-    bit-identical to the kernel-chain recurrence (the at-scale side):
-    identical coarse centroids + assignment, identical PQ/IVFADC
-    codebooks and code tables. This is the equality the oracle relies on —
-    the gate may switch plans, never values."""
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.similarity import (
-        build_ivfpq_index,
-        build_pq_index,
-        quantized_kmeans_cells,
-    )
-    from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_small, "embeddings").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-
-    def kmeans_snap():
-        c, a = quantized_kmeans_cells(
-            e, n_centroids=8, n_iter=2, with_vec=True
-        )
-        return (
-            sorted((r["_cell"], tuple(r["_cvec"])) for r in c.collect()),
-            sorted(
-                (r["c_id"], r["_cell"], tuple(r["_qv"])) for r in a.collect()
-            ),
-        )
-
-    def pq_snap():
-        idx = build_pq_index(e, n_subspaces=8, n_codes=8, n_iter=2, dim=64)
-        return (
-            sorted(
-                (r["_sub"], r["_cell"], tuple(r["_cv"]))
-                for r in idx["codebook"].collect()
-            ),
-            sorted(
-                (r["c_id"], tuple(r["_codes"])) for r in idx["codes"].collect()
-            ),
-        )
-
-    def ivfpq_snap():
-        idx = build_ivfpq_index(
-            e, n_centroids=4, n_subspaces=8, n_codes=8, n_iter=2, dim=64
-        )
-        return (
-            sorted(
-                (r["_sub"], r["_cell"], tuple(r["_cv"]))
-                for r in idx["codebook"].collect()
-            ),
-            sorted(
-                (r["c_id"], r["_cell"], tuple(r["_codes"]))
-                for r in idx["codes"].collect()
-            ),
-            sorted(
-                (r["_cell"], tuple(r["_cvec"]))
-                for r in idx["centroids"].collect()
-            ),
-        )
-
-    for snap in (kmeans_snap, pq_snap, ivfpq_snap):
-        monkeypatch.setenv("SPARK_GRAFT_KMEANS_UNROLL_MAX", "0")  # kernel chain
-        kern = snap()
-        monkeypatch.setenv("SPARK_GRAFT_KMEANS_UNROLL_MAX", "1000000")  # unrolled
-        unrolled = snap()
-        assert kern == unrolled, f"{snap.__name__} diverged across the gate"
-        assert len(kern[0]) > 0
 
 
 def test_ivfpq_quantized_recall_and_determinism(spark, sf_small):
@@ -1525,6 +1547,44 @@ def test_ann_index_meta_validation(spark, sf_small):
         assert "meta" in loaded
         with pytest.raises(ValueError, match="n_subspaces"):
             s.search_pq_index(q, c, loaded, k=5, n_subspaces=4)
+
+
+EMPTY_CORPUS_ANN = {
+    "ivf": lambda s, q, c: s.ivf_topk_quantized(
+        q, c, k=3, n_centroids=4, nprobe=2, n_iter=2
+    ),
+    "pq": lambda s, q, c: s.pq_topk_quantized(
+        q, c, k=3, n_subspaces=4, n_codes=4, n_iter=2, dim=8
+    ),
+    "ivfpq": lambda s, q, c: s.ivfpq_topk_quantized(
+        q, c, k=3, n_centroids=4, nprobe=2, n_subspaces=4, n_codes=4,
+        n_iter=2, dim=8,
+    ),
+    "ivfbq": lambda s, q, c: s.ivfbq_topk(
+        q, c, k=3, n_centroids=4, nprobe=2, n_iter=2, dim=8
+    ),
+    "semdedup": lambda s, q, c: s.semantic_dedup_quantized(
+        c, "c_id", "c_vec", n_centroids=4, n_iter=2
+    ),
+    "semdedup_incremental": lambda s, q, c: s.semantic_dedup_incremental_quantized(
+        c, q.toDF("c_id", "c_vec"), "c_id", "c_vec", n_centroids=4, n_iter=2
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(EMPTY_CORPUS_ANN))
+def test_quantized_ann_empty_corpus_gives_no_rows(spark, family):
+    """An empty corpus trains no centroids and no codebook: every
+    quantized builder gives an empty index whose search returns 0 rows,
+    and both SemDeDup forms return 0 verdicts (the incremental form has
+    no corpus cell to judge a batch row in)."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators import similarity as s
+
+    corpus = spark.createDataFrame([], "c_id long, c_vec array<float>")
+    queries = spark.createDataFrame(
+        [(1, [0.5] * 8), (2, [-0.5, 0.5] * 4)], "q_id long, q_vec array<float>"
+    )
+    assert EMPTY_CORPUS_ANN[family](s, queries, corpus).collect() == []
 
 
 def test_pq_sparse_codebook_fails_loudly(spark, sf_small):

@@ -263,8 +263,8 @@ def test_pairwise_dedup_stages_are_spread(spark, sf_medium):
 
     e = load_table(spark, sf_medium, "embeddings")
     epairs = embedding_neardup_pairs(
-        e, "vec_id", "embedding", threshold=0.3, use_arrow=False,
-        quantized_verify=True, checkpoint=False,
+        e, "vec_id", "embedding", threshold=0.3, quantized_verify=True,
+        checkpoint=False,
     )
     assert "RoundRobinPartitioning" in plan_of(epairs), (
         "embedding lost its spread"

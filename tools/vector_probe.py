@@ -81,9 +81,7 @@ def main() -> None:
 
     dim = 128
     ops = {
-        "exact (brute force)": lambda q, c: sim.brute_force_topk(
-            q, c, k=K, use_arrow=True
-        ),
+        "exact (brute force)": lambda q, c: sim.brute_force_topk(q, c, k=K),
         "ivf (nc=64, nprobe=16)": lambda q, c: sim.ivf_topk_quantized(
             q, c, k=K, n_centroids=64, nprobe=16
         ),
@@ -224,7 +222,7 @@ def main() -> None:
         for qdf in batches:
             t0 = time.perf_counter()
             exact_rows.append(
-                sim.brute_force_topk(qdf, corpus, k=K, use_arrow=True).collect()
+                sim.brute_force_topk(qdf, corpus, k=K).collect()
             )
             t_ex.append(time.perf_counter() - t0)
         exact_batch = sum(t_ex) / len(t_ex)
@@ -334,7 +332,7 @@ def main() -> None:
     # that decides serving economics at any real query volume
     wide = {}
     for name, fn in (
-        ("exact", lambda q: sim.brute_force_topk(q, cb, k=K, use_arrow=True)),
+        ("exact", lambda q: sim.brute_force_topk(q, cb, k=K)),
         (
             "ivfbq",
             lambda q: sim.search_ivfbq_index(
