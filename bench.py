@@ -9,9 +9,8 @@ $SPARK_GRAFT_REPS (default 1) runs every query N times and records the
 MINIMUM wall — the solo re-measure discipline the sf1 pair tool applies,
 in-harness: a co-tenant CPU burst during one rep can no longer fabricate a
 14x regression for a 0.8 s query (BENCH_r11's x4_bmp_decode read 13.04 s
-in a contaminated window; 0.82 s solo). Min-of-N is the right statistic
-for a deterministic computation on a noisy host: every source of error is
-additive noise, so the minimum is the least-contaminated observation.
+in a contaminated window; 0.82 s solo). The session, warm-up and timed
+loop are tools/runner.py's, shared with the timing tools.
 """
 
 from __future__ import annotations
@@ -19,88 +18,22 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _warm_page_cache(sf_dir: str) -> None:
-    """Touch every parquet byte once, untimed: a cold OS page cache
-    (fresh host, wiped /tmp replica, or a co-tenant having evicted the
-    files) lands entirely on whichever query happens to scan that table
-    first — the round-9 driver record charged x4_video_frames 10.46 s for
-    a read that measures 1.43 s warm. The corpora are orders of magnitude
-    smaller than RAM, so one sequential read pass pins them."""
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                while f.read(1 << 24):
-                    pass
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tools"))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    # more heap than the 8g session default: the bench walks 200+ queries
-    # in ONE JVM, and storage-memory churn from the heavies showed up as
-    # run-to-run variance in the round-9/10 solo re-measures
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-
-    from etl_lorettoscarpa_1asfb2jf21_spark.session import get_spark
+    from runner import reps, session, time_queries, warm
     import __spark_entry__ as entrymod
 
-    spark = get_spark("bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    _warm_page_cache(sf_dir)
-
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = session("bench")
     qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    # warm the JVM + parquet footers with one cheap action (not timed)
-    next(iter(qs.values()))(spark, sf_dir).limit(1).collect()
-    # warm the Arrow python-worker pool the same way (the pool is reused
-    # across queries; its one-time fork+import cost is session setup, not
-    # any single query's work)
-    from pyspark.sql import functions as F
-    from etl_lorettoscarpa_1asfb2jf21_spark.functions.vectors import cosine_batch_udf
-
-    cos = cosine_batch_udf()
-    spark.range(0, 10_000, 1, int(cpus)).select(
-        cos(F.array(F.lit(1.0)), F.array(F.lit(1.0)))
-    ).write.format("noop").mode("overwrite").save()
-
-    import gc
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "1")))
-    errors: dict[str, str] = {}
-    for name, fn in qs.items():
-        best: float | None = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            except Exception as exc:  # noqa: BLE001 — one bad query must not lose the whole record
-                msg = str(exc).splitlines() or [type(exc).__name__]
-                errors[name] = msg[0][:200]
-                break
-            # each query run is an independent measurement: drop cached
-            # blocks the query pinned (cache()/localCheckpoint in
-            # iterative ops) so later runs aren't taxed by earlier runs'
-            # storage-memory + GC churn
-            spark.catalog.clearCache()
-            gc.collect()
-        if best is not None:
-            timings[name] = round(best, 4)
+    warm(spark, sf_dir, qs)
+    times, errors = time_queries(spark, sf_dir, qs, list(qs), reps())
+    timings = {name: t["total_s"] for name, t in times.items()}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -120,8 +53,7 @@ def main() -> None:
     }
     if errors:
         full["errors"] = errors
-    here = os.path.dirname(os.path.abspath(__file__))
-    full_path = os.path.join(here, "BENCH_full_local.json")
+    full_path = os.path.join(HERE, "BENCH_full_local.json")
     with open(full_path, "w", encoding="utf-8") as f:
         json.dump(full, f)
     top = dict(
@@ -137,13 +69,12 @@ def main() -> None:
         )
         if q in timings
     }
-    full["reps"] = reps
     compact = {
         "metric": "total_query_wall_time",
         "value": full["value"],
         "unit": "sec",
         "sf": sf_val,
-        "reps": reps,
+        "reps": reps(),
         "n_queries": len(timings),
         "n_errors": len(errors),
         "queries": {**headline, **top},

@@ -186,8 +186,8 @@ def cosine_batch_udf():
     functions (zip_with/aggregate) evaluate interpreted per element, ~100
     ns/step; numpy does the same dot as a BLAS-backed batch operation.
     No engine plan uses it (the cosine operators fold natively, so their
-    plans stay JVM-side and twin-checkable); bench.py, tools/ab_rounds.py
-    and tools/profile_query.py run it once to warm the Arrow worker.
+    plans stay JVM-side and twin-checkable); tools/runner.py runs it once
+    to warm the Arrow worker.
     """
     import numpy as np
     import pandas

@@ -512,14 +512,8 @@ def ngram_jaccard_pairs(
     strategy: str = "auto",
     auto_block_cap: int = 1024,
     checkpoint: bool = True,
-    return_candidates: bool = False,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard within a blocking key (e.g. lang).
-
-    ``return_candidates=True`` returns the PRE-VERIFY candidate pair set
-    (id_a, id_b) instead of the verified output — the instrumentation
-    hook the scale witnesses use to measure candidate mass against true
-    pair mass (tools/sf10_witness.py). Production callers never set it.
 
     Deterministic and oracle-checkable (unlike the hash-based strategies).
     Returns id_a, id_b, jaccard (pairs meeting the threshold). All
@@ -602,18 +596,13 @@ def ngram_jaccard_pairs(
             F.col("r._sz") >= F.lit(threshold) * F.col("l._sz")
         )
         inter = F.size(F.array_intersect(F.col("l._g"), F.col("r._g"))).cast("double")
-        joined = l.join(
-            r,
-            (F.col("l._blk") == F.col("r._blk"))
-            & (F.col("l._id") < F.col("r._id"))
-            & size_bound,
-        )
-        if return_candidates:
-            return joined.select(
-                F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b")
-            )
         return (
-            joined
+            l.join(
+                r,
+                (F.col("l._blk") == F.col("r._blk"))
+                & (F.col("l._id") < F.col("r._id"))
+                & size_bound,
+            )
             .withColumn("jaccard", inter / (F.col("l._sz") + F.col("r._sz") - inter))
             .filter(F.col("jaccard") >= threshold)
             .select(
@@ -706,8 +695,6 @@ def ngram_jaccard_pairs(
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .distinct()
     )
-    if return_candidates:
-        return cand
     return _verify(cand)
 
 

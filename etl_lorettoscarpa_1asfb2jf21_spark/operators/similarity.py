@@ -1118,8 +1118,9 @@ def quantized_kmeans_cells(
 # build_*/search_* halves, so served results are bit-identical to the
 # oracle-checked monolithic form. An index is a dict of plain DataFrames
 # keyed by small stable names; save_ann_index/load_ann_index round-trip
-# it through parquet. tools/vector_probe.py measures the build/serve
-# split and the batch-count crossover vs the exact scan (SCALING.md).
+# it through parquet. tools/vector_probe.py (retired; last in commit
+# ef19912) measured the build/serve split and the batch-count crossover
+# vs the exact scan (SCALING.md).
 
 
 def _rerank_exact(
@@ -1451,7 +1452,7 @@ def ivf_topk_quantized(
     oracle-checkable). Scoring every probed candidate with the
     interpreted cosine fold instead was the measured wall-time cliff at
     real vector scale: 322 s -> ~8 s at 200k x 128-d, nprobe/n_centroids
-    = 16/64 (tools/vector_probe.py).
+    = 16/64 (tools/vector_probe.py, retired; last in commit ef19912).
 
     Scale design: k-means here trains DISTRIBUTED on the full corpus (vs
     train_unit_centroids' bounded-sample driver Lloyd) — per iteration one

@@ -3,13 +3,13 @@
     python tools/ab_rounds.py <dir_a> <dir_b> <reps> <out.json> q1 [q2 ...]
 
 Each rep launches one fresh process per side (cold JVM, same discipline as
-the driver's bench) that times the listed queries with the noop sink at
-$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]; sides alternate A,B,A,B,...
-inside the SAME host window so co-tenant noise hits both. Records per-side
-min-of-N per query — the statistic bench.py's $SPARK_GRAFT_REPS uses.
-
-Built for round-13 verdict item #2: prove (or fix) the four driver-regressed
-rows by measuring HEAD against the round-11 snapshot in one window.
+bench.py) running this checkout's tools/runner.py against that
+side's engine (``--repo``), at $SPARK_GRAFT_SF_DIR on
+local[$SPARK_GRAFT_CPUS]. Both sides run inside the SAME host window so
+co-tenant noise hits both, and the side that runs first alternates from
+rep to rep. Records, per side and query, every rep's wall, the min, the
+quartiles and the median, and per query the fraction of reps side B wins
+(ties count for neither side).
 """
 
 from __future__ import annotations
@@ -19,80 +19,73 @@ import os
 import subprocess
 import sys
 
-RUNNER = r"""
-import json, os, sys, time
-repo = sys.argv[1]
-sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-names = sys.argv[2:]
-sys.path.insert(0, repo)
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-from etl_lorettoscarpa_1asfb2jf21_spark.session import get_spark
-import importlib.util
-spec = importlib.util.spec_from_file_location("entry_ab", os.path.join(repo, "__spark_entry__.py"))
-entry = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(entry)
-spark = get_spark("ab-rounds", master=f"local[{cpus}]")
-spark.sparkContext.setLogLevel("ERROR")
-qs = entry.queries()
-# same warm discipline as bench.py: one cheap action + arrow pool
-next(iter(qs.values()))(spark, sf_dir).limit(1).collect()
-from pyspark.sql import functions as F
-from etl_lorettoscarpa_1asfb2jf21_spark.functions.vectors import cosine_batch_udf
-cos = cosine_batch_udf()
-spark.range(0, 10000, 1, int(cpus)).select(
-    cos(F.array(F.lit(1.0)), F.array(F.lit(1.0)))
-).write.format("noop").mode("overwrite").save()
-import gc
-out = {}
-for name in names:
-    t0 = time.perf_counter()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    out[name] = round(time.perf_counter() - t0, 4)
-    spark.catalog.clearCache()
-    gc.collect()
-print("ABJSON:" + json.dumps(out))
-"""
+import numpy as np
+
+from runner import cpus
+
+RUNNER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "runner.py")
 
 
 def run_side(repo: str, names: list[str]) -> dict[str, float]:
+    """One fresh process timing ``names`` once each with ``repo``'s engine."""
     res = subprocess.run(
-        [sys.executable, "-c", RUNNER, repo, *names],
-        capture_output=True, text=True, timeout=3600,
+        [sys.executable, RUNNER, "--repo", repo, *names],
+        capture_output=True, text=True, timeout=3600, cwd=repo,
+        env={**os.environ, "SPARK_GRAFT_REPS": "1"},
     )
-    for line in res.stdout.splitlines():
-        if line.startswith("ABJSON:"):
-            return json.loads(line[len("ABJSON:"):])
-    raise RuntimeError(f"no ABJSON from {repo}: {res.stdout[-500:]} {res.stderr[-2000:]}")
+    lines = res.stdout.strip().splitlines()
+    if res.returncode or not lines:
+        raise RuntimeError(f"runner failed on {repo}: {res.stdout[-500:]} {res.stderr[-2000:]}")
+    got = json.loads(lines[-1])
+    if got["errors"]:
+        raise RuntimeError(f"queries failed on {repo}: {got['errors']}")
+    return {n: t["total_s"] for n, t in got["queries"].items()}
 
 
 def main() -> None:
     dir_a, dir_b, reps_s, out_path = sys.argv[1:5]
     names = sys.argv[5:]
     reps = int(reps_s)
+    sides = {"a": os.path.abspath(dir_a), "b": os.path.abspath(dir_b)}
     runs: dict[str, list[dict[str, float]]] = {"a": [], "b": []}
+    first = []
     for i in range(reps):
-        for side, repo in (("a", dir_a), ("b", dir_b)):
-            got = run_side(repo, names)
+        order = ("a", "b") if i % 2 == 0 else ("b", "a")
+        first.append(order[0])
+        for side in order:
+            got = run_side(sides[side], names)
             runs[side].append(got)
-            print(f"rep {i} side {side} ({repo}): {got}", flush=True)
+            print(f"rep {i} side {side} ({sides[side]}): {got}", flush=True)
+
+    def stats(xs: list[float]) -> dict[str, float]:
+        q1, med, q3 = np.percentile(xs, [25, 50, 75])
+        return {"min": min(xs), "q1": round(q1, 4), "median": round(med, 4),
+                "q3": round(q3, 4)}
+
     rec = {
-        "dir_a": dir_a, "dir_b": dir_b, "reps": reps,
+        "dir_a": sides["a"], "dir_b": sides["b"], "reps": reps,
         "sf_dir": os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": cpus(),
+        "first": first,
         "runs": runs,
-        "min": {
-            side: {n: min(r[n] for r in rs) for n in names}
+        "stats": {
+            side: {n: stats([r[n] for r in rs]) for n in names}
             for side, rs in runs.items()
         },
+        "b_win_frac": {
+            n: sum(b[n] < a[n] for a, b in zip(runs["a"], runs["b"])) / reps
+            for n in names
+        },
     }
-    rec["ratio_b_over_a_min"] = {
-        n: round(rec["min"]["b"][n] / rec["min"]["a"][n], 3) for n in names
+    rec["ratio_b_over_a_median"] = {
+        n: round(rec["stats"]["b"][n]["median"] / rec["stats"]["a"][n]["median"], 3)
+        for n in names
     }
     with open(out_path, "w") as f:
         json.dump(rec, f, indent=1)
-    print(json.dumps(rec["min"], indent=1))
-    print("ratios (b/a):", rec["ratio_b_over_a_min"])
+    print(json.dumps(rec["stats"], indent=1))
+    print("ratios (b/a, median):", rec["ratio_b_over_a_median"])
+    print("b wins:", rec["b_win_frac"])
 
 
 if __name__ == "__main__":

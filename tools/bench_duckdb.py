@@ -16,12 +16,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from runner import duckdb_views
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -30,10 +27,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duckdb_views(con, sf_dir)
 
     timings: dict[str, float] = {}
     for name, sql in entrymod.oracle_sql().items():

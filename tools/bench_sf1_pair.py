@@ -71,35 +71,16 @@ DEFAULT_NAMES = [
     "x2_topk_cosine",
 ]
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _warm_cache(sf_dir: str) -> None:
-    """Touch every parquet byte once: /tmp replicas surviving from an
-    earlier session are COLD on disk and the first reader once measured
-    161 s vs 10.5 s warm for the same scan."""
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                while f.read(1 << 24):
-                    pass
-
 
 def duckdb_one(sf_dir: str, name: str) -> None:
     """Run ONE oracle twin and print its wall time (subprocess target)."""
     import duckdb
 
     import __spark_entry__ as entrymod
+    from runner import duckdb_views
 
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duckdb_views(con, sf_dir)
     sql = entrymod.oracle_sql()[name]
     t0 = time.perf_counter()
     con.execute(sql).fetchall()
@@ -115,30 +96,16 @@ def main() -> None:
     timeout = int(sys.argv[2]) if len(sys.argv) > 2 else 900
     names = sys.argv[3:] or DEFAULT_NAMES
 
-    _warm_cache(sf_dir)
-
     # ---------------- engine phase (one warm session, noop sink)
-    # the ~sf1 heavies churn storage memory in one JVM — same 24g rule
-    # as bench.py (8g default showed GC-driven 2-3x run-to-run variance)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    from etl_lorettoscarpa_1asfb2jf21_spark.session import get_spark
+    from runner import session, time_queries, warm
     import __spark_entry__ as entrymod
 
+    spark = session("bench_sf1_pair")
     qs = entrymod.queries()
-    spark = get_spark("bench_sf1_pair", master="local[32]")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs[names[0]](spark, sf_dir).limit(1).collect()  # JVM/footer warmup
-
-    import gc
-
-    engine: dict[str, float] = {}
-    for name in names:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        engine[name] = round(time.perf_counter() - t0, 2)
-        print(f"engine {name}: {engine[name]}s", flush=True)
-        spark.catalog.clearCache()
-        gc.collect()
+    warm(spark, sf_dir, qs)
+    times, errors = time_queries(spark, sf_dir, qs, names, 1)
+    engine = {name: round(t["total_s"], 2) for name, t in times.items()}
+    print(f"engine: {engine} errors: {errors}", flush=True)
     spark.stop()
 
     # ---------------- DuckDB phase (one subprocess per query, hard cap)
@@ -165,6 +132,7 @@ def main() -> None:
         "sf_dir": sf_dir,
         "duckdb_timeout_sec": timeout,
         "engine": engine,
+        "engine_errors": errors,
         "duckdb": duck,
     }
     with open(os.path.join(ROOT, "BENCH_sf1_pair.json"), "w", encoding="utf-8") as f:

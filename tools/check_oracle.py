@@ -17,6 +17,9 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
+sys.path.insert(0, str(Path(__file__).resolve().parent))
+from runner import cpus, duckdb_views  # noqa: E402
+
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
@@ -62,13 +65,7 @@ def check(spark, sf_dir: str, names=()) -> list[str]:
     import __spark_entry__ as entrymod
 
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    duckdb_views(con, sf_dir)
 
     only = set(names)
     qs = entrymod.queries()
@@ -124,7 +121,7 @@ def main() -> int:
         from pyspark.sql import SparkSession
 
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(f"local[{cpus()}]")
             .appName("oracle-check-plain")
             .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
             .config("spark.ui.enabled", "false")

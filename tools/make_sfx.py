@@ -13,7 +13,8 @@ when present); correctness gates always run on the driver's own parquet.
 Vector-heavy profile (`--vectors`): a clustered embedding corpus at a
 REAL ANN scale (default 2M x 128-d; the base testdata tops out at 200k x
 64-d) for stressing the IVF/PQ/IVF-PQ family — tools/vector_probe.py
-measures wall time + recall@10 on it and records the rows in SCALING.md.
+(retired; last in commit ef19912) measured wall time + recall@10 on it
+for the "Vector-heavy ANN profile" section of SCALING.md.
 Vectors are drawn around n_clusters shared centers (mixture structure —
 what real embedding corpora look like, and what gives a recall gate
 meaning: a corpus with NO neighbor structure has no recall to preserve),
@@ -28,6 +29,8 @@ import os
 import sys
 
 import duckdb
+
+from runner import TABLES
 
 OFF = 10**9
 
@@ -126,10 +129,7 @@ def main() -> None:
         "embeddings",
         f"t.vec_id + c.i * {OFF} AS vec_id, t.* EXCLUDE (vec_id)",
     )
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLES:
         nrows = con.execute(
             f"SELECT count(*) FROM read_parquet('{dst}/{t}.parquet')"
         ).fetchone()[0]

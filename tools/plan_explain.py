@@ -1,9 +1,9 @@
 """Dump `.explain("formatted")` for named catalog queries to files.
 
-Used to produce the committed plan evidence (plans/r12/<query>_{before,after}.txt):
+Used to produce the committed plan evidence (records/plans/r12/<query>_{before,after}.txt):
 
     python tools/plan_explain.py <out_dir> <suffix> <query> [<query> ...]
-    python tools/plan_explain.py plans/r12 after tp7_decontaminate gr2_triangle_count
+    python tools/plan_explain.py records/plans/r12 after tp7_decontaminate gr2_triangle_count
 
 Runs each queries() entry against $SPARK_GRAFT_SF_DIR (default sf0.01 — the
 plan shape, join strategies and pushed filters are what is audited, not the

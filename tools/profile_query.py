@@ -23,35 +23,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-
-    from etl_lorettoscarpa_1asfb2jf21_spark.session import get_spark
+    from runner import session, time_queries, warm
     import __spark_entry__ as entrymod
 
-    spark = get_spark(
-        "profile",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    names = sys.argv[1:]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = session("profile", extra_conf={"spark.ui.enabled": "true"})
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
-
     qs = entrymod.queries()
-    # warm exactly as bench.py does: parquet footers + python worker pool
-    next(iter(qs.values()))(spark, sf_dir).limit(1).collect()
-    from pyspark.sql import functions as F
-    from etl_lorettoscarpa_1asfb2jf21_spark.functions.vectors import cosine_batch_udf
-
-    cos = cosine_batch_udf()
-    spark.range(0, 10_000, 1, int(cpus)).select(
-        cos(F.array(F.lit(1.0)), F.array(F.lit(1.0)))
-    ).write.format("noop").mode("overwrite").save()
-
-    import gc
+    warm(spark, sf_dir, qs)
 
     def stages() -> list:
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages?status=complete") as r:
@@ -60,16 +41,12 @@ def main() -> None:
     for name in names:
         before_ids = {s["stageId"] for s in stages()}
         spark.sparkContext.setJobDescription(name)
-        t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        t_build = time.time() - t0
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
+        times, errors = time_queries(spark, sf_dir, qs, [name], 1)
         spark.sparkContext.setJobDescription(None)
-        # bench.py discipline: drop blocks the query pinned so the NEXT
-        # profiled query isn't taxed by this one's storage/GC churn
-        spark.catalog.clearCache()
-        gc.collect()
+        if errors:
+            print(f"\n=== {name}: failed: {errors[name]}")
+            continue
+        t_build, wall = times[name]["build_s"], times[name]["total_s"]
 
         new = [s for s in stages() if s["stageId"] not in before_ids]
         new.sort(key=lambda s: s["firstTaskLaunchedTime"])

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -87,7 +86,7 @@ HEADLINE = [
 
 
 def main() -> None:
-    from etl_lorettoscarpa_1asfb2jf21_spark.session import get_spark
+    from runner import cpus, reps, session, time_queries, warm
     import __spark_entry__ as entrymod
 
     sfs = list(SFS)
@@ -97,35 +96,22 @@ def main() -> None:
     if have_sf1:
         sfs.append(SF1)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("scaling-probe", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("scaling-probe")
     qs = entrymod.queries()
-
-    # warm: run each headline query once at the smallest sf (codegen + JVM)
-    for name in HEADLINE:
-        qs[name](spark, sfs[0]).write.format("noop").mode("overwrite").save()
-
-    import gc
+    for sf in sfs:
+        warm(spark, sf, qs)
+    # warm codegen: run each headline query once at the smallest sf
+    time_queries(spark, sfs[0], qs, HEADLINE, 1)
 
     # SPARK_GRAFT_REPS > 1 takes the MIN over that many reps per cell —
     # the standard defense when the host has bursty co-tenant load (a
     # single-shot cell can embed a 3-10x spike that reads as plan-level
     # growth; min-of-N recovers the uncontended time).
-    reps = int(os.environ.get("SPARK_GRAFT_REPS", "1"))
-    results: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        times = []
-        for sf in sfs:
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                qs[name](spark, sf).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-                gc.collect()
-            times.append(best)
-        results[name] = times
+    def cell(name: str, sf: str) -> float:
+        times, _ = time_queries(spark, sf, qs, [name], reps())
+        return times[name]["total_s"] if name in times else float("nan")
+
+    results = {name: [cell(name, sf) for sf in sfs] for name in HEADLINE}
 
     # Output-mass witness for x1_dup_spans_maximal: record the TRUE
     # span-row count at the two largest points so the footnote's
@@ -147,9 +133,9 @@ def main() -> None:
     out = [
         f"# SCALING — headline-query wall time across a {span} data range",
         "",
-        "Auto-generated by `tools/scaling_probe.py` (local[{}], warm JVM,".format(cpus),
+        "Auto-generated by `tools/scaling_probe.py` (local[{}], warm JVM,".format(cpus()),
         "noop sink{}). `growth` = t(largest)/t(sf0.001) over {} more data —".format(
-            f", min of {reps} reps/cell" if reps > 1 else "", span
+            f", min of {reps()} reps/cell" if reps() > 1 else "", span
         ),
         "values far below the data ratio mean the plan amortizes fixed costs",
         "and the marginal cost of data is sub-linear at this scale; values",
@@ -258,9 +244,10 @@ def main() -> None:
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"
     )
-    # Preserve the other tools' marker-delimited sections: this tool owns
-    # the main table and footnotes; vector_probe.py and
-    # adversarial_probe.py each own (and idempotently rewrite) theirs.
+    # Preserve the marker-delimited sections: this tool owns the main
+    # table and footnotes; the other two are the committed records of
+    # vector_probe.py and adversarial_probe.py, retired tools whose last
+    # commit is ef19912.
     kept = ""
     if os.path.exists(path):
         prev = open(path, encoding="utf-8").read()

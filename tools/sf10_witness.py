@@ -3,19 +3,18 @@ model (round-11 verdict #4).
 
 x1_dup_clusters' ~sf1 402 s is OUTPUT-bound (60.8M true near-dup pairs at
 threshold 0.2), not plan-bound. This tool builds a 10× doc-only replica
-of the ~sf1 documents table (same key-offset + ' copyN' suffix scheme as
-tools/make_sfx.py, so near-dup families grow the same way a recrawled
-corpus grows them) and measures the three dedup-ladder heavies once at
-~sf10 (500k docs), WITH output-mass accounting: the verified-pair count
-and the cluster count are recorded next to the wall time, so the
-pairs-vs-docs growth factor is a measured number, not an argument. No
-DuckDB pair — its recursive-CTE twins already DNF (>900 s) at ~sf1.
+of the ~sf1 documents table and times the closure-ladder heavies (NAMES)
+once at ~sf10 (500k docs) through tools/runner.py: noop sink, warm
+session, one run per query. The round-12 output-mass accounting
+(candidate and true-pair counts at sf1 and sf10) is the record in
+SF10_WITNESS.json as of commit ef19912. No DuckDB pair —
+its recursive-CTE twins already DNF (>900 s) at ~sf1.
 
     python tools/sf10_witness.py [sf1_dir] [sf10_dir] [budget_sec]
 
 Writes SF10_WITNESS.json at the repo root and prints one JSON line.
 ``budget_sec`` (default 5400) caps EACH query; a query over budget is
-recorded as DNF with the elapsed time — honest, like the DuckDB DNFs.
+recorded as DNF, honest like the DuckDB DNFs.
 Run SOLO.
 """
 
@@ -24,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+import threading
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -79,161 +78,53 @@ def build_docs_replica(sf1_dir: str, sf10_dir: str) -> None:
     print(f"built {dst}: {n} docs", flush=True)
 
 
+def _budgeted(spark, fn, budget_s: int):
+    """``fn()`` on a daemon thread under a wall budget: its result, or
+    None after cancelling every job once the budget is spent."""
+    out: dict = {}
+    th = threading.Thread(target=lambda: out.update(r=fn()), daemon=True)
+    th.start()
+    th.join(budget_s)
+    if th.is_alive():
+        spark.sparkContext.cancelAllJobs()
+        th.join(60)
+        return None
+    return out["r"]
+
+
 def main() -> None:
+    from runner import session, time_queries, warm, warm_page_cache
+    import __spark_entry__ as entrymod
+
     sf1_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1"
     sf10_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_sf10"
     budget = int(sys.argv[3]) if len(sys.argv) > 3 else 5400
 
     build_docs_replica(sf1_dir, sf10_dir)
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entrymod
-    from etl_lorettoscarpa_1asfb2jf21_spark.session import get_spark
-
-    spark = get_spark("sf10_witness", master="local[32]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("sf10_witness")
     qs = entrymod.queries()
-
+    # the sf10 dir holds documents only; the catalog warm-up needs sf1's tables
+    warm(spark, sf1_dir, qs)
+    warm_page_cache(sf10_dir)
     record: dict = {
         "metric": "sf10_witness",
         "sf10_dir": sf10_dir,
         "budget_sec": budget,
         "rows": {},
     }
-
-    # ---- output-mass accounting at both scales: verified near-dup pairs
-    # (the x1_ngram_jaccard set all three queries consume) and doc counts
-    from etl_lorettoscarpa_1asfb2jf21_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-    from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
-
-    # sf1's pair mass is already a committed measurement (~60.8M true
-    # pairs, SCALING.md footnote); only the sf10 point is new.
-    record["sf1_docs"] = 50_000
-    record["sf1_true_pairs_approx"] = 60_800_000
-    record["prefix_order"] = "rare-first (df-ascending, Bayardo) — round-12 fix"
-
-    def _budgeted_count(df, budget_s: int):
-        """count() under a wall budget; (n, sec) or (None, sec) on DNF,
-        (None, 'err: ...') on failure — the inline pairs count used to be
-        unprotected, so a disk-full abort lost the whole record."""
-        import threading
-
-        out: dict = {}
-
-        def run():
-            try:
-                out["n"] = df.count()
-            except Exception as exc:  # noqa: BLE001
-                out["err"] = str(exc)[:200]
-
-        t0 = time.perf_counter()
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-        th.join(budget_s)
-        dt = round(time.perf_counter() - t0, 1)
-        if th.is_alive():
-            spark.sparkContext.cancelAllJobs()
-            th.join(60)
-            return None, f"DNF(>{budget_s}s)"
-        if "err" in out:
-            return None, f"err after {dt}s: {out['err']}"
-        return out["n"], dt
-
-    def _cand(d):
-        docs = load_table(spark, d, "documents")
-        return ngram_jaccard_pairs(
-            docs, "text", "doc_id", "source", n=3, threshold=0.2,
-            return_candidates=True,
-        )
-
-    # sf1 candidate mass — the linearity DENOMINATOR: the rare-first
-    # claim is candidate mass ∝ corpus (true-pair mass), so the sf10
-    # number only means something next to the sf1 number.
-    n1, sec1 = _budgeted_count(_cand(sf1_dir), budget)
-    record["sf1_candidates"] = n1
-    record["sf1_candidates_sec"] = sec1
-    print(f"sf1: {n1} candidates ({sec1}s)", flush=True)
-
-    # sf10 candidate mass (env-injectable: a prior same-code measurement
-    # can be carried in so a relaunch need not repeat the 35-minute count)
-    pre = os.environ.get("SPARK_GRAFT_SF10_CAND")
-    if pre:
-        record["sf10_candidates"] = int(pre)
-        record["sf10_candidates_sec"] = float(
-            os.environ.get("SPARK_GRAFT_SF10_CAND_SEC", "0")
-        )
-        record["sf10_candidates_note"] = os.environ.get(
-            "SPARK_GRAFT_SF10_CAND_NOTE", "carried from a prior run of this code"
-        )
-    else:
-        n10, sec10 = _budgeted_count(_cand(sf10_dir), budget)
-        record["sf10_candidates"] = n10
-        record["sf10_candidates_sec"] = sec10
-    print(f"sf10: {record['sf10_candidates']} candidates", flush=True)
-    if record.get("sf1_candidates") and record.get("sf10_candidates"):
-        record["cand_growth_x"] = round(
-            record["sf10_candidates"] / record["sf1_candidates"], 2
-        )
-
-    record["sf10_docs"] = 500_000
-    # full verified-pairs count at sf10: gated — the exact verify join
-    # ships each candidate's gram array (~2 KB) through the id-keyed
-    # exchange, ~8 TB of shuffle at 4.2B candidates, beyond this single
-    # host's disk (a 1000-executor cluster with per-node NVMe shuffles
-    # this fine; the sf1 run of the same plan completes in ~260 s).
-    if os.environ.get("SPARK_GRAFT_WITNESS_PAIRS", "1") == "0":
-        record["sf10_pairs_count"] = os.environ.get(
-            "SPARK_GRAFT_WITNESS_PAIRS_NOTE",
-            "skipped: verify shuffle mass exceeds single-host disk",
-        )
-    else:
-        docs10 = load_table(spark, sf10_dir, "documents")
-        n_pairs, secp = _budgeted_count(
-            ngram_jaccard_pairs(
-                docs10, "text", "doc_id", "source", n=3, threshold=0.2
-            ),
-            budget,
-        )
-        record["sf10_true_pairs"] = n_pairs
-        record["sf10_pairs_count_sec"] = secp
-        if n_pairs and record.get("sf10_candidates"):
-            record["sf10_cand_over_true"] = round(
-                record["sf10_candidates"] / n_pairs, 2
-            )
-        print(f"sf10: {n_pairs} true pairs ({secp}s)", flush=True)
-
     for name in NAMES:
-        t0 = time.perf_counter()
-        try:
-            import threading
-
-            out: dict = {}
-
-            def run():
-                try:
-                    out["n"] = qs[name](spark, sf10_dir).count()
-                except Exception as exc:  # noqa: BLE001
-                    out["err"] = str(exc)[:200]
-
-            th = threading.Thread(target=run, daemon=True)
-            th.start()
-            th.join(budget)
-            dt = time.perf_counter() - t0
-            if th.is_alive():
-                spark.sparkContext.cancelAllJobs()
-                record["rows"][name] = {"sec": f"DNF(>{budget}s)"}
-                th.join(60)
-            elif "err" in out:
-                record["rows"][name] = {"sec": round(dt, 1), "err": out["err"]}
-            else:
-                record["rows"][name] = {"sec": round(dt, 1), "out_rows": out["n"]}
-        except Exception as exc:  # noqa: BLE001
-            record["rows"][name] = {"sec": "ERR", "err": str(exc)[:200]}
-        print(f"{name}: {record['rows'][name]}", flush=True)
+        got = _budgeted(
+            spark, lambda: time_queries(spark, sf10_dir, qs, [name], 1), budget
+        )
+        if got is None:
+            row = {"sec": f"DNF(>{budget}s)"}
+        elif name in got[1]:
+            row = {"err": got[1][name]}
+        else:
+            row = {"sec": round(got[0][name]["total_s"], 1)}
+        record["rows"][name] = row
+        print(f"{name}: {row}", flush=True)
 
     with open(os.path.join(ROOT, "SF10_WITNESS.json"), "w", encoding="utf-8") as f:
         json.dump(record, f, indent=1)
