@@ -687,7 +687,9 @@ def gr1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     items of one order, src part → next part), 5 fixed iterations in scaled
     integer arithmetic — iterative graph analytics with a FULL cross-engine
     oracle (operators/graph.py pagerank_scaled; float PageRank could only
-    ever get a rows-only check)."""
+    ever get a rows-only check). The five steps form one lazy plan over
+    edges checkpointed once, so building the query runs only that
+    checkpoint's shuffle stages and the steps run at the caller's action."""
     from .operators.graph import pagerank_scaled
 
     li = load_table(spark, sf_dir, "lineitem").select(

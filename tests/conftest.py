@@ -57,6 +57,30 @@ def union_find_components():
     return components
 
 
+@pytest.fixture(scope="session")
+def pagerank_recurrence():
+    """Sequential oracle for scaled-integer PageRank:
+    ``f(edges, n_iter, damping_pct=85, scale=10**9)`` -> {node: rank} for
+    every endpoint, by the same floor-division recurrence, dangling mass
+    dropped. Duplicate edges count once per copy, as in the engine."""
+
+    def ranks(edges, n_iter, damping_pct=85, scale=10**9):
+        nodes = {x for e in edges for x in e}
+        out: dict[int, int] = {}
+        for s, _ in edges:
+            out[s] = out.get(s, 0) + 1
+        rank = dict.fromkeys(nodes, scale)
+        base = scale * (100 - damping_pct) // 100
+        for _ in range(n_iter):
+            s = dict.fromkeys(nodes, 0)
+            for u, v in edges:
+                s[v] += rank[u] // out[u]
+            rank = {v: base + (damping_pct * s[v]) // 100 for v in nodes}
+        return rank
+
+    return ranks
+
+
 @pytest.fixture
 def jobs_during(spark):
     """``jobs_during(fn)`` runs ``fn`` under a fresh job group. Returns

@@ -937,35 +937,63 @@ def test_pq_codes_kernel_matches_numpy(spark):
     assert n_ties > 50 and all(4 not in w for w in want)
 
 
-def test_pagerank_scaled_matches_reference_recurrence(spark):
+PAGERANK_EDGES = [(1, 2), (1, 3), (2, 3), (4, 2), (4, 1)]
+
+
+def test_pagerank_scaled_matches_reference_recurrence(spark, pagerank_recurrence):
     """pagerank_scaled reproduces the exact integer recurrence on a small
-    directed graph (computed here in plain Python), including a dangling
-    node (3 has no out-edges) and a node with no in-edges (1)."""
+    directed graph (computed in plain Python), including a dangling node
+    (3 has no out-edges) and a node with no in-edges (1)."""
     from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import pagerank_scaled
 
-    edge_list = [(1, 2), (1, 3), (2, 3), (4, 2), (4, 1)]
-    edges = spark.createDataFrame(edge_list, ["src", "dst"])
-
-    scale, d, n_iter = 10**9, 85, 5
-    nodes = sorted({u for e in edge_list for u in e})
-    out = {}
-    for s, _ in edge_list:
-        out[s] = out.get(s, 0) + 1
-    rank = {v: scale for v in nodes}
-    base = scale * (100 - d) // 100
-    for _ in range(n_iter):
-        s = {v: 0 for v in nodes}
-        for u, v in edge_list:
-            s[v] += rank[u] // out[u]
-        rank = {v: base + (d * s[v]) // 100 for v in nodes}
-
+    edges = spark.createDataFrame(PAGERANK_EDGES, ["src", "dst"])
     got = {
         r["node"]: r["rank"]
-        for r in pagerank_scaled(edges, n_iter=n_iter, scale=scale).collect()
+        for r in pagerank_scaled(edges, n_iter=5, scale=10**9).collect()
     }
-    assert got == rank
+    assert got == pagerank_recurrence(PAGERANK_EDGES, 5, scale=10**9)
     # dropped dangling mass: totals strictly below n*scale but positive
-    assert 0 < sum(got.values()) < len(nodes) * scale
+    assert 0 < sum(got.values()) < len(got) * 10**9
+
+
+def test_pagerank_scaled_leaves_no_cached_frames(spark):
+    """The loop-invariant edges are materialised by a lazy local
+    checkpoint, not by cache(): after the result is collected, nothing
+    stays pinned in the session's cache."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import pagerank_scaled
+
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(PAGERANK_EDGES, ["src", "dst"])
+    assert len(pagerank_scaled(edges, n_iter=5).collect()) == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pagerank_scaled_job_shape(spark, jobs_during, pagerank_recurrence):
+    """Every Jacobi step is part of one lazy plan: building the query
+    launches the same jobs for 2 steps as for 8, none per step, and 5
+    steps, collect included, stay within a fixed job budget. Every job
+    carries the caller's job group."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import pagerank_scaled
+
+    edges = spark.createDataFrame(PAGERANK_EDGES, ["src", "dst"])
+    build = {}
+    for n_iter in (2, 8):
+        _, launched, grouped = jobs_during(
+            lambda: pagerank_scaled(edges, n_iter=n_iter)
+        )
+        assert launched == grouped
+        build[n_iter] = len(launched)
+    assert build[2] == build[8], build
+
+    rows, launched, grouped = jobs_during(
+        lambda: pagerank_scaled(edges, n_iter=5).collect()
+    )
+    want = pagerank_recurrence(PAGERANK_EDGES, 5)
+    assert {r["node"]: r["rank"] for r in rows} == want
+    assert launched == grouped
+    # 18 jobs with every step in one plan; 26 when each step was built
+    # with broadcasts and a checkpoint every two steps.
+    assert len(launched) <= 20, len(launched)
 
 
 def test_ngram_jaccard_prefix_matches_allpairs(spark):

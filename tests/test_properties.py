@@ -20,7 +20,7 @@ from __future__ import annotations
 import hashlib
 from decimal import Decimal
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -289,3 +289,27 @@ def test_connected_components_star_long_chain(spark):
         for r in connected_components_star(nodes_df, edges_df).collect()
     }
     assert got == {i: 0 for i in range(n)}
+
+
+@SLOW
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 12), st.integers(0, 12)),
+        min_size=1,
+        max_size=40,
+    ),
+    st.sampled_from([0, 1, 2, 3, 5, 8]),
+)
+@example([], 3)
+def test_pagerank_scaled_matches_recurrence(spark, pagerank_recurrence, edges, n_iter):
+    """For ANY directed graph (dangling nodes, nodes with no in-edges,
+    self-loops and duplicate edges included) and any step count, the ranks
+    equal the sequential scaled-integer recurrence, one row per edge
+    endpoint; an empty edge list gives no rows."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.graph import pagerank_scaled
+
+    edges_df = spark.createDataFrame(edges, "src long, dst long")
+    rows = pagerank_scaled(edges_df, n_iter=n_iter).collect()
+    got = {r["node"]: r["rank"] for r in rows}
+    assert len(rows) == len(got)
+    assert got == pagerank_recurrence(edges, n_iter)
