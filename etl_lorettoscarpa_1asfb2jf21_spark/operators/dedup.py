@@ -1,7 +1,7 @@
 """Deduplication operators for training-data pipelines (SURVEY.md §2 X1).
 
-Five strategies, all expressed as native DataFrame plans (no Python in the
-hot path) so they scale to 10^9+ documents:
+Five strategies, expressed as native DataFrame plans so they scale to
+10^9+ documents:
 
 * exact_dedup          - content-hash groupBy; keeps the lowest-id row
 * minhash_lsh_dedup    - one-permutation minhash signature (int64-hashed
@@ -9,7 +9,11 @@ hot path) so they scale to 10^9+ documents:
                          enumeration → exact-Jaccard verify
 * simhash_signature    - 64-bit SimHash over tokens (native bit math)
 * ngram_jaccard_pairs  - exact pairwise Jaccard over character n-grams,
-                         blocked to avoid the full cross product
+                         blocked to avoid the full cross product;
+                         ngram_jaccard_clusters groups the same pairs into
+                         duplicate clusters, per bounded block in one
+                         grouped numpy pass (the one Python kernel here,
+                         with emit_anchored_dedup's sequential walk)
 * embedding_neardup_pairs - cosine > threshold pairs via random-hyperplane
                          bucketing (see operators.similarity for the ANN core)
 
@@ -502,6 +506,48 @@ def simhash_neardup_pairs(
 
 # ---------------------------------------------------------------- n-gram jaccard
 
+# Largest block the quadratic plans take: ngram_jaccard_pairs' all-pairs
+# join and ngram_jaccard_clusters' grouped kernel both cost cap² pair
+# tests per block. A larger block takes the prefix index instead.
+AUTO_BLOCK_CAP = 1024
+
+
+def _gram_table(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_col: str,
+    n: int,
+    checkpoint: bool = True,
+) -> DataFrame:
+    """(_id, _blk, _g, _sz): each document's distinct hashed character
+    n-grams and their count, as a double."""
+    g = _spread_normalized(df, text_col, keep=[id_col, block_col], factor=4).select(
+        F.col(id_col).alias("_id"),
+        F.col(block_col).alias("_blk"),
+        _hashed_ngrams_from_norm(n).alias("_g"),
+    )
+    g = g.withColumn("_sz", F.size("_g").cast("double"))
+    # The gram pipeline (normalize regex + n-gram + hash) feeds several
+    # consumers (the block stats, both index sides, both verify sides); a
+    # lazy localCheckpoint computes it once and truncates the lineage
+    # instead of re-running the string pipeline per branch. The barrier
+    # hides the spread() exchange from downstream formatted plans, so the
+    # spread audit in tests/test_plans.py inspects a checkpoint=False build.
+    if checkpoint:
+        g = g.localCheckpoint(eager=False)
+    return g
+
+
+def _blocks_bounded(g: DataFrame, cap: int) -> bool:
+    """The ``auto`` rule: one scalar aggregate reads the largest block of
+    the gram table; True when it holds at most ``cap`` documents. The
+    stats pass is a count-by-block, negligible next to either plan, and
+    its job fills the gram table's lazy checkpoint."""
+    row = g.groupBy("_blk").count().agg(F.max("count").alias("m")).collect()
+    return (row[0]["m"] or 0) <= cap
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -510,7 +556,7 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     strategy: str = "auto",
-    auto_block_cap: int = 1024,
+    auto_block_cap: int = AUTO_BLOCK_CAP,
     checkpoint: bool = True,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard within a blocking key (e.g. lang).
@@ -520,12 +566,12 @@ def ngram_jaccard_pairs(
     strategies produce IDENTICAL output — they differ only in how
     candidate pairs are enumerated:
 
-    * ``auto`` (default): a cost-based pick — one scalar aggregate reads
-      the largest block size; blocks bounded by ``auto_block_cap`` take
-      the all-pairs plan (its quadratic term is capped at cap² per block
-      and it is floor-cheaper: one self-join vs index+dedup+2 join-backs),
-      larger blocks take the prefix index. The stats pass is a lightweight
-      count-by-block over the doc table — negligible next to either plan.
+    * ``auto`` (default): the rule :func:`ngram_jaccard_clusters` shares
+      (``_blocks_bounded``): one stats collect reads the largest block
+      size; blocks bounded by ``auto_block_cap`` take the all-pairs plan
+      (its quadratic term is capped at cap² per block and it is
+      floor-cheaper: one self-join vs index+dedup+2 join-backs), larger
+      blocks take the prefix index.
 
     * ``prefix`` (the scale path): prefix filtering (Bayardo et
       al. 2007, "Scaling Up All Pairs Similarity Search"). Under any fixed
@@ -539,8 +585,8 @@ def ngram_jaccard_pairs(
       (tools/make_sfx.py), the all-pairs form went 6.9 s → 221 s
       (quadratic) while this form stays near-linear. The global order is
       document frequency ASCENDING (Bayardo's rare-first order) — see
-      the prefix branch below for why hash order is a scale-killer at
-      low thresholds (SF10_WITNESS.json).
+      :func:`_prefix_pairs` for why hash order is a scale-killer at low
+      thresholds (SF10_WITNESS.json).
     * ``allpairs``: block-equi-join enumerating every in-block id pair.
       Simpler plan (one self-join), fine when blocks are bounded (e.g.
       the block IS an LSH bucket), quadratic when they are not.
@@ -549,25 +595,40 @@ def ngram_jaccard_pairs(
     before any per-pair set work, and |A∪B| = |A|+|B|-|A∩B| makes the
     exact verify one intersection per pair.
     """
-    g = _spread_normalized(df, text_col, keep=[id_col, block_col], factor=4).select(
-        F.col(id_col).alias("_id"),
-        F.col(block_col).alias("_blk"),
-        _hashed_ngrams_from_norm(n).alias("_g"),
-    )
-    g = g.withColumn("_sz", F.size("_g").cast("double"))
-    # The gram pipeline (normalize regex + n-gram + hash) feeds up to five
-    # consumers (auto stats, both index sides, both verify sides); a lazy
-    # localCheckpoint computes it once and truncates the lineage instead
-    # of re-running the string pipeline per branch. The barrier hides the
-    # spread() exchange from downstream formatted plans, so the spread
-    # audit in tests/test_plans.py inspects a checkpoint=False build.
-    if checkpoint:
-        g = g.localCheckpoint(eager=False)
-
+    g = _gram_table(df, text_col, id_col, block_col, n, checkpoint)
     if strategy == "auto":
-        row = g.groupBy("_blk").count().agg(F.max("count").alias("m")).collect()
-        biggest = row[0]["m"] or 0
-        strategy = "allpairs" if biggest <= auto_block_cap else "prefix"
+        strategy = "allpairs" if _blocks_bounded(g, auto_block_cap) else "prefix"
+    if strategy == "allpairs":
+        return _allpairs(g, threshold)
+    return _prefix_pairs(g, threshold)
+
+
+def _allpairs(g: DataFrame, threshold: float) -> DataFrame:
+    """Verified pairs from one in-block self-join of the gram table."""
+    l, r = g.alias("l"), g.alias("r")
+    size_bound = (F.col("l._sz") >= F.lit(threshold) * F.col("r._sz")) & (
+        F.col("r._sz") >= F.lit(threshold) * F.col("l._sz")
+    )
+    inter = F.size(F.array_intersect(F.col("l._g"), F.col("r._g"))).cast("double")
+    return (
+        l.join(
+            r,
+            (F.col("l._blk") == F.col("r._blk"))
+            & (F.col("l._id") < F.col("r._id"))
+            & size_bound,
+        )
+        .withColumn("jaccard", inter / (F.col("l._sz") + F.col("r._sz") - inter))
+        .filter(F.col("jaccard") >= threshold)
+        .select(
+            F.col("l._id").alias("id_a"),
+            F.col("r._id").alias("id_b"),
+            F.col("jaccard"),
+        )
+    )
+
+
+def _prefix_pairs(g: DataFrame, threshold: float) -> DataFrame:
+    """Verified pairs from the rare-first prefix index of the gram table."""
 
     def _verify(pairs_ab: DataFrame) -> DataFrame:
         a = g.select(
@@ -588,28 +649,6 @@ def ngram_jaccard_pairs(
             .withColumn("jaccard", inter / (F.col("_sza") + F.col("_szb") - inter))
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
-        )
-
-    if strategy == "allpairs":
-        l, r = g.alias("l"), g.alias("r")
-        size_bound = (F.col("l._sz") >= F.lit(threshold) * F.col("r._sz")) & (
-            F.col("r._sz") >= F.lit(threshold) * F.col("l._sz")
-        )
-        inter = F.size(F.array_intersect(F.col("l._g"), F.col("r._g"))).cast("double")
-        return (
-            l.join(
-                r,
-                (F.col("l._blk") == F.col("r._blk"))
-                & (F.col("l._id") < F.col("r._id"))
-                & size_bound,
-            )
-            .withColumn("jaccard", inter / (F.col("l._sz") + F.col("r._sz") - inter))
-            .filter(F.col("jaccard") >= threshold)
-            .select(
-                F.col("l._id").alias("id_a"),
-                F.col("r._id").alias("id_b"),
-                F.col("jaccard"),
-            )
         )
 
     # prefix filtering: explode each doc's prefix grams into an inverted
@@ -696,6 +735,155 @@ def ngram_jaccard_pairs(
         .distinct()
     )
     return _verify(cand)
+
+
+def ngram_jaccard_clusters(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_col: str,
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Near-duplicate groups: the connected components of
+    :func:`ngram_jaccard_pairs`' pairs, canonical = min id. Returns
+    (id_col, cluster_id, is_canonical), the shape of
+    ``duplicate_clusters``; every input row appears once (ids are
+    unique), singletons as their own cluster.
+
+    The path follows the ``auto`` rule of ngram_jaccard_pairs, on the
+    same gram table and with the same one stats collect:
+
+    * bounded blocks (the largest block <= ``AUTO_BLOCK_CAP``): every
+      pair lies within a block, so every component does too, and one
+      ``groupBy(block).applyInPandas`` computes the whole result, with no
+      pair self-join and no star rounds. Per block, the kernel builds a
+      0/1 doc x gram incidence matrix over the grams two or more of the
+      block's documents share (a gram of one document adds to no
+      intersection), tiled on the gram axis, and takes every pairwise
+      intersection as a float64 matmul: the counts are integers, so the
+      result is exact in any summation order. It then applies the pair
+      plans' size bound and ``inter / (sza + szb - inter) >= t`` in
+      float64, the same operations in the same order, so the pair set is
+      identical, and labels the block's components by a path-halving
+      union-find whose roots are the minimum ids. Per group the state is
+      a few cap x cap arrays (8 MB each as doubles) plus one gram tile.
+    * larger blocks: the prefix pairs of ngram_jaccard_pairs, closed by
+      ``connected_components_star``.
+
+    A NULL block or NULL id never pairs (the pair plans' equi-join and
+    ``<`` are NULL), and neither does a NULL text or one shorter than
+    ``n``: its 0/0 Jaccard is NaN here and fails the test, as Spark's
+    NULL does with ANSI off (with ANSI on, the pair plans raise
+    DIVIDE_BY_ZERO on two such texts in one block). Such rows are
+    singletons.
+    """
+    from pyspark.sql.types import BooleanType, StructField, StructType
+
+    from .graph import duplicate_clusters
+
+    g = _gram_table(df, text_col, id_col, block_col, n)
+    if not _blocks_bounded(g, AUTO_BLOCK_CAP):
+        return duplicate_clusters(df, _prefix_pairs(g, threshold), id_col)
+
+    t = float(threshold)
+    id_type = df.schema[id_col].dataType
+    schema = StructType(
+        [
+            StructField(id_col, id_type),
+            StructField("cluster_id", id_type),
+            StructField("is_canonical", BooleanType()),
+        ]
+    )
+
+    def intersections(grams, m: int):
+        """(m, m) float64 counts of the grams each pair of docs shares."""
+        import numpy as np
+
+        tile = 2048  # gram columns per matmul: m x tile doubles, <= 16 MB
+
+        lens = np.array([0 if x is None else len(x) for x in grams], dtype=np.int64)
+        inter = np.zeros((m, m))
+        if lens.sum() == 0:
+            return inter
+        gram = np.concatenate([x for x in grams if x is not None])
+        doc = np.repeat(np.arange(m), lens)
+        # distinct (gram, doc) cells, sorted by gram: array_intersect
+        # counts distinct elements
+        o = np.lexsort((doc, gram))
+        gram, doc = gram[o], doc[o]
+        new = np.ones(len(gram), dtype=bool)
+        new[1:] = (gram[1:] != gram[:-1]) | (doc[1:] != doc[:-1])
+        gram, doc = gram[new], doc[new]
+        _, col, df_ = np.unique(gram, return_inverse=True, return_counts=True)
+        shared = df_[col] > 1
+        col, doc = col[shared], doc[shared]
+        col = np.unique(col, return_inverse=True)[1]  # dense, still sorted
+        n_cols = int(col[-1]) + 1 if len(col) else 0
+        for c0 in range(0, n_cols, tile):
+            lo, hi = np.searchsorted(col, [c0, c0 + tile])
+            x = np.zeros((m, min(tile, n_cols - c0)))
+            x[doc[lo:hi], col[lo:hi] - c0] = 1.0
+            inter += x @ x.T
+        return inter
+
+    def cluster_block(pdf):
+        import numpy as np
+        import pandas as pd
+
+        pdf = pdf.sort_values("_id", kind="mergesort")
+        ids = pdf["_id"].to_numpy()
+        m = len(ids)
+        parent = list(range(m))
+        if m > 1 and not pd.isna(pdf["_blk"].iat[0]):
+            sz = pdf["_sz"].to_numpy(dtype=np.float64)
+            inter = intersections(pdf["_g"].to_numpy(), m)
+            sa, sb = sz[:, None], sz[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                jac = inter / (sa + sb - inter)
+            keep = (
+                (ids[:, None] < ids[None, :])
+                & (sa >= t * sb)
+                & (sb >= t * sa)
+                & (jac >= t)
+            )
+
+            def find(x: int) -> int:
+                while parent[x] != x:
+                    parent[x] = parent[parent[x]]
+                    x = parent[x]
+                return x
+
+            for a, b in zip(*(v.tolist() for v in np.nonzero(keep))):
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    # the smaller index wins, so each root is its
+                    # component's minimum id
+                    parent[max(ra, rb)] = min(ra, rb)
+            for x in range(m):
+                parent[x] = find(x)
+        root = np.array(parent, dtype=np.int64)
+        return pd.DataFrame(
+            {
+                id_col: ids,
+                "cluster_id": ids[root],
+                "is_canonical": root == np.arange(m),
+            }
+        )
+
+    clusters = (
+        g.filter(F.col("_id").isNotNull())
+        .select("_id", "_blk", "_g", "_sz")
+        .groupBy("_blk")
+        .applyInPandas(cluster_block, schema)
+    )
+    # a NULL id keeps NULL labels, as duplicate_clusters gives it
+    null_ids = g.filter(F.col("_id").isNull()).select(
+        F.col("_id").alias(id_col),
+        F.col("_id").alias("cluster_id"),
+        (F.col("_id") == F.col("_id")).alias("is_canonical"),
+    )
+    return clusters.union(null_ids)
 
 
 def emit_anchored_dedup(

@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import normalized_text_expr
-from .operators.dedup import ngram_jaccard_pairs
-from .operators.graph import duplicate_clusters
+from .operators.dedup import ngram_jaccard_clusters
 from .operators.partitioning import spread
 from .sources.tables import load_table
 
@@ -212,14 +211,15 @@ def x1_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Survivor pick is one integer-packed ``max_by`` inside the same
     aggregation that counts members — no second shuffle, no window sort.
-    The DuckDB oracle replays the identical pipeline (grams → Jaccard
-    pairs → recursive-CTE components → arg_max).
+    The clusters come from ``ngram_jaccard_clusters``, the operator
+    x1_dup_clusters and tp18 share: one grouped exact kernel per source
+    block. The DuckDB oracle replays the identical pipeline (grams →
+    Jaccard pairs → recursive-CTE components → arg_max).
     """
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("source").isin("src0", "src1", "src2", "src3")
     )
-    pairs = ngram_jaccard_pairs(d, "text", "doc_id", "source", n=3, threshold=0.2)
-    clusters = duplicate_clusters(d, pairs.select("id_a", "id_b"), "doc_id")
+    clusters = ngram_jaccard_clusters(d, "text", "doc_id", "source", n=3, threshold=0.2)
     return (
         clusters.join(d.select("doc_id", "n_chars"), "doc_id")
         .groupBy("cluster_id")

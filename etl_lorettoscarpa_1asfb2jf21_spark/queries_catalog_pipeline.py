@@ -18,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.text import normalized_text_expr, token_count_expr
-from .operators.dedup import ngram_jaccard_pairs
-from .operators.graph import duplicate_clusters
+from .operators.dedup import ngram_jaccard_clusters, ngram_jaccard_pairs
 from .sources.tables import load_table
 
 QUERIES: dict = {}
@@ -88,17 +87,20 @@ _PAIRS_SQL = """
     """,
 )
 def x1_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 clustering: near-dup *pairs* → duplicate *groups* via connected
-    components (large-star/small-star rounds, operators/graph.py);
-    canonical survivor = min doc_id per component. The DuckDB oracle
-    computes the identical transitive closure with a recursive CTE.
+    """X1 clustering: near-dup *pairs* → duplicate *groups*, the connected
+    components of the x1_ngram_jaccard pairs; canonical survivor = min
+    doc_id per component. ``ngram_jaccard_clusters`` (operators/dedup.py)
+    computes them per source block in one grouped pass, an exact matmul
+    + union-find kernel per block, while the largest block is within the
+    all-pairs cap; above it, prefix pairs closed by large-star/small-star
+    rounds. The DuckDB oracle computes the identical transitive closure
+    with a recursive CTE.
 
     This is the step that makes pair-producing dedup (minhash/ngram/
     embedding) actionable: keep ``is_canonical``, drop the rest.
     """
     d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, "text", "doc_id", "source", n=3, threshold=0.2)
-    return duplicate_clusters(d, pairs.select("id_a", "id_b"), "doc_id")
+    return ngram_jaccard_clusters(d, "text", "doc_id", "source", n=3, threshold=0.2)
 
 
 # =====================================================================

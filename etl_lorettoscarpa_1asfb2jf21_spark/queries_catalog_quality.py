@@ -848,25 +848,24 @@ def tp18_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data build must make at CLUSTER granularity, not document
     granularity: hashing doc_ids directly puts near-duplicates of a
     training document into the validation set (the classic eval-leakage
-    bug near-dup detection exists to prevent). Near-dup pairs (the
-    x1_ngram_jaccard set) cluster via the star connected-components
-    engine; every member inherits its CLUSTER's md5 draw (80/20), so a
-    duplicate group can never straddle the boundary — by construction,
-    not by post-hoc filtering.
+    bug near-dup detection exists to prevent). The clusters are the
+    connected components of the x1_ngram_jaccard pairs, from
+    ``ngram_jaccard_clusters``, the operator x1_dup_clusters runs; every
+    member inherits its CLUSTER's md5 draw (80/20), so a duplicate group
+    can never straddle the boundary — by construction, not by post-hoc
+    filtering.
 
-    Scale: clustering is the O(log² n) star engine the dedup ladder
-    already runs; the split itself is one md5 + modulo per row. The
-    DuckDB twin recomputes the identical closure (recursive CTE) and
-    draw, so the assignment is hash-verified end to end.
+    Scale: with source blocks within the all-pairs cap, clustering is one
+    grouped pass (an exact matmul + union-find kernel per block); above
+    it, prefix pairs closed by the O(log² n) star engine. The split
+    itself is one md5 + modulo per row. The DuckDB twin recomputes the
+    identical closure (recursive CTE) and draw, so the assignment is
+    hash-verified end to end.
     """
-    from .operators.dedup import ngram_jaccard_pairs
-    from .operators.graph import duplicate_clusters
+    from .operators.dedup import ngram_jaccard_clusters
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "text", "doc_id", "source", n=3, threshold=0.2
-    )
-    clusters = duplicate_clusters(d, pairs.select("id_a", "id_b"), "doc_id")
+    clusters = ngram_jaccard_clusters(d, "text", "doc_id", "source", n=3, threshold=0.2)
     split = F.when(
         md5_long60(
             F.concat(F.lit("split|"), F.col("cluster_id").cast("string"))

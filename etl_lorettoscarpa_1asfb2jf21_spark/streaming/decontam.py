@@ -45,6 +45,22 @@ def _doc_grams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _check_index_format(index: DataFrame, grams: DataFrame, index_path: str) -> None:
+    """Fail loudly when the stored index's gram key is not the type the
+    probe computes (an index built before the key became a 120-bit
+    STRUCT<h1,h2> stores BIGINT grams), as ``_validate_index_meta`` does
+    for ANN indexes; schemas only, no job."""
+    want = grams.schema["gram"].dataType.simpleString()
+    fields = {f.name: f.dataType.simpleString() for f in index.schema.fields}
+    got = fields.get("gram")
+    if got != want:
+        raise ValueError(
+            f"eval-gram index at {index_path} has gram key {got or 'missing'}, "
+            f"the probe computes {want}: rebuild eval-gram index with "
+            "build_eval_gram_index (the key format changed)"
+        )
+
+
 def build_eval_gram_index(
     eval_docs: DataFrame,
     index_path: str,
@@ -76,10 +92,11 @@ def apply_decontam_batch(
     ledger_path = out_path + "_applied"
     if is_committed(spark, ledger_path, batch_id):
         return  # at-least-once replay → exactly-once net effect
-    eval_grams = F.broadcast(spark.read.parquet(index_path))
+    index = spark.read.parquet(index_path)
+    grams = _doc_grams(batch_df, text_col, id_col)
+    _check_index_format(index, grams, index_path)
     decisions = (
-        _doc_grams(batch_df, text_col, id_col)
-        .join(eval_grams, "gram")
+        grams.join(F.broadcast(index), "gram")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )

@@ -58,6 +58,37 @@ def union_find_components():
 
 
 @pytest.fixture(scope="session")
+def ngram_clusters_oracle(union_find_components):
+    """Plain-Python oracle for near-duplicate clusters:
+    ``f(rows, n, threshold)`` over (id, block, text) rows -> {id: min id of
+    its cluster}. Pairs are the ngram_jaccard_pairs pairs: same non-NULL
+    block, and the size bound and Jaccard test over the distinct character
+    n-grams of the normalized text (lower-cased, whitespace runs collapsed
+    to one space, trimmed; NULL is ""), in floats. Texts are ASCII."""
+    import re
+    from itertools import combinations
+
+    def grams(text, n):
+        s = re.sub(r"\s+", " ", (text or "").lower()).strip(" ")
+        return {s[i : i + n] for i in range(len(s) - n + 1)}
+
+    def clusters(rows, n, t):
+        edges = []
+        for (ia, ba, ta), (ib, bb, tb) in combinations(rows, 2):
+            if ba is None or ba != bb:
+                continue
+            a, b = grams(ta, n), grams(tb, n)
+            sa, sb, inter = float(len(a)), float(len(b)), float(len(a & b))
+            if sa + sb - inter == 0:
+                continue  # 0/0 is NULL in Spark and fails the test
+            if sa >= t * sb and sb >= t * sa and inter / (sa + sb - inter) >= t:
+                edges.append((ia, ib))
+        return union_find_components([r[0] for r in rows], edges)
+
+    return clusters
+
+
+@pytest.fixture(scope="session")
 def pagerank_recurrence():
     """Sequential oracle for scaled-integer PageRank:
     ``f(edges, n_iter, damping_pct=85, scale=10**9)`` -> {node: rank} for

@@ -1032,6 +1032,83 @@ def test_ngram_jaccard_prefix_matches_allpairs(spark):
     assert not any(5 in (a, b) for a, b, _ in ap)  # block isolation
 
 
+_CLUSTER_ROWS = [
+    (1, "b1", "the quick brown fox jumps over the lazy dog"),
+    (2, "b1", "the quick brown fox jumps over the lazy cat"),
+    (3, "b1", "completely different words entirely here now"),
+    (4, "b1", "the quick brown fox jumps over the lazy dog"),
+    (5, "b2", "the quick brown fox jumps over the lazy dog"),  # other block
+    (6, "b2", "completely different words entirely here too"),
+    (7, "b2", "short"),
+    (8, None, "the quick brown fox jumps over the lazy dog"),  # NULL block
+    (9, "b1", None),
+]
+
+
+def test_ngram_jaccard_clusters_large_blocks_take_prefix_and_star(
+    spark, monkeypatch, ngram_clusters_oracle
+):
+    """With the largest block above the cap, the clusters come from the
+    prefix pairs closed by the star engine, as before the grouped kernel
+    existed, and equal the kernel's labels and the oracle's."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators import dedup, graph
+
+    df = spark.createDataFrame(_CLUSTER_ROWS, "doc_id long, blk string, text string")
+
+    def labels():
+        out = dedup.ngram_jaccard_clusters(df, "text", "doc_id", "blk", n=3, threshold=0.3)
+        return out, {r["doc_id"]: (r["cluster_id"], r["is_canonical"]) for r in out.collect()}
+
+    grouped, kernel = labels()
+    assert "FlatMapGroupsInPandas" in grouped._jdf.queryExecution().toString()
+
+    calls = []
+    for mod, name in ((dedup, "_prefix_pairs"), (graph, "connected_components_star")):
+        real = getattr(mod, name)
+        monkeypatch.setattr(
+            mod, name, lambda *a, _real=real, _name=name, **k: calls.append(_name) or _real(*a, **k)
+        )
+    monkeypatch.setattr(dedup, "AUTO_BLOCK_CAP", 2)
+    _, star = labels()
+    assert calls == ["_prefix_pairs", "connected_components_star"]
+
+    want = ngram_clusters_oracle(_CLUSTER_ROWS, 3, 0.3)
+    assert kernel == star == {x: (c, x == c) for x, c in want.items()}
+    assert kernel[4] == (1, False) and kernel[5] == (5, True)
+
+
+def test_ngram_jaccard_clusters_null_id_keeps_null_labels(spark):
+    """A NULL id never pairs; its row keeps NULL labels, as the pair
+    closure gives it."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.dedup import (
+        ngram_jaccard_clusters,
+    )
+
+    rows = _CLUSTER_ROWS[:2] + [(None, "b1", _CLUSTER_ROWS[0][2])]
+    df = spark.createDataFrame(rows, "doc_id long, blk string, text string")
+    got = sorted(
+        ngram_jaccard_clusters(df, "text", "doc_id", "blk", n=3, threshold=0.3).collect(),
+        key=lambda r: (r["doc_id"] is None, r["doc_id"]),
+    )
+    assert [tuple(r) for r in got] == [(1, 1, True), (2, 1, False), (None, None, None)]
+
+
+def test_x1_dup_clusters_job_budget(spark, sf_small, jobs_during):
+    """The grouped kernel builds and collects x1_dup_clusters in a few
+    jobs: the block-stats collect that fills the gram checkpoint, then the
+    one grouped pass. The pair self-join plus star rounds took 18 here."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog_pipeline import (
+        x1_dup_clusters,
+    )
+
+    rows, launched, grouped = jobs_during(
+        lambda: x1_dup_clusters(spark, sf_small).collect()
+    )
+    assert len(rows) == 500
+    assert launched == grouped
+    assert len(launched) <= 7, len(launched)
+
+
 def test_lsh_portable_matches_arrow_kernel(spark, sf_small):
     """The portable fold path (catalog/oracle form) and the Arrow matmul
     kernel (production default) must bucket identically on the fixed

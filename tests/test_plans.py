@@ -102,6 +102,14 @@ GROUPED_PANDAS_QUERIES = {
     # kernel shape 4-5x slower). Fixed-point quantization keeps the BLAS
     # result bit-identical to the DuckDB fold oracle.
     "x1_embedding_neardup",
+    # near-dup clusters: ngram_jaccard_clusters' per-block matmul +
+    # union-find kernel. It runs only while the largest block holds at
+    # most AUTO_BLOCK_CAP (1024) docs, so a group is at most cap docs and
+    # cap² doubles; the Python boundary moves block members (their gram
+    # arrays) and their labels, never pairs.
+    "x1_dup_clusters",
+    "x1_dedup_resolve",
+    "tp18_leakage_safe_split",
 }
 
 

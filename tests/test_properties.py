@@ -313,3 +313,59 @@ def test_pagerank_scaled_matches_recurrence(spark, pagerank_recurrence, edges, n
     got = {r["node"]: r["rank"] for r in rows}
     assert len(rows) == len(got)
     assert got == pagerank_recurrence(edges, n_iter)
+
+
+# ---------------------------------------------------------- near-dup clusters
+
+# Fixed rows every generated corpus carries, past its random rows: two
+# identical texts, and a J = 2/10 = 0.2 pair ("abcd" ⊂ "abcdefghijkl")
+# next to a J = 2/11 one, at the catalog threshold.
+_NEARDUP_FIXED = [
+    ("a", "spark arrow row"),
+    ("a", "spark arrow row"),
+    ("edge", "abcd"),
+    ("edge", "abcdefghijkl"),
+    ("edge2", "abcd"),
+    ("edge2", "abcdefghijklm"),
+]
+_NEARDUP_WORDS = ["spark", "sparkle", "park", "arrow", "row", "ark"]
+
+
+@SLOW
+@given(
+    st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.sampled_from(["a", "b", "c"])),
+            st.one_of(
+                st.none(),
+                st.sampled_from(["", "ab", "  AB "]),
+                st.lists(st.sampled_from(_NEARDUP_WORDS), min_size=1, max_size=5).map(
+                    " ".join
+                ),
+            ),
+        ),
+        max_size=30,
+    )
+)
+def test_ngram_jaccard_clusters_match_oracle(spark, ngram_clusters_oracle, rows):
+    """For ANY blocked corpus (NULL blocks, NULL texts, texts shorter than
+    n, identical texts, a pair at exactly J = 0.2), the grouped kernel
+    gives exactly the components of the plain-Python Jaccard pairs: one
+    row per document, cluster id = min id, canonical only on that id."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.operators.dedup import (
+        ngram_jaccard_clusters,
+    )
+
+    docs = [(i, b, t) for i, (b, t) in enumerate(rows + _NEARDUP_FIXED)]
+    df = spark.createDataFrame(docs, "doc_id long, source string, text string")
+    out = ngram_jaccard_clusters(
+        df, "text", "doc_id", "source", n=3, threshold=0.2
+    ).collect()
+    got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"]) for r in out}
+    assert len(out) == len(docs)
+    want = ngram_clusters_oracle(docs, 3, 0.2)
+    assert got == {x: (c, x == c) for x, c in want.items()}
+    k = len(rows)
+    assert got[k][0] == got[k + 1][0]  # identical texts
+    assert got[k + 2][0] == got[k + 3][0]  # J = 0.2 exactly
+    assert got[k + 4][0] != got[k + 5][0]  # J = 2/11

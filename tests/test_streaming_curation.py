@@ -225,3 +225,19 @@ def test_streaming_decontam_matches_batch_tp7(spark, sf_small, tmp_path):
     applied = [r["batch_id"] for r in spark.read.parquet(out + "_applied").collect()]
     apply_decontam_batch(train.limit(40), applied[0], out, idx)
     assert read_decontam_decisions(spark, out).count() == len(want)
+
+
+def test_decontam_rejects_old_format_index(spark, tmp_path):
+    """An eval-gram index written with the old 60-bit ``gram BIGINT`` key
+    fails with an explicit rebuild error, not a join type mismatch."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.streaming.decontam import (
+        apply_decontam_batch,
+    )
+
+    idx = str(tmp_path / "old_grams")
+    spark.createDataFrame([(1,), (2,)], "gram bigint").write.parquet(idx)
+    batch = spark.createDataFrame(
+        [(1, "one two three four five six")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="rebuild eval-gram index"):
+        apply_decontam_batch(batch, 0, str(tmp_path / "out"), idx)

@@ -3,7 +3,11 @@
 For each queries() entry, counts the plan features that matter at 100 TB —
 wide exchanges, broadcast vs sort-merge joins, whole-stage codegen spans,
 Python boundaries, top-n short-circuits — so plan regressions are visible
-in review diffs, not just in test failures.
+in review diffs, not just in test failures. The counts come from the
+executed plan: each query runs once with its rows discarded (a noop sink),
+and the audit reads AQE's final plan. The pre-execution plan misreports
+joins: an input without size statistics (a localCheckpoint) plans as a
+sort-merge join that AQE then runs as a broadcast.
 
     python tools/plan_audit.py [sf_dir]
 """
@@ -24,8 +28,28 @@ MARKERS = [
     ("arrow", "ArrowEvalPython"),
     ("pyrow", "BatchEvalPython"),
     ("mapipd", "MapInPandas"),
+    ("grpipd", "FlatMapGroupsInPandas"),
     ("topn", "TakeOrderedAndProject"),
 ]
+
+
+def final_plan(df) -> str:
+    """Run ``df`` with its rows discarded, then render AQE's final plan,
+    dropping each adaptive node's "== Initial Plan ==" subtree."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    text = df._sc._jvm.PythonSQLUtils.explainString(qe, "simple")
+    out, skip_from = [], None
+    for line in text.splitlines():
+        col = len(line) - len(line.lstrip(" :|+-"))
+        if skip_from is not None and col >= skip_from:
+            continue
+        skip_from = None
+        if "== Initial Plan ==" in line:
+            skip_from = col
+            continue
+        out.append(line)
+    return "\n".join(out)
 
 
 def main() -> None:
@@ -40,9 +64,7 @@ def main() -> None:
     rows = []
     for name, fn in entrymod.queries().items():
         try:
-            df = fn(spark, sf_dir)
-            qe = df._jdf.queryExecution()
-            plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "simple")
+            plan = final_plan(fn(spark, sf_dir))
             counts = {k: plan.count(m) for k, m in MARKERS}
             # codegen spans render as "*(id)" node prefixes in simple mode
             counts["codegen"] = len(set(re.findall(r"\*\((\d+)\)", plan)))
@@ -54,29 +76,32 @@ def main() -> None:
         "# PLANS — physical-plan audit of every catalog query",
         "",
         f"Auto-generated by `tools/plan_audit.py` at {sf_dir}. Counts of the",
-        "plan features that matter at scale. `pyrow` (row-at-a-time Python)",
-        "must be 0 everywhere; `arrow` is nonzero only for the sanctioned",
-        "kernel queries; `smj` appears only where both sides are genuinely",
-        "large or bucketed. Note: queries containing an exchange plan",
-        "adaptively, and AQE renders codegen stars only in executed final",
-        "plans — a 0 in `codegen spans` on a shuffling query is the AQE",
-        "pre-execution view, not a codegen gap (tests assert no",
-        "interpreted-Python anywhere). `BNLJ` nonzero is sanctioned only",
-        "for (a) 1-row scalar broadcasts (global totals/maxima/quality",
-        "rows joined back: q11/q15/q22-style), (b) the broadcast query",
-        "side of brute-force top-k, and (c) bounded sample blocks (the",
-        "<=200-vector ground-truth pass in x1_embedding_neardup) — never",
-        "for a corpus-x-corpus product.",
+        "plan features that matter at scale, read from AQE's final plan after",
+        "each query ran once with its rows discarded, so join strategies are",
+        "the ones that ran: a join over a checkpointed input plans as a",
+        "sort-merge join before execution and usually runs as a broadcast.",
+        "`pyrow` (row-at-a-time Python) must be 0 everywhere; `arrow` is",
+        "nonzero only for the sanctioned kernel queries, and `mapInPandas`",
+        "and `groupedPandas` only for the ones tests/test_plans.py allows.",
+        "`smj` appears only where AQE found both sides too large to",
+        "broadcast. `BNLJ` nonzero is sanctioned only for (a) 1-row scalar",
+        "broadcasts (global totals/maxima/quality rows joined back:",
+        "q11/q15/q22-style), (b) the broadcast query side of brute-force",
+        "top-k, and (c) bounded sample blocks (the <=200-vector",
+        "ground-truth pass in x1_embedding_neardup) — never for a",
+        "corpus-x-corpus product. Counts cover the final plan only: a",
+        "query's eager build jobs (checkpoints, collects) ran earlier and",
+        "show as `Scan ExistingRDD`.",
         "",
-        "| query | wide exch | bcast join | SMJ | BNLJ | codegen spans | arrow | pyrow | mapInPandas | top-n |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        "| query | wide exch | bcast join | SMJ | BNLJ | codegen spans | arrow | pyrow | mapInPandas | groupedPandas | top-n |",
+        "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, counts, note in rows:
         if counts is None:
-            out.append(f"| {name} | ERROR: {note} | | | | | | | | |")
+            out.append(f"| {name} | ERROR: {note} | | | | | | | | | |")
             continue
         out.append(
-            "| {n} | {exch} | {bcast} | {smj} | {bnlj} | {codegen} | {arrow} | {pyrow} | {mapipd} | {topn} |".format(
+            "| {n} | {exch} | {bcast} | {smj} | {bnlj} | {codegen} | {arrow} | {pyrow} | {mapipd} | {grpipd} | {topn} |".format(
                 n=name, **counts
             )
         )
