@@ -18,9 +18,10 @@ MONTH_PATTERN = "MM/yyyy"
 
 
 def month_string_to_date(col: Column | str) -> Column:
-    """``"03/2024"`` → date 2024-03-01 (F8)."""
+    """``"03/2024"`` → date 2024-03-01 (F8); NULL when the string does not
+    parse (``"13/2024"``), with ANSI mode on or off."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.to_date(c, MONTH_PATTERN)
+    return F.try_to_date(c, MONTH_PATTERN)
 
 
 def time_attributes(date_col: Column | str) -> dict[str, Column]:

@@ -617,7 +617,10 @@ def _allpairs(g: DataFrame, threshold: float) -> DataFrame:
             & (F.col("l._id") < F.col("r._id"))
             & size_bound,
         )
-        .withColumn("jaccard", inter / (F.col("l._sz") + F.col("r._sz") - inter))
+        # try_divide: two gram-less texts (0/0) do not pair, ANSI on or off
+        .withColumn(
+            "jaccard", F.try_divide(inter, F.col("l._sz") + F.col("r._sz") - inter)
+        )
         .filter(F.col("jaccard") >= threshold)
         .select(
             F.col("l._id").alias("id_a"),
@@ -645,8 +648,11 @@ def _prefix_pairs(g: DataFrame, threshold: float) -> DataFrame:
         return (
             pairs_ab.join(a, "id_a")
             .join(b, "id_b")
-            # |A∪B| = |A|+|B|-|A∩B| — one set pass per pair instead of two
-            .withColumn("jaccard", inter / (F.col("_sza") + F.col("_szb") - inter))
+            # |A∪B| = |A|+|B|-|A∩B| — one set pass per pair instead of two;
+            # try_divide: two gram-less texts (0/0) do not pair, ANSI on or off
+            .withColumn(
+                "jaccard", F.try_divide(inter, F.col("_sza") + F.col("_szb") - inter)
+            )
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )

@@ -15,7 +15,7 @@ the cached normalized frame).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Mapping, Sequence
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -58,15 +58,25 @@ def validate_contract(df: DataFrame, required: Sequence[str]) -> None:
 
 
 def split_valid_invalid(
-    df: DataFrame, required: Sequence[str]
+    df: DataFrame,
+    required: Sequence[str],
+    parsers: Mapping[str, Callable[[Column], Column]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(valid_rows, quarantine_rows_with_null_fields) after blank→NULL
-    normalization over the required columns."""
+    normalization over the required columns. A column with a parser in
+    ``parsers`` also counts as NULL where its parser returns NULL (a value
+    the loaders could not read)."""
     validate_contract(df, required)
     normalized = normalize_blanks(df, required)
-    mask = any_null_mask(required)
+    parsers = parsers or {}
+    missing = {
+        c: (parsers[c](F.col(c)) if c in parsers else F.col(c)).isNull()
+        for c in required
+    }
+    mask = reduce(lambda a, b: a | b, missing.values())
     valid = normalized.filter(~mask)
     invalid = normalized.filter(mask).withColumn(
-        "null_fields", null_fields_expr(required)
+        "null_fields",
+        F.array_compact(F.array(*[F.when(m, F.lit(c)) for c, m in missing.items()])),
     )
     return valid, invalid

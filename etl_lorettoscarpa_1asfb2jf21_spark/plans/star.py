@@ -3,18 +3,19 @@
 Reference control flow (app/etl.py:136-149): staging read-back → ordered
 loader chain dim_tempo → dim_tipo → dim_grupo → dim_categoria →
 dim_classificacao → fato_lancamento, each an ``INSERT … ON CONFLICT DO
-NOTHING``. Here each loader is a lazy DataFrame lineage over one cached
-staging frame; idempotence comes from operators.upsert.insert_if_absent
-(dedup-within-batch + left-anti against existing), surrogate keys from
-operators.surrogate (row_number offset by max existing id, in the plan):
-run_etl launches no Spark job. The publish writes the six tables at once,
-the fact one file per month, and audits with two concurrent union counts.
+NOTHING``. Here run_etl resolves every dimension key in one driver pass:
+one collect of the batch's distinct natural-key tuples, beside the
+existing dims; new SERIAL ids continue after each dim's max id in
+natural-key order. The dims come back as small Arrow-backed frames, and
+the fact is one lazy broadcast join of staging to the tuple → five ids map,
+ON CONFLICT(id_hash) via operators.upsert.insert_if_absent. The publish
+writes the six tables at once, the fact one file per month, and audits
+with two concurrent union counts.
 
-Scale notes: dims are distinct-projections of staging (partial+final hash
-aggregate, map-side combined); the fact build is a 5-way star join where
-every dim side is broadcast (dims are small by construction). The only
-global sort is the row_number over each *dim's* distinct values — bounded by
-dim cardinality, never by fact size.
+Scale notes: the driver holds the dims and the batch's distinct
+(Data, Tipo, Grupo, Categoria, Classificacao) tuples, both bounded by dim
+cardinality, never by fact size; the fact build is one map-side join
+against the broadcast tuple map.
 """
 
 from __future__ import annotations
@@ -23,17 +24,25 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from ..functions.dates import month_string_to_date, time_attributes
 from ..functions.hashing import business_key_hash
 from ..functions.locale import normalize_valor
-from ..operators.surrogate import with_surrogate_key
 from ..operators.upsert import insert_if_absent
 from ..operators.validate import split_valid_invalid
-from ..schemas import REQUIRED_COLUMNS
+from ..schemas import (
+    DIM_CATEGORIA_SCHEMA,
+    DIM_CLASSIFICACAO_SCHEMA,
+    DIM_GRUPO_SCHEMA,
+    DIM_TEMPO_SCHEMA,
+    DIM_TIPO_SCHEMA,
+    REQUIRED_COLUMNS,
+)
 from ..sources.csv_locale import read_lancamentos_csv
 
 
@@ -44,15 +53,24 @@ def ingest_lancamentos(
 ) -> tuple[DataFrame, DataFrame]:
     """EP1: CSV → validated staging frame (+ quarantine frame).
 
-    Steps (app/app.py:22-79): locale CSV scan → contract validation with
-    blank→NULL coercion → Valor default "0" → id_hash → exact Decimal Valor.
+    Steps (app/app.py:22-79): locale CSV scan → ``stage_lancamentos``.
     Returns (staging, quarantine); both lazy.
     """
-    raw = read_lancamentos_csv(spark, csv_path)
+    return stage_lancamentos(read_lancamentos_csv(spark, csv_path))
+
+
+def stage_lancamentos(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Raw upload rows → (staging, quarantine), batch or streaming:
+    contract validation with blank→NULL coercion → Valor default "0" →
+    id_hash → exact Decimal Valor."""
     # All 7 columns are null-validated (app/app.py:25,39) — including Valor
     # and Classificação; the fillna("0") at app/app.py:65 only runs after the
     # gate, so it is kept for code-path parity but cannot fire on valid rows.
-    valid, invalid = split_valid_invalid(raw, REQUIRED_COLUMNS)
+    # A Data that is no MM/yyyy month (the reference's strptime raises,
+    # app/etl.py:28) is quarantined as NULL: it has no dim_tempo row to join.
+    valid, invalid = split_valid_invalid(
+        raw, REQUIRED_COLUMNS, {"Data": month_string_to_date}
+    )
     staging = (
         valid.na.fill({"Valor": "0"})
         .withColumn("id_hash", business_key_hash())
@@ -93,165 +111,127 @@ def _append(existing: DataFrame | None, new: DataFrame) -> DataFrame:
     return existing.unionByName(new)
 
 
-def _upsert_dim(
-    rows: DataFrame, existing: DataFrame | None, id_col: str, key: list[str]
-) -> DataFrame:
-    """ON CONFLICT(key) DO NOTHING into a SERIAL dim, ids after existing's."""
-    new = insert_if_absent(rows, existing, key)
-    keyed = with_surrogate_key(
-        new, id_col, key, offset=0 if existing is None else existing
-    ).select(id_col, *rows.columns)
-    return _append(existing, keyed)
+# The staging columns a fact row resolves its five dimension keys from, and
+# the five keys; the dims in their (id, *natural key, *attributes) column
+# order, nullable as planned frames are (a stored NULL-keyed row still loads).
+_NATURAL = ["Data", "Tipo", "Grupo", "Categoria", "Classificacao"]
+_FACT_IDS = ["id_tipo", "id_grupo", "id_categoria", "id_tempo", "id_classificacao"]
+_KEY_MAP_SCHEMA = StructType(
+    [StructField(c, StringType()) for c in _NATURAL]
+    + [StructField(c, IntegerType()) for c in _FACT_IDS]
+)
+_DIM_SCHEMAS = {
+    name: StructType([StructField(f.name, f.dataType) for f in schema])
+    for name, schema in [
+        ("dim_tempo", DIM_TEMPO_SCHEMA),
+        ("dim_tipo", DIM_TIPO_SCHEMA),
+        ("dim_grupo", DIM_GRUPO_SCHEMA),
+        ("dim_categoria", DIM_CATEGORIA_SCHEMA),
+        ("dim_classificacao", DIM_CLASSIFICACAO_SCHEMA),
+    ]
+}
 
 
-def _load_dim_tempo(staging: DataFrame, existing: DataFrame | None) -> DataFrame:
-    """app/etl.py:20-40: distinct Data → parse MM/yyyy → 5 time attrs.
-
-    Deviation (improvement): the reference appends with no conflict key —
-    dim_tempo has no unique constraint (initdb/01_schema.sql:53-61), so
-    re-running its ETL duplicates time rows. We upsert on (ano, mes), which
-    is what the fact join key requires for single-match semantics.
-    """
-    months = (
-        staging.na.drop(subset=["Data"])
-        .select("Data")
-        .distinct()
-        .withColumn("_d", month_string_to_date("Data"))
-        .withColumns(time_attributes("_d"))
-        .select("ano", "mes", "semana", "data_inicio", "data_fim")
-    )
-    return _upsert_dim(months, existing, "id_tempo", ["ano", "mes"])
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver rows as a frame over one Arrow batch (a list would become an
+    RDD of pickled rows, ~10× dearer per use)."""
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in schema]
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, cols))), schema)
 
 
-def _load_simple_dim(
-    staging: DataFrame,
-    existing: DataFrame | None,
-    src_col: str,
-    id_col: str,
-    name_col: str,
-    not_null: bool = False,
-) -> DataFrame:
-    """dim_tipo (app/etl.py:43-55) / dim_classificacao (app/etl.py:57-70):
-    SELECT DISTINCT → ON CONFLICT(name) DO NOTHING."""
-    vals = staging.select(F.col(src_col).alias(name_col))
-    if not_null:
-        vals = vals.filter(F.col(name_col).isNotNull())
-    return _upsert_dim(vals.distinct(), existing, id_col, [name_col])
-
-
-def _load_dim_grupo(
-    staging: DataFrame, dim_tipo: DataFrame, existing: DataFrame | None
-) -> DataFrame:
-    """app/etl.py:72-85: distinct (Tipo,Grupo) ⋈ dim_tipo → (id_tipo, nome_grupo)."""
-    pairs = (
-        staging.select(F.col("Tipo"), F.col("Grupo").alias("nome_grupo"))
-        .distinct()
-        .join(F.broadcast(dim_tipo), F.col("Tipo") == dim_tipo["nome_tipo"], "inner")
-        .select("id_tipo", "nome_grupo")
-    )
-    return _upsert_dim(pairs, existing, "id_grupo", ["id_tipo", "nome_grupo"])
-
-
-def _load_dim_categoria(
-    staging: DataFrame,
-    dim_tipo: DataFrame,
-    dim_grupo: DataFrame,
-    existing: DataFrame | None,
-) -> DataFrame:
-    """app/etl.py:88-102: distinct (Tipo,Grupo,Categoria) ⋈ tipo ⋈ grupo
-    (composite key J2) → (id_grupo, nome_categoria)."""
-    triples = (
-        staging.select("Tipo", "Grupo", F.col("Categoria").alias("nome_categoria"))
-        .distinct()
-        .alias("s")
-    )
-    resolved = (
-        triples.join(
-            F.broadcast(dim_tipo.alias("dt")), F.col("s.Tipo") == F.col("dt.nome_tipo"), "inner"
-        )
-        .join(
-            F.broadcast(dim_grupo.alias("dg")),
-            (F.col("s.Grupo") == F.col("dg.nome_grupo"))
-            & (F.col("dt.id_tipo") == F.col("dg.id_tipo")),
-            "inner",
-        )
-        .select(F.col("dg.id_grupo"), F.col("s.nome_categoria"))
-    )
-    return _upsert_dim(resolved, existing, "id_categoria", ["id_grupo", "nome_categoria"])
-
-
-def _load_fato(staging: DataFrame, wh: Warehouse, existing: DataFrame | None) -> DataFrame:
-    """app/etl.py:105-133: 5-way star join (J4) resolving every FK, join to
-    dim_tempo on computed (ano,mes) keys (J3), ON CONFLICT(id_hash) (J5)."""
-    s = staging.withColumn("_data_parsed", month_string_to_date("Data")).alias("s")
-    fact = (
-        s.join(
-            F.broadcast(wh.dim_tipo.alias("dt")),
-            F.col("s.Tipo") == F.col("dt.nome_tipo"),
-            "inner",
-        )
-        .join(
-            F.broadcast(wh.dim_grupo.alias("dg")),
-            (F.col("s.Grupo") == F.col("dg.nome_grupo"))
-            & (F.col("dt.id_tipo") == F.col("dg.id_tipo")),
-            "inner",
-        )
-        .join(
-            F.broadcast(wh.dim_categoria.alias("dc")),
-            (F.col("s.Categoria") == F.col("dc.nome_categoria"))
-            & (F.col("dg.id_grupo") == F.col("dc.id_grupo")),
-            "inner",
-        )
-        # INNER like the reference (app/etl.py:126): a NULL Classificação can
-        # never reach staging (the 7-column validation gate rejects it), so
-        # inner ≡ left here; inner keeps byte-parity if the gate is bypassed.
-        .join(
-            F.broadcast(wh.dim_classificacao.alias("dcl")),
-            F.col("s.Classificacao") == F.col("dcl.nome_classificacao"),
-            "inner",
-        )
-        .join(
-            F.broadcast(wh.dim_tempo.alias("dtmp")),
-            (F.col("dtmp.ano") == F.year(F.col("s._data_parsed")))
-            & (F.col("dtmp.mes") == F.month(F.col("s._data_parsed"))),
-            "inner",
-        )
-        .select(
-            F.col("dt.id_tipo"),
-            F.col("dg.id_grupo"),
-            F.col("dc.id_categoria"),
-            F.col("dtmp.id_tempo"),
-            F.col("dcl.id_classificacao"),
-            F.col("s.Descricao").alias("descricao"),
-            F.col("s.Valor").alias("valor"),
-            F.col("s.id_hash"),
-        )
-    )
-    new = insert_if_absent(fact, existing, ["id_hash"])
-    return _append(existing, new)
+def _serial(
+    old: list, width: int, new: dict[tuple, tuple]
+) -> tuple[list[tuple], dict[tuple, int]]:
+    """``INSERT … ON CONFLICT (key) DO NOTHING`` into a SERIAL dim, on the
+    driver. ``old`` rows are ``(id, *key, *attrs)`` with a ``width``-wide
+    key; ``new`` maps each candidate key to its attrs. Absent keys get ids
+    after old's max id in key order: the ids ``row_number() OVER (ORDER BY
+    key)`` offset by ``max(id)`` gives. Returns (all rows, key → id)."""
+    rows = [tuple(r) for r in old]
+    ids = {r[1 : 1 + width]: r[0] for r in rows}
+    top = max((r[0] for r in rows), default=0)
+    for i, key in enumerate(sorted(new.keys() - ids.keys()), top + 1):
+        ids[key] = i
+        rows.append((i, *key, *new[key]))
+    return rows, ids
 
 
 def run_etl(staging: DataFrame, warehouse: Warehouse | None = None) -> Warehouse:
-    """EP2: ordered loader chain over one cached staging frame.
+    """EP2: the loader chain dim_tempo → dim_tipo → dim_grupo →
+    dim_categoria → dim_classificacao → fato_lancamento, with every
+    dimension key resolved in one driver pass.
 
-    Pass an existing Warehouse for incremental (idempotent) loads; re-running
-    with the same staging batch grows no table (tested). Lazy: builds the
-    plans only and launches no Spark job (tested).
+    One collect takes the batch's distinct natural-key tuples, with their
+    time attributes computed in Spark; the existing dims are collected
+    beside it. ``_serial`` assigns the new ids, and each dim comes back as
+    a small Arrow-backed frame. The fact stays lazy: staging ⋈
+    broadcast(tuple → five ids), ON CONFLICT(id_hash) against the existing
+    fact. A row enters the star only whole: a NULL key or a ``Data`` that
+    does not parse resolves no dim and adds no fact row.
+
+    Pass an existing Warehouse for incremental (idempotent) loads;
+    re-running with the same staging batch grows no table (tested).
+    Nothing is cached: the key collect reads only the five natural
+    columns of staging, and the publish reads staging again for the fact.
     """
+    spark = staging.sparkSession
     wh = warehouse or Warehouse()
-    staging = staging.cache()
-    out = Warehouse()
-    out.dim_tempo = _load_dim_tempo(staging, wh.dim_tempo).cache()
-    out.dim_tipo = _load_simple_dim(staging, wh.dim_tipo, "Tipo", "id_tipo", "nome_tipo").cache()
-    out.dim_grupo = _load_dim_grupo(staging, out.dim_tipo, wh.dim_grupo).cache()
-    out.dim_categoria = _load_dim_categoria(
-        staging, out.dim_tipo, out.dim_grupo, wh.dim_categoria
-    ).cache()
-    out.dim_classificacao = _load_simple_dim(
-        staging, wh.dim_classificacao, "Classificacao", "id_classificacao",
-        "nome_classificacao", not_null=True,
-    ).cache()
-    out.fato_lancamento = _load_fato(staging, out, wh.fato_lancamento)
+    tuples = (
+        staging.select(*_NATURAL)
+        .distinct()
+        .withColumns(time_attributes(month_string_to_date("Data")))
+        .na.drop()
+    )
+    frames = [tuples] + [
+        None if getattr(wh, name) is None else getattr(wh, name).select(*schema.names)
+        for name, schema in _DIM_SCHEMAS.items()
+    ]
+    found, tempo, tipo, grupo, categoria, classificacao = _in_pool(
+        spark, lambda df: [] if df is None else df.collect(), frames
+    )
+
+    tempo, tempo_id = _serial(
+        tempo, 2, {(r.ano, r.mes): (r.semana, r.data_inicio, r.data_fim) for r in found}
+    )
+    tipo, tipo_id = _serial(tipo, 1, {(r.Tipo,): () for r in found})
+    grupo_key = {r: (tipo_id[(r.Tipo,)], r.Grupo) for r in found}
+    grupo, grupo_id = _serial(grupo, 2, dict.fromkeys(grupo_key.values(), ()))
+    categoria_key = {r: (grupo_id[grupo_key[r]], r.Categoria) for r in found}
+    categoria, categoria_id = _serial(
+        categoria, 2, dict.fromkeys(categoria_key.values(), ())
+    )
+    classificacao, classificacao_id = _serial(
+        classificacao, 1, {(r.Classificacao,): () for r in found}
+    )
+    key_map = [
+        (
+            *r[: len(_NATURAL)],
+            tipo_id[(r.Tipo,)],
+            grupo_id[grupo_key[r]],
+            categoria_id[categoria_key[r]],
+            tempo_id[r.ano, r.mes],
+            classificacao_id[(r.Classificacao,)],
+        )
+        for r in found
+    ]
+
+    out = Warehouse(*(
+        _local_frame(spark, rows, schema)
+        for rows, schema in zip(
+            [tempo, tipo, grupo, categoria, classificacao], _DIM_SCHEMAS.values()
+        )
+    ))
+    fact = staging.join(
+        F.broadcast(_local_frame(spark, key_map, _KEY_MAP_SCHEMA)), _NATURAL
+    ).select(
+        *_FACT_IDS,
+        F.col("Descricao").alias("descricao"),
+        F.col("Valor").alias("valor"),
+        "id_hash",
+    )
+    out.fato_lancamento = _append(
+        wh.fato_lancamento, insert_if_absent(fact, wh.fato_lancamento, ["id_hash"])
+    )
     return out
 
 

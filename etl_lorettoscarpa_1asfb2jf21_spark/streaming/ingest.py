@@ -5,29 +5,35 @@ The reference ingests one CSV per month through a Streamlit widget
 files into a directory, get the same validated/normalized/hashed staging
 rows continuously, exactly-once per file via checkpointing.
 
-The transformation lineage is IDENTICAL to the batch path
-(plans.star.ingest_lancamentos applies the same expressions) — one
-definition of the contract, two execution modes.
+The transformation lineage is IDENTICAL to the batch path (both run
+plans.star.stage_lancamentos) — one definition of the contract, two
+execution modes.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.hashing import business_key_hash
-from ..functions.locale import normalize_valor
-from ..operators.validate import any_null_mask, normalize_blanks
-from ..schemas import COLUMN_ALIASES, LANCAMENTOS_CSV_SCHEMA, REQUIRED_COLUMNS
+from ..plans.star import (
+    Warehouse,
+    read_warehouse,
+    run_etl,
+    stage_lancamentos,
+    write_warehouse,
+)
+from ..schemas import COLUMN_ALIASES, LANCAMENTOS_CSV_SCHEMA
 
 
 def stream_lancamentos(spark: SparkSession, input_dir: str) -> DataFrame:
     """readStream over a drop directory → validated staging rows (lazy).
 
-    Invalid rows (any required field null/blank) are *filtered* here, not
-    quarantined — a streaming sink for the quarantine split is trivially the
-    complement filter on a second query over the same source.
+    Invalid rows (a required field null/blank, or a Data that does not
+    parse) are *filtered* here, not quarantined — a streaming sink for the
+    quarantine split is trivially the complement filter on a second query
+    over the same source.
     """
     raw = (
         spark.readStream.schema(LANCAMENTOS_CSV_SCHEMA)
@@ -39,13 +45,7 @@ def stream_lancamentos(spark: SparkSession, input_dir: str) -> DataFrame:
     for old, new in COLUMN_ALIASES.items():
         if old in raw.columns:
             raw = raw.withColumnRenamed(old, new)
-    normalized = normalize_blanks(raw, REQUIRED_COLUMNS)
-    valid = normalized.filter(~any_null_mask(REQUIRED_COLUMNS))
-    return (
-        valid.na.fill({"Valor": "0"})
-        .withColumn("id_hash", business_key_hash())
-        .withColumn("Valor", normalize_valor("Valor"))
-    )
+    return stage_lancamentos(raw)[0]
 
 
 def start_bronze_sink(
@@ -74,14 +74,13 @@ def start_gold_sink(
     reference gets from ON CONFLICT DO NOTHING (app/etl.py:48-129).
 
     The gold tables are re-read each batch and the fact grows by
-    append-only new rows; tables are localCheckpoint'ed before the
-    overwrite so Spark never reads and overwrites the same files in one
-    plan. (On a real deployment this is a Delta/Iceberg MERGE; plain
-    parquet keeps the engine dependency-free here.)
+    append-only new rows; the fact, the one table whose plan reads the gold
+    files, is localCheckpoint'ed before the overwrite so Spark never reads
+    and overwrites the same files in one plan. (On a real deployment this
+    is a Delta/Iceberg MERGE; plain parquet keeps the engine
+    dependency-free here.) Nothing is cached, so a long-running stream
+    pins no batch.
     """
-    import os
-
-    from ..plans.star import Warehouse, read_warehouse, run_etl, write_warehouse
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -93,8 +92,7 @@ def start_gold_sink(
             else Warehouse()
         )
         wh = run_etl(batch_df, existing)
-        for name in vars(wh):
-            setattr(wh, name, getattr(wh, name).localCheckpoint(eager=True))
+        wh.fato_lancamento = wh.fato_lancamento.localCheckpoint(eager=True)
         write_warehouse(wh, gold_path)
 
     return (

@@ -20,6 +20,17 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def ansi_spark(spark):
+    """A session on the same context with the SQL settings a plain
+    ``SparkSession.builder`` session has: ANSI mode on, Arrow transfers
+    off."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    s.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    return s
+
+
+@pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
 

@@ -268,6 +268,22 @@ def test_ngram_jaccard_pairs(spark):
     assert (4, 5) not in got
 
 
+
+@pytest.mark.parametrize("strategy", ["allpairs", "prefix"])
+def test_ngram_jaccard_pairs_gramless_texts_under_ansi(ansi_spark, strategy):
+    """Two texts with no 3-grams in one block (NULL, and "ab" shorter than
+    n) have Jaccard 0/0: with ANSI on they do not pair, and nothing raises
+    DIVIDE_BY_ZERO."""
+    df = ansi_spark.createDataFrame(
+        [(1, "ab", "blk"), (2, None, "blk"), (3, "abcdef", "blk")],
+        "doc_id int, text string, blk string",
+    )
+    pairs = ngram_jaccard_pairs(
+        df, "text", "doc_id", "blk", n=3, threshold=0.2, strategy=strategy
+    )
+    assert pairs.collect() == []
+
+
 VECS = [
     (1, [1.0, 0.0, 0.0, 0.0]),
     (2, [0.9, 0.1, 0.0, 0.0]),

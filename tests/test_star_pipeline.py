@@ -10,6 +10,8 @@ import textwrap
 from decimal import Decimal
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
     Warehouse,
@@ -219,10 +221,17 @@ def test_publish_crash_leaves_readers_on_old_version(spark, staging, tmp_path):
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
 
 
+# Jobs one load may launch, run_etl and publish_warehouse together: the
+# key-resolution collect (+ the existing dims' collects on an incremental
+# load), the six writes and the two audit counts. Surrogate keys computed
+# in the plan run as one-task jobs per dim and stage, ~50 per load.
+LOAD_PATH_JOBS = 25
+
+
 def test_load_path_job_budget(spark, staging, tmp_path, jobs_during):
-    """run_etl only builds plans: it launches no Spark job, on a fresh or
-    an incremental load. Every job publish_warehouse launches, from its
-    pool threads too, carries the caller's job group."""
+    """A whole load, run_etl then publish_warehouse, fits LOAD_PATH_JOBS,
+    fresh and incremental; every job it launches, from the pool threads
+    too, carries the caller's job group."""
     from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
         publish_warehouse,
         read_warehouse,
@@ -230,16 +239,15 @@ def test_load_path_job_budget(spark, staging, tmp_path, jobs_during):
 
     valid, _ = staging
     base = str(tmp_path / "gold_jobs")
-    wh, launched, grouped = jobs_during(lambda: run_etl(valid))
-    assert launched == grouped == set()
-    _, launched, grouped = jobs_during(lambda: publish_warehouse(wh, base))
-    assert grouped and launched == grouped
 
-    prev = read_warehouse(spark, base)
-    wh, launched, grouped = jobs_during(lambda: run_etl(valid, prev))
-    assert launched == grouped == set()
-    _, launched, grouped = jobs_during(lambda: publish_warehouse(wh, base))
-    assert grouped and launched == grouped
+    def load(prev):
+        return publish_warehouse(run_etl(valid, prev), base)
+
+    for prev in (None, "incremental"):
+        prev = prev and read_warehouse(spark, base)
+        _, launched, grouped = jobs_during(lambda: load(prev))
+        assert grouped and launched == grouped
+        assert len(launched) <= LOAD_PATH_JOBS, sorted(launched)
 
 
 def test_publish_writes_one_file_per_month(spark, staging, tmp_path):
@@ -429,3 +437,140 @@ def test_corrupt_record_quarantine(spark, tmp_path):
     assert len(bad_rows) == 2
     assert any(b.startswith("Luz,") for b in bad_rows)
     assert any(b.startswith("Curto,") for b in bad_rows)
+
+
+@pytest.mark.parametrize("session", ["spark", "ansi_spark"])
+def test_unparseable_month_is_quarantined(request, session, tmp_path):
+    """A Data that is no MM/yyyy month is quarantined with Data in
+    null_fields, with ANSI mode off or on, so re-loading the same upload
+    three times grows no table."""
+    s = request.getfixturevalue(session)
+    p = tmp_path / "bad_month.csv"
+    p.write_text(
+        CSV.splitlines()[0] + "\n"
+        + "Mercado,Despesa,Casa,Supermercado,Variável,01/2024,\"823,45\"\n"
+        + "Feira,Despesa,Casa,Supermercado,Variável,13/2024,\"12,00\"\n",
+        encoding="utf-8",
+    )
+    valid, quarantine = ingest_lancamentos(s, str(p))
+    bad = quarantine.collect()
+    assert [(r["Descricao"], r["Data"], list(r["null_fields"])) for r in bad] == [
+        ("Feira", "13/2024", ["Data"])
+    ]
+    wh = run_etl(valid)
+    counts = wh.counts()
+    for _ in range(2):
+        wh = run_etl(valid, wh)
+        assert wh.counts() == counts
+    assert counts["dim_tempo"] == counts["fato_lancamento"] == 1
+
+
+# --------------------------------------------- key resolution vs an oracle
+
+TIPOS = ["Despesa", "despesa", "Receita", "Investimento"]
+GRUPOS = ["Casa", "casa", "Saúde", "Lazer"]
+CATEGORIAS = ["Aluguel", "aluguel", "Água", "Agua", "água", "Ônibus"]
+CLASSIFICACOES = ["Fixa", "fixa", "Variável"]
+MONTHS = ["11/2023", "12/2023", "01/2024", "02/2024"]
+STAGING_DDL = (
+    "Descricao string, Tipo string, Grupo string, Categoria string, "
+    "Classificacao string, Data string, Valor decimal(15,2)"
+)
+
+
+def _staging_row(t, g, c, cl, month, k):
+    """One staging row. The description names every chosen value, so two
+    rows share an id_hash only when they are the same row."""
+    desc = f"d{k}-{TIPOS.index(t)}{GRUPOS.index(g)}{CATEGORIAS.index(c)}"
+    desc += str(CLASSIFICACOES.index(cl))
+    return (desc, t, g, c, cl, month, Decimal(k))
+
+
+def _on_conflict_oracle(batches):
+    """The gold tables after loading ``batches`` (lists of staging rows with
+    their id_hash), by the reference's ON CONFLICT DO NOTHING loaders in
+    plain Python: a dim's new keys get SERIAL ids after its max id, in
+    natural-key order; a fact row whose id_hash exists is skipped."""
+    import calendar
+    from datetime import date
+
+    tempo, tipo, grupo, categoria, classif, fact = {}, {}, {}, {}, {}, {}
+
+    def serial(dim, keys):
+        top = max(dim.values(), default=0)
+        for i, key in enumerate(sorted(set(keys) - dim.keys()), top + 1):
+            dim[key] = i
+
+    for rows in batches:
+        months = {(int(r[5][3:]), int(r[5][:2])) for r in rows}
+        serial(tempo, months)
+        serial(tipo, {r[1] for r in rows})
+        serial(grupo, {(tipo[r[1]], r[2]) for r in rows})
+        serial(categoria, {(grupo[tipo[r[1]], r[2]], r[3]) for r in rows})
+        serial(classif, {r[4] for r in rows})
+        for r in rows:
+            if r[7] not in fact:
+                g = grupo[tipo[r[1]], r[2]]
+                ano, mes = int(r[5][3:]), int(r[5][:2])
+                fact[r[7]] = (tipo[r[1]], g, categoria[g, r[3]], tempo[ano, mes],
+                              classif[r[4]], r[0], r[6], r[7])
+    day = lambda a, m: calendar.monthrange(a, m)[1]  # noqa: E731
+    return {
+        "dim_tempo": sorted(
+            (i, a, m, date(a, m, 1).isocalendar()[1], date(a, m, 1), date(a, m, day(a, m)))
+            for (a, m), i in tempo.items()
+        ),
+        "dim_tipo": sorted((i, k) for k, i in tipo.items()),
+        "dim_grupo": sorted((i, *k) for k, i in grupo.items()),
+        "dim_categoria": sorted((i, *k) for k, i in categoria.items()),
+        "dim_classificacao": sorted((i, k) for k, i in classif.items()),
+        "fato_lancamento": sorted(fact.values()),
+    }
+
+
+_row = st.tuples(
+    st.sampled_from(TIPOS),
+    st.sampled_from(GRUPOS),
+    st.sampled_from(CATEGORIAS),
+    st.sampled_from(CLASSIFICACOES),
+    st.sampled_from(MONTHS),
+    st.integers(0, 3),
+)
+# a batch repeats its first row: an intra-batch duplicate
+_batch = st.lists(_row, min_size=1, max_size=6).map(lambda rows: rows + rows[:1])
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(batches=st.lists(_batch, min_size=2, max_size=4))
+@example(batches=[
+    # one Grupo name under two tipos; a later batch brings a new tipo, a
+    # case-distinct grupo and an earlier month
+    [("Despesa", "Casa", "Aluguel", "Fixa", "01/2024", 0),
+     ("Receita", "Casa", "Água", "Variável", "02/2024", 1)],
+    [("Investimento", "casa", "Agua", "fixa", "12/2023", 2),
+     ("Despesa", "Casa", "Aluguel", "Fixa", "01/2024", 0)],
+    [("despesa", "Saúde", "água", "Fixa", "11/2023", 3),
+     ("Receita", "Casa", "Água", "Variável", "02/2024", 1)],
+    [("Despesa", "Lazer", "Ônibus", "Fixa", "02/2024", 1)],
+])
+def test_key_resolution_matches_on_conflict_oracle(spark, batches):
+    """A sequence of loads builds every gold table, ids included, as the
+    reference's ON CONFLICT DO NOTHING / SERIAL loaders would."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.functions.hashing import business_key_hash
+
+    wh, loaded = None, []
+    for rows in batches:
+        staging = spark.createDataFrame(
+            [_staging_row(*r) for r in rows], STAGING_DDL
+        ).withColumn("id_hash", business_key_hash())
+        loaded.append([tuple(r) for r in staging.collect()])
+        wh = run_etl(staging, wh)
+    got = {
+        name: sorted(tuple(r) for r in getattr(wh, name).collect())
+        for name in vars(wh)
+    }
+    assert got == _on_conflict_oracle(loaded)

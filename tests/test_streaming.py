@@ -220,6 +220,37 @@ def test_streaming_gold_end_to_end(spark, tmp_path):
     assert wh2.dim_tempo.count() == 2  # 01/2024, 02/2024
 
 
+def test_gold_sink_pins_no_batch(spark, tmp_path):
+    """An availableNow gold stream of two micro-batches loads both and
+    leaves nothing in the session's cache."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
+        read_warehouse,
+        stage_lancamentos,
+    )
+    from etl_lorettoscarpa_1asfb2jf21_spark.schemas import LANCAMENTOS_CSV_SCHEMA
+    from etl_lorettoscarpa_1asfb2jf21_spark.streaming.ingest import start_gold_sink
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "m1.csv").write_text(CSV1, encoding="utf-8")
+    (in_dir / "m2.csv").write_text(CSV2, encoding="utf-8")
+    # one file per micro-batch: two batches in one availableNow run
+    staged, _ = stage_lancamentos(
+        spark.readStream.schema(LANCAMENTOS_CSV_SCHEMA)
+        .option("header", True)
+        .option("maxFilesPerTrigger", 1)
+        .csv(str(in_dir))
+    )
+    gold = str(tmp_path / "gold")
+    spark.catalog.clearCache()
+    q = start_gold_sink(staged, gold, str(tmp_path / "ckpt"))
+    q.awaitTermination(180)
+    assert not q.isActive
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+    assert read_warehouse(spark, gold).fato_lancamento.count() == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_stream_static_enrichment_matches_batch(spark, tmp_path, sf_small):
     """Stream-static broadcast join: streaming events enriched with a batch
     dim produce the same rows as the identical batch join, and unmatched
