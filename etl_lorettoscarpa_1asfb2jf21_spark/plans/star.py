@@ -180,7 +180,6 @@ def run_etl(staging: DataFrame, warehouse: Warehouse | None = None) -> Warehouse
         staging.select(*_NATURAL)
         .distinct()
         .withColumns(time_attributes(month_string_to_date("Data")))
-        .na.drop()
     )
     frames = [tuples] + [
         None if getattr(wh, name) is None else getattr(wh, name).select(*schema.names)
@@ -189,6 +188,10 @@ def run_etl(staging: DataFrame, warehouse: Warehouse | None = None) -> Warehouse
     found, tempo, tipo, grupo, categoria, classificacao = _in_pool(
         spark, lambda df: [] if df is None else df.collect(), frames
     )
+    # whole tuples only (a Row's ``in`` tests field names, hence tuple());
+    # dropped here, since a NULL filter in the plan is pushed below the
+    # distinct and parses every staging row's Data again
+    found = [r for r in found if None not in tuple(r)]
 
     tempo, tempo_id = _serial(
         tempo, 2, {(r.ano, r.mes): (r.semana, r.data_inicio, r.data_fim) for r in found}

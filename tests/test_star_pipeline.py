@@ -464,6 +464,15 @@ def test_unparseable_month_is_quarantined(request, session, tmp_path):
         assert wh.counts() == counts
     assert counts["dim_tempo"] == counts["fato_lancamento"] == 1
 
+    # a frame that skipped the gate: the bad month enters no table
+    from etl_lorettoscarpa_1asfb2jf21_spark.functions.hashing import business_key_hash
+
+    ungated = s.createDataFrame(
+        [("Feira", "Despesa", "Casa", "Supermercado", "Variável", "13/2024", Decimal(12))],
+        STAGING_DDL,
+    ).withColumn("id_hash", business_key_hash())
+    assert run_etl(valid.unionByName(ungated), wh).counts() == counts
+
 
 # --------------------------------------------- key resolution vs an oracle
 
