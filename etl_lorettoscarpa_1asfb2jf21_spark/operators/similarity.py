@@ -13,7 +13,8 @@ pairs and semantic dedup (X1/X2).
   SemDeDup forms — is integer-exact end to end, so every catalog query
   over it has a DuckDB twin. Each splits into build_*/search_* halves
   (build once, serve many; save_ann_index/load_ann_index).
-* mmr_topk — integer-exact diversified top-k.
+* mmr_topk — integer-exact diversified top-k: a Spark relevance
+  shortlist, then one grouped greedy kernel per query.
 
 Each operator has one code path. ``lsh_topk`` alone keeps a
 ``use_arrow`` switch: the catalog runs both its portable fold (the
@@ -2560,17 +2561,23 @@ def mmr_topk(
     Scale: the corpus is touched ONLY by the relevance pass (one
     broadcast-queries map scan + two-phase per-query top-``shortlist``,
     exactly brute_force_topk's shape — compose with search_*_index for a
-    sub-linear candidate stage). Every greedy round after that runs on
-    |queries|·shortlist rows: the pairwise-sim table is
-    |queries|·shortlist² rows built once, and each of the k−1 rounds is
-    one small-key join + window argmax — bounded state independent of
-    corpus size, no Python.
+    sub-linear candidate stage). The greedy then runs as one
+    ``groupBy(query_id).applyInPandas`` kernel: a group is one query's
+    ≤``shortlist`` rows, whose pairwise sims are one int64 matmul, so the
+    Python boundary moves shortlist·dim ints per query, never corpus rows.
+
+    NULLs follow SQL, as in the twin: a NULL vector makes every dot with
+    it NULL (a NULL element does too, as in the relevance fold), ``max``
+    skips NULL sims, and a NULL score ranks after every other
+    (``DESC NULLS LAST``), then by corpus id.
 
     Returns (query_id, corpus_id, sel_rank, rel, maxsim, mmr): sel_rank
     = greedy pick order 1..k; maxsim = the candidate's max similarity to
     the already-selected set at pick time (0 for the first pick);
     mmr = the packed integer score it won the round with.
     """
+    from pyspark.sql.types import LongType, StructField, StructType
+
     # λ=0 would make the first round's mmr (= lam_num·rel) constant: the
     # Spark pick would degenerate to lowest-corpus-id while the unrolled
     # oracle's first round orders by rel DESC — reject the degenerate λ
@@ -2587,98 +2594,83 @@ def mmr_topk(
     cc = corpus.select(
         F.col(corpus_id), quantize_expr(corpus_vec, scale).alias("_qcv")
     )
-
-    def idot(a: str, b: str):
-        return F.aggregate(
-            F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
     rel = (
         spread(cc)
         .crossJoin(F.broadcast(qq))
         .select(
             F.col(query_id),
             F.col(corpus_id),
-            idot("_qqv", "_qcv").alias("rel"),
+            F.aggregate(
+                F.zip_with("_qqv", "_qcv", lambda x, y: x * y),
+                F.lit(0).cast("long"),
+                lambda acc, v: acc + v,
+            ).alias("rel"),
         )
     )
     short = per_key_topn(
         rel, [query_id], [F.desc("rel"), F.col(corpus_id)], shortlist
-    ).select(query_id, corpus_id, "rel").localCheckpoint(eager=False)
+    )
+    null = np.iinfo(np.int64).min  # SQL NULL: ranks below every score
 
-    # pairwise sims within each query's shortlist: |q|·m² rows, built once
-    sv = short.join(cc, corpus_id).select(query_id, corpus_id, "_qcv")
-    a = sv.select(
-        F.col(query_id),
-        F.col(corpus_id).alias("_ca"),
-        F.col("_qcv").alias("_va"),
-    )
-    b = sv.select(
-        F.col(query_id),
-        F.col(corpus_id).alias("_cb"),
-        F.col("_qcv").alias("_vb"),
-    )
-    sims = (
-        a.join(b, query_id)
-        .filter(F.col("_ca") != F.col("_cb"))
-        .select(F.col(query_id), "_ca", "_cb", idot("_va", "_vb").alias("_sim"))
-        .localCheckpoint(eager=False)
-    )
+    def greedy(pdf):
+        import pandas as pd
 
-    w = Window.partitionBy(query_id).orderBy(F.desc("mmr"), F.col(corpus_id))
-    first = (
-        short.select(
-            F.col(query_id),
-            F.col(corpus_id),
-            "rel",
-            F.lit(0).cast("long").alias("maxsim"),
-            (F.lit(lam_num) * F.col("rel")).alias("mmr"),
+        pdf = pdf.sort_values(corpus_id, kind="mergesort")
+        n = len(pdf)
+        vecs = pdf["_qcv"].to_numpy()
+        ok = np.flatnonzero([v is not None and not pd.isna(v).any() for v in vecs])
+        sims = np.full((n, n), null)
+        if len(ok):
+            v = np.stack(vecs[ok]).astype(np.int64)
+            sims[np.ix_(ok, ok)] = v @ v.T
+        rel = np.where(pdf["_rel_null"], null, pdf["rel"].to_numpy(np.int64))
+        left = np.ones(n, dtype=bool)
+        maxsim = np.zeros(n, dtype=np.int64)
+        picks, ms, scores = [], [], []
+        for _ in range(min(k, n)):
+            scored = (rel != null) & (maxsim != null)
+            mmr = np.where(scored, lam_num * rel - lam_rem * maxsim, null)
+            # first-occurrence argmax over id-sorted rows: ties go to the
+            # lower id, and all-NULL scores to the lowest remaining id
+            cand = np.flatnonzero(left)
+            i = cand[np.argmax(mmr[cand])]
+            picks.append(i)
+            ms.append(maxsim[i])
+            scores.append(mmr[i])
+            left[i] = False
+            maxsim = sims[i] if len(picks) == 1 else np.maximum(maxsim, sims[i])
+
+        def col(x):
+            x = np.asarray(x, dtype=np.int64)
+            return pd.arrays.IntegerArray(x, x == null)
+
+        return pd.DataFrame(
+            {
+                query_id: pdf[query_id].to_numpy()[picks],
+                corpus_id: pdf[corpus_id].to_numpy()[picks],
+                "sel_rank": np.arange(1, len(picks) + 1, dtype=np.int64),
+                "rel": col(rel[picks]),
+                "maxsim": col(ms),
+                "mmr": col(scores),
+            }
         )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+
+    schema = StructType(
+        [
+            StructField(query_id, queries.schema[query_id].dataType),
+            StructField(corpus_id, corpus.schema[corpus_id].dataType),
+        ]
+        + [StructField(c, LongType()) for c in ("sel_rank", "rel", "maxsim", "mmr")]
+    )
+    return (
+        short.join(cc, corpus_id)
         .select(
-            query_id, corpus_id, F.lit(1).cast("long").alias("sel_rank"),
-            "rel", "maxsim", "mmr",
+            query_id,
+            corpus_id,
+            F.coalesce("rel", F.lit(0)).alias("rel"),
+            F.isnull("rel").alias("_rel_null"),
+            "_qcv",
         )
+        .groupBy(query_id)
+        .applyInPandas(greedy, schema)
     )
-    selected = first
-    remaining = short.join(first.select(query_id, corpus_id), [query_id, corpus_id], "left_anti")
-    for r in range(2, k + 1):
-        ms = (
-            sims.join(
-                selected.select(F.col(query_id), F.col(corpus_id).alias("_cb")),
-                [query_id, "_cb"],
-            )
-            .groupBy(query_id, "_ca")
-            .agg(F.max("_sim").alias("maxsim"))
-        )
-        pick = (
-            remaining.join(
-                ms.select(query_id, F.col("_ca").alias(corpus_id), "maxsim"),
-                [query_id, corpus_id],
-            )
-            .select(
-                F.col(query_id),
-                F.col(corpus_id),
-                "rel",
-                "maxsim",
-                (
-                    F.lit(lam_num) * F.col("rel")
-                    - F.lit(lam_rem) * F.col("maxsim")
-                ).alias("mmr"),
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                query_id, corpus_id,
-                F.lit(r).cast("long").alias("sel_rank"),
-                "rel", "maxsim", "mmr",
-            )
-        )
-        selected = selected.unionByName(pick).localCheckpoint(eager=False)
-        remaining = remaining.join(
-            pick.select(query_id, corpus_id), [query_id, corpus_id], "left_anti"
-        ).localCheckpoint(eager=False)
-    return selected

@@ -13,7 +13,8 @@ strategies, chosen by the caller:
   non-dense, and LONG-typed (the partition id lives in the high bits, so
   int32 would wrap and collide). Use when density doesn't matter.
 
-Appends offset by max(existing id) to keep ids stable across batches.
+An append passes ``offset`` = max(existing id) to keep ids stable across
+batches.
 """
 
 from __future__ import annotations
@@ -37,25 +38,16 @@ def with_surrogate_key(
     id_col: str,
     order_by: Sequence[str],
     strategy: str = "dense",
-    offset: int | DataFrame = 0,
+    offset: int = 0,
     dense_max_rows: int = DENSE_MAX_ROWS,
 ) -> DataFrame:
     """Attach an integer surrogate key column named ``id_col``.
-
-    ``offset`` is an int, or the existing table: ids then continue after
-    its max ``id_col`` (0 when empty), a one-row aggregate cross-joined
-    in the plan, so building the key launches no job.
 
     ``dense`` guards itself: a row numbered past ``dense_max_rows`` raises
     when the plan runs (use ``sparse`` — fully parallel, unique,
     non-dense — instead).
     """
-    if isinstance(offset, DataFrame):
-        base = offset.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("_id_base"))
-        df = df.crossJoin(F.broadcast(base))
-        start = F.col("_id_base")
-    else:
-        start = F.lit(offset)
+    start = F.lit(offset)
     if strategy == "sparse":
         # stays LONG: monotonically_increasing_id packs the partition id
         # into the high bits (values ≥ 2^33 on any multi-partition input),
@@ -75,5 +67,4 @@ def with_surrogate_key(
         ).otherwise(rn + start).cast("int")
     else:
         raise ValueError(f"unknown surrogate strategy: {strategy!r}")
-    out = df.withColumn(id_col, key)
-    return out.drop("_id_base") if isinstance(offset, DataFrame) else out
+    return df.withColumn(id_col, key)

@@ -1142,6 +1142,11 @@ def x2_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gr2 — exact triangle / wedge counting (degree-oriented)
 # =====================================================================
 
+# Edge count above which gr2 counts triangles with the adjacency-array
+# form instead of the wedge self-join (see gr2_triangle_count).
+GR2_ADJ_EDGES = 20_000_000
+
+
 @query(
     "gr2_triangle_count",
     """
@@ -1188,7 +1193,7 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     two value-identical branches on MEASURED edge mass (round-12 verdict
     #7 — the same regime-gate pattern as the ANN `wide_queries` flag):
 
-    * m <= $SPARK_GRAFT_GR2_ADJ_EDGES (default 20M): the WEDGE self-join
+    * m <= GR2_ADJ_EDGES (20M): the WEDGE self-join
       form — each directed 2-path u→m→e enumerated once at its middle
       node, closed by one more join on the canonical edge table. Fewer
       stages (no adjacency build), and at gate/sf1 scale (<=3M edges)
@@ -1203,14 +1208,13 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
       Σ indeg·outdeg ≫ m on power-law graphs. Total work O(m^1.5).
 
     The edge count that picks the branch materializes the edge
-    checkpoint every branch needs anyway. The DuckDB twin counts the
+    checkpoint every branch needs anyway. Tests run the adjacency form by
+    patching GR2_ADJ_EDGES to 0. The DuckDB twin counts the
     same triangles via the a<b<c form (orientation changes enumeration
     order, not the count); wedges = Σ d(d−1)/2 exact; n_nodes/n_edges/
     n_wedges fold into ONE aggregate over the degree table (Σd = 2m),
     replacing three separately-planned scalar subtrees.
     """
-    import os
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"),
         F.col("l_partkey").alias("pk"),
@@ -1226,7 +1230,6 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regime gate: one count materializes the checkpoint (paid once, every
     # downstream branch reads the cached edges) and picks the triangle plan
     m = e.count()
-    adj_cap = int(os.environ.get("SPARK_GRAFT_GR2_ADJ_EDGES", "20000000"))
     # the degree table feeds the fused stats row AND both orientation
     # joins — checkpoint it so the union+agg runs once, not three times
     deg = (
@@ -1247,7 +1250,7 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
-    if m <= adj_cap:
+    if m <= GR2_ADJ_EDGES:
         # wedge self-join form: enumerate each directed 2-path once at its
         # middle node, close with one join on the canonical edge table
         w1 = o.select(F.col("u"), F.col("v").alias("w_mid"))

@@ -77,7 +77,4 @@ def read_lancamentos_csv_with_quarantine(
     quarantine = df.filter(F.col("_corrupt_record").isNotNull()).select(
         "_corrupt_record"
     )
-    for old, new in COLUMN_ALIASES.items():
-        if old in good.columns:
-            good = good.withColumnRenamed(old, new)
     return good, quarantine

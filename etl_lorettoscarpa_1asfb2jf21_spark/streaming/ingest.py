@@ -24,7 +24,7 @@ from ..plans.star import (
     stage_lancamentos,
     write_warehouse,
 )
-from ..schemas import COLUMN_ALIASES, LANCAMENTOS_CSV_SCHEMA
+from ..schemas import LANCAMENTOS_CSV_SCHEMA
 
 
 def stream_lancamentos(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -42,9 +42,6 @@ def stream_lancamentos(spark: SparkSession, input_dir: str) -> DataFrame:
         .option("emptyValue", "")
         .csv(input_dir)
     )
-    for old, new in COLUMN_ALIASES.items():
-        if old in raw.columns:
-            raw = raw.withColumnRenamed(old, new)
     return stage_lancamentos(raw)[0]
 
 

@@ -45,13 +45,6 @@ def test_surrogate_dense_deterministic(spark):
     assert out1 == out2 == {"a": 1, "b": 2, "c": 3}
     out3 = with_surrogate_key(df, "id", ["name"], offset=10).collect()
     assert sorted(r["id"] for r in out3) == [11, 12, 13]
-    # a table offset continues after its max id (0 when it is empty)
-    existing = spark.createDataFrame([(4,), (7,)], "id int")
-    out4 = with_surrogate_key(df, "id", ["name"], offset=existing).collect()
-    assert sorted(r["id"] for r in out4) == [8, 9, 10]
-    assert list(out4[0].asDict()) == ["name", "id"]
-    out5 = with_surrogate_key(df, "id", ["name"], offset=existing.limit(0)).collect()
-    assert sorted(r["id"] for r in out5) == [1, 2, 3]
 
 
 def test_surrogate_dense_refuses_fact_sized_input(spark):

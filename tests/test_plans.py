@@ -110,6 +110,10 @@ GROUPED_PANDAS_QUERIES = {
     "x1_dup_clusters",
     "x1_dedup_resolve",
     "tp18_leakage_safe_split",
+    # MMR greedy: mmr_topk's per-query kernel. A group is one query's
+    # <= shortlist (16) rows, so the Python boundary moves shortlist·dim
+    # ints per query, never corpus rows.
+    "x2_mmr_topk",
 }
 
 

@@ -204,6 +204,21 @@ def test_triangle_count_matches_bruteforce_on_known_graph(spark, tmp_path):
     assert out["n_wedges"] == 3 * 3 + 6
 
 
+def test_triangle_count_adjacency_branch_matches_wedge(spark, sf_small, monkeypatch):
+    """gr2's adjacency-array form, which runs above GR2_ADJ_EDGES edges,
+    gives the same row as the wedge self-join form it replaces there."""
+    from etl_lorettoscarpa_1asfb2jf21_spark import queries_catalog_quality as qcq
+
+    wedge = qcq.gr2_triangle_count(spark, sf_small)
+    monkeypatch.setattr(qcq, "GR2_ADJ_EDGES", 0)
+    adj = qcq.gr2_triangle_count(spark, sf_small)
+    plan = adj._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_intersect" in plan
+    rows = adj.collect()
+    assert rows == wedge.collect()
+    assert rows[0]["n_triangles"] > 0
+
+
 def test_range_search_contains_self_and_respects_threshold(spark, sf_medium):
     from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog_quality import (
         x2_range_search,
@@ -221,8 +236,10 @@ def test_range_search_contains_self_and_respects_threshold(spark, sf_medium):
 def test_mmr_trace_matches_python_reference_fuzz(spark):
     """Fuzz the FULL greedy trace (pick order, rel, maxsim, mmr) against
     a plain-Python reference over random corpora — the engine-blind
-    pinning the codec family uses. Quantization mirrors quantize_expr
-    (round-half-away scaled int64)."""
+    pinning the codec family uses — plus the edge shapes: score ties
+    (decided by the lower id), a corpus smaller than k, and negative
+    similarities. Quantization mirrors quantize_expr (round-half-away
+    scaled int64)."""
     import random
 
     def quant(v):
@@ -232,7 +249,8 @@ def test_mmr_trace_matches_python_reference_fuzz(spark):
         ]
 
     def ref_mmr(qvecs, cvecs, k, m, lam_num=7, lam_den=10):
-        out = {}
+        """(trace rows, rounds whose best score was shared)."""
+        out, ties = [], 0
         for qid, qv in qvecs.items():
             qq = quant(qv)
             rel = {
@@ -241,9 +259,9 @@ def test_mmr_trace_matches_python_reference_fuzz(spark):
             }
             short = sorted(rel, key=lambda c: (-rel[c], c))[:m]
             qc = {c: quant(cvecs[c]) for c in short}
-            sel, trace = [], []
-            for r in range(1, k + 1):
-                best = None
+            sel = []
+            for r in range(1, min(k, len(short)) + 1):
+                cands = []
                 for c in short:
                     if c in sel:
                         continue
@@ -252,14 +270,21 @@ def test_mmr_trace_matches_python_reference_fuzz(spark):
                         default=0,
                     )
                     score = lam_num * rel[c] - (lam_den - lam_num) * ms
-                    key = (-score, c)
-                    if best is None or key < best[0]:
-                        best = (key, c, ms, score)
-                _, c, ms, score = best
+                    cands.append((-score, c, ms))
+                cands.sort()
+                ties += len(cands) > 1 and cands[0][0] == cands[1][0]
+                neg, c, ms = cands[0]
                 sel.append(c)
-                trace.append((qid, c, r, rel[c], ms, score))
-            out[qid] = trace
-        return out
+                out.append((qid, c, r, rel[c], ms, -neg))
+        return sorted(out), ties
+
+    def got_mmr(qvecs, cvecs, k, m):
+        corpus = spark.createDataFrame(list(cvecs.items()), ["c_id", "c_vec"])
+        queries = spark.createDataFrame(list(qvecs.items()), ["q_id", "q_vec"])
+        return sorted(
+            (r["q_id"], r["c_id"], r["sel_rank"], r["rel"], r["maxsim"], r["mmr"])
+            for r in mmr_topk(queries, corpus, k=k, shortlist=m).collect()
+        )
 
     rng = random.Random(77)
     for trial in range(3):
@@ -269,23 +294,84 @@ def test_mmr_trace_matches_python_reference_fuzz(spark):
             i: [rng.uniform(-1, 1) for _ in range(dim)] for i in range(nc)
         }
         qvecs = {100 + j: [rng.uniform(-1, 1) for _ in range(dim)] for j in range(2)}
-        k, m = 4, 8
-        corpus = spark.createDataFrame(
-            [(i, v) for i, v in cvecs.items()], ["c_id", "c_vec"]
-        )
-        queries = spark.createDataFrame(
-            [(i, v) for i, v in qvecs.items()], ["q_id", "q_vec"]
-        )
-        got = sorted(
-            (
-                (r["q_id"], r["c_id"], r["sel_rank"], r["rel"], r["maxsim"], r["mmr"])
-                for r in mmr_topk(queries, corpus, k=k, shortlist=m).collect()
-            )
-        )
-        want = sorted(
-            t for trace in ref_mmr(qvecs, cvecs, k, m).values() for t in trace
-        )
-        assert got == want, (trial, got[:3], want[:3])
+        want, _ = ref_mmr(qvecs, cvecs, 4, 8)
+        assert got_mmr(qvecs, cvecs, 4, 8) == want, (trial, want[:3])
+
+    # small-integer vectors, each repeated three times: equal rel and
+    # equal mmr scores, so the lower id decides
+    base = [[float(rng.randint(-2, 2)) for _ in range(3)] for _ in range(5)]
+    cvecs = {i: base[i % 5] for i in range(15)}
+    qvecs = {100: [1.0, 1.0, 0.0], 101: [0.0, -1.0, 2.0]}
+    want, ties = ref_mmr(qvecs, cvecs, 5, 10)
+    assert ties > 0
+    assert got_mmr(qvecs, cvecs, 5, 10) == want
+
+    # a corpus smaller than k: every row is picked, in greedy order
+    small = {7: [0.5, 0.5], 3: [0.5, 0.4], 9: [-0.2, 0.1]}
+    want, _ = ref_mmr({1: [1.0, 0.0]}, small, 5, 16)
+    assert [t[2] for t in want] == [1, 2, 3]
+    assert got_mmr({1: [1.0, 0.0]}, small, 5, 16) == want
+
+    # opposite clusters: the later picks' maxsim is negative
+    opp = {0: [1.0, 0.1], 1: [-1.0, 0.0], 2: [0.9, 0.2], 3: [-0.8, -0.3]}
+    want, _ = ref_mmr({5: [0.6, 0.8]}, opp, 4, 4)
+    assert any(t[4] < 0 for t in want)
+    assert got_mmr({5: [0.6, 0.8]}, opp, 4, 4) == want
+
+
+def test_mmr_null_vectors_match_duckdb_twin(spark, tmp_path):
+    """With NULL embeddings (one of them a query's), x2_mmr_topk matches
+    its DuckDB twin: NULL rel and maxsim propagate, and NULL scores rank
+    last. Duplicate vectors add score ties."""
+    import random
+
+    import duckdb
+
+    from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog_quality import (
+        _MMR_DIM,
+        _mmr_oracle_sql,
+        x2_mmr_topk,
+    )
+
+    rng = random.Random(5)
+    vecs = [[rng.uniform(-1, 1) for _ in range(_MMR_DIM)] for _ in range(30)]
+    rows = [
+        (i, None if i in (2, 5, 11, 17) else vecs[i % 20], 0) for i in range(30)
+    ]
+    d = str(tmp_path)
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(d + "/embeddings.parquet")
+
+    got = sorted(
+        tuple(r) for r in x2_mmr_topk(spark, d).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet/*.parquet'"
+    )
+    want = sorted(con.execute(_mmr_oracle_sql()).fetchall())
+    assert got == want
+    assert any(r[3] is None for r in want)  # query 2's rel is NULL
+    assert any(r[4] is None for r in want)  # a NULL vector's maxsim
+
+
+def test_x2_mmr_topk_job_budget(spark, sf_small, jobs_during):
+    """Building x2_mmr_topk launches no job, and the collect is a few:
+    the relevance top-k, the shortlist join and one grouped greedy pass.
+    The k−1 round loop with its four checkpoints launched 74 here."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog_quality import (
+        x2_mmr_topk,
+    )
+    from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
+
+    load_table(spark, sf_small, "embeddings")  # its schema read is a job
+    df, build_jobs, _ = jobs_during(lambda: x2_mmr_topk(spark, sf_small))
+    assert build_jobs == set()
+    rows, launched, grouped = jobs_during(df.collect)
+    assert len(rows) == 20
+    assert launched == grouped
+    assert len(launched) <= 6, len(launched)
 
 
 def test_classifier_train_matches_plain_python_reference(spark, sf_small):
