@@ -266,7 +266,9 @@ def _fact_with_month(wh: Warehouse) -> DataFrame:
 
 
 def write_warehouse(wh: Warehouse, base_path: str) -> None:
-    """Persist the gold layer; the fact is partitioned by (ano, mes).
+    """Write the six gold tables under ``base_path``, which
+    publish_warehouse makes a fresh version dir; the fact is partitioned
+    by (ano, mes).
 
     The six tables are written concurrently: each dim is a few tiny jobs,
     which serial writes would leave the cores idle between.
@@ -299,40 +301,37 @@ def write_warehouse(wh: Warehouse, base_path: str) -> None:
 # `write.mode("overwrite")` over parquet has neither property — the old
 # data is deleted before the new data finishes. Without bringing in a
 # table format (Delta/Iceberg), the standard lakehouse answer is
-# WRITE-AUDIT-PUBLISH with an atomic current-version pointer:
+# WRITE-AUDIT-PUBLISH onto a generation chain, the log-pointer commit of
+# Delta Lake (Armbrust et al., VLDB 2020):
 #
 #   1. WRITE  the whole gold layer into a fresh immutable version
-#      directory `{base}/_v/{version}/` — never into the live paths.
+#      directory `{base}/_v/{version}/` — never into the live paths. A
+#      version id that already exists is refused before anything is
+#      written: a published version is never rewritten.
 #   2. AUDIT  the written files by reading them back and running checks
 #      (row counts vs the source frames here; extend with FK/null checks
 #      as needed). A failed audit aborts before anything is visible.
-#   3. PUBLISH by atomically replacing the `{base}/_CURRENT` pointer
-#      file. POSIX rename is atomic; on HDFS a rename is atomic too; on
-#      S3 use a conditional PUT (If-Match) on the pointer object.
+#   3. PUBLISH by a compare-and-swap on the generation chain under
+#      `{base}/_ptr/`: the publisher captured the head generation g at
+#      entry and now claims slot `_ptr/{g+1:020d}` with an ATOMIC
+#      CREATE-EXCLUSIVE carrying its version id. Exactly one writer can
+#      create a given slot — the loser raises PublishConflictError (its
+#      version dir stays orphaned and vacuumable; orchestration retries
+#      on the new base, the Delta/Iceberg optimistic-commit shape).
+#      Primitive per store: local file: → link of a fsynced temp
+#      (POSIX-atomic); HDFS → rename without overwrite (atomic in the
+#      namenode); S3 → conditional PUT (If-None-Match: *).
 #
-# A crash at ANY point before step 3 leaves the pointer untouched:
-# readers keep resolving the previous complete version (tested in
+# A crash at ANY point before step 3 leaves the chain untouched: readers
+# keep resolving the previous complete version (tested in
 # tests/test_star_pipeline.py::test_publish_crash_leaves_readers_on_old_version).
-#
-# CONCURRENT PUBLISHERS (round 11): the publish step is a
-# compare-and-swap on a monotonically increasing GENERATION CHAIN under
-# `{base}/_ptr/`: a publisher captures the current generation g at entry,
-# writes + audits its version dir, then claims slot `_ptr/{g+1:020d}`
-# with an ATOMIC CREATE-EXCLUSIVE carrying its version id. Exactly one
-# writer can create a given slot — the loser raises PublishConflictError
-# (its version dir stays orphaned and vacuumable; orchestration retries
-# on the new base, exactly the Delta/Iceberg optimistic-commit shape).
-# Primitive per store: local file: → O_CREAT|O_EXCL (POSIX-atomic); HDFS
-# → FileSystem.create(overwrite=false) (atomic in the namenode); S3 →
-# conditional PUT (If-None-Match: *). Readers resolve the HIGHEST
-# generation — version dirs are immutable and complete before their slot
-# file exists, so a reader can never see a torn version. `_CURRENT` is
-# still written by the slot WINNER for legacy flat readers.
+# Readers resolve the newest readable generation — version dirs are
+# complete before their slot exists, so a reader can never see a torn
+# version; a base with no generation is an empty warehouse.
 # Old versions accumulate under `_v/` and double as time travel;
 # vacuum_versions(keep=N) retires generations beyond the newest N and
 # deletes their version dirs (plus aged-out loser orphans).
 
-_CURRENT_POINTER = "_CURRENT"
 _PTR_DIR = "_ptr"
 _GEN_WIDTH = 20
 
@@ -341,40 +340,6 @@ class PublishConflictError(RuntimeError):
     """Another publisher claimed the next generation first; this
     publisher's version directory was written and audited but never
     became visible. Retry the publish against the new current state."""
-
-
-def _pointer_fs(spark: SparkSession, base_path: str):
-    """(FileSystem, Path) for the pointer — resolved from ``base_path``'s
-    own scheme via the Hadoop FileSystem API, so the protocol works
-    wherever the data files go (file:, hdfs:, s3a:, ...), not just on a
-    driver-local filesystem."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{base_path}/{_CURRENT_POINTER}")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, p
-
-
-def _write_pointer_atomic(spark: SparkSession, base_path: str, version: str) -> None:
-    """Write the version id to a temp object, then atomically rename over
-    `_CURRENT` (FileContext.rename(..., OVERWRITE): atomic on POSIX and
-    HDFS; on S3A the rename degrades to copy+delete — use a conditional
-    PUT on the pointer object there, as the protocol comment notes)."""
-    jvm = spark._jvm
-    gw = spark.sparkContext._gateway
-    fs, pointer = _pointer_fs(spark, base_path)
-    tmp = jvm.org.apache.hadoop.fs.Path(str(pointer) + f".tmp.{version}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(version.encode("utf-8")))
-    finally:
-        out.close()
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        pointer.toUri(), spark._jsc.hadoopConfiguration()
-    )
-    rename_cls = jvm.org.apache.hadoop.fs.Options.Rename
-    opts = gw.new_array(rename_cls, 1)
-    opts[0] = rename_cls.OVERWRITE
-    fc.rename(tmp, pointer, opts)
 
 
 def _hpath(spark: SparkSession, path: str):
@@ -416,19 +381,29 @@ def _current_generation(spark: SparkSession, base_path: str) -> int:
 
 
 def _resolve_head(spark: SparkSession, base_path: str) -> str | None:
-    """Version id at the chain head, walking PAST empty or unreadable
-    slots to the newest readable generation. _claim_generation can no
-    longer create an empty-visible slot (the content rides the atomic
-    link/rename), but a slot broken by an older writer or a torn store
-    must degrade to the previous good generation, not brick every
-    read."""
-    for g in reversed(_list_generations(spark, base_path)):
+    """Version id at the chain head: the newest generation whose slot
+    reads back non-empty. _claim_generation never creates an empty
+    slot (the content rides the atomic link/rename), but a slot broken
+    by a torn store must degrade to the previous good generation, not
+    brick every read.
+
+    None when the chain holds no generation: a fresh base. Raises when
+    slots exist but none is readable — a transient read failure must
+    never pass for an empty warehouse, which the next load would publish
+    as a one-batch gold layer."""
+    gens = _list_generations(spark, base_path)
+    for g in reversed(gens):
         try:
             v = _read_generation(spark, base_path, g)
         except Exception:  # noqa: BLE001 — unreadable slot: fall back
             continue
         if v:
             return v
+    if gens:
+        raise RuntimeError(
+            f"none of the {len(gens)} generation slots under "
+            f"{base_path}/{_PTR_DIR} is readable"
+        )
     return None
 
 
@@ -454,7 +429,7 @@ def _claim_generation(
       the full content (`If-None-Match: *`) — same one-shot semantics.
 
     Readers additionally skip empty/unreadable slots (`_resolve_head`)
-    so a legacy broken slot can never brick the chain."""
+    so a slot broken by the store can never brick the chain."""
     import os
     import uuid as _uuid
 
@@ -491,22 +466,6 @@ def _claim_generation(
             fs.delete(tp, False)
 
 
-def _read_pointer(spark: SparkSession, base_path: str) -> str | None:
-    """Resolve `_CURRENT` through the Hadoop FileSystem of base_path;
-    None if no pointer exists (legacy flat layout)."""
-    jvm = spark._jvm
-    fs, pointer = _pointer_fs(spark, base_path)
-    if not fs.exists(pointer):
-        return None
-    stream = fs.open(pointer)
-    try:
-        return (
-            jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8").strip()
-        )
-    finally:
-        stream.close()
-
-
 def publish_warehouse(
     wh: Warehouse,
     base_path: str,
@@ -519,7 +478,10 @@ def publish_warehouse(
     frames, and raises PublishConflictError — same guarantee — if another
     publisher claimed the next generation first (compare-and-swap on the
     generation chain; ``expected_generation`` pins the CAS base
-    explicitly, defaulting to the chain head observed at entry).
+    explicitly, defaulting to the chain head observed at entry). A
+    published version is immutable: an explicit ``version`` that already
+    exists under ``_v/`` raises FileExistsError before anything is
+    written.
 
     The tables are written concurrently, the fact one file per month; the
     audit counts sources and read-back in two concurrent union queries."""
@@ -530,6 +492,12 @@ def publish_warehouse(
     version = version or uuid.uuid4().hex
     vdir = f"{base_path}/_v/{version}"
     spark = wh.fato_lancamento.sparkSession
+    vpath = _hpath(spark, vdir)
+    if vpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(vpath):
+        raise FileExistsError(
+            f"version {version} already exists under {base_path}/_v; "
+            "published versions are immutable"
+        )
     base_gen = (
         expected_generation
         if expected_generation is not None
@@ -580,9 +548,6 @@ def publish_warehouse(
             f"{winner!r}; "
             f"version {version} NOT published — retry on the new base"
         )
-    # legacy `_CURRENT` follows the chain (written by the slot winner
-    # only, so it can never point at an unpublished version)
-    _write_pointer_atomic(spark, base_path, version)
     return version
 
 
@@ -598,15 +563,15 @@ def vacuum_versions(
     dirs (written by losing/crashed publishers, referenced by no slot)
     whose modification time is older than ``orphan_grace_sec`` — the
     grace window keeps an in-flight publisher's half-written dir safe.
-    Returns the deleted version ids. The newest generation is never
-    deleted, so concurrent readers resolving the chain head stay safe;
+    Returns the deleted version ids. The newest readable generation is
+    always kept, slot and dir, even behind broken newer slots, so
+    concurrent readers resolving the chain head stay safe;
     readers of RETIRED versions must finish within the retention window
     (the standard lakehouse vacuum contract)."""
     import time as _time
 
     gens = _list_generations(spark, base_path)
     keep = max(1, int(keep))
-    kept_gens = set(gens[-keep:])
     # one slot read per generation, reused for both sets (each read is a
     # round-trip to the store); unreadable/empty slots reference nothing
     gen_versions: dict[int, str | None] = {}
@@ -615,10 +580,9 @@ def vacuum_versions(
             gen_versions[g] = _read_generation(spark, base_path, g) or None
         except Exception:  # noqa: BLE001 — broken slot references nothing
             gen_versions[g] = None
+    head = [g for g in gens if gen_versions[g]][-1:]
+    kept_gens = set(gens[-keep:] + head)
     kept_versions = {v for g, v in gen_versions.items() if g in kept_gens and v}
-    legacy = _read_pointer(spark, base_path)
-    if legacy:
-        kept_versions.add(legacy)
     referenced = {v for v in gen_versions.values() if v}
     vroot = _hpath(spark, f"{base_path}/_v")
     fs = vroot.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -651,25 +615,18 @@ def _read_warehouse_dir(spark: SparkSession, vdir: str) -> Warehouse:
 
 
 def read_warehouse(spark: SparkSession, base_path: str) -> Warehouse:
-    """Load a written gold layer back as a Warehouse of DataFrames.
-
-    If the base carries a write-audit-publish `_CURRENT` pointer, resolve
-    it and read that (complete, immutable) version; otherwise read the
-    legacy flat layout written by a bare write_warehouse.
+    """Load the published gold layer back as a Warehouse of DataFrames:
+    the version at the generation chain head (`_resolve_head`; slot
+    files exist only after their version dir is complete). A base with
+    no generation yet is an empty Warehouse, so a first load bootstraps
+    from it; a chain with no readable slot raises.
 
     The fact's (ano, mes) partition columns exist on disk purely for
     pruning (write_warehouse denormalizes them); the canonical in-memory
     fact schema omits them, so they are dropped here — month-scoped readers
     that want pruning filter the parquet directly.
-
-    Resolution order: generation chain head (`_ptr/`, authoritative —
-    slot files exist only after their version dir is complete), then the
-    legacy `_CURRENT` pointer, then the flat layout.
     """
     version = _resolve_head(spark, base_path)
-    if version:
-        return _read_warehouse_dir(spark, f"{base_path}/_v/{version}")
-    version = _read_pointer(spark, base_path)
-    if version is not None:
-        return _read_warehouse_dir(spark, f"{base_path}/_v/{version}")
-    return _read_warehouse_dir(spark, base_path)
+    if version is None:
+        return Warehouse()
+    return _read_warehouse_dir(spark, f"{base_path}/_v/{version}")

@@ -1142,11 +1142,6 @@ def x2_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gr2 — exact triangle / wedge counting (degree-oriented)
 # =====================================================================
 
-# Edge count above which gr2 counts triangles with the adjacency-array
-# form instead of the wedge self-join (see gr2_triangle_count).
-GR2_ADJ_EDGES = 20_000_000
-
-
 @query(
     "gr2_triangle_count",
     """
@@ -1189,31 +1184,20 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cohen MapReduce orientation — every out-degree bounded by O(√m), so
     per-vertex work is bounded even on power-law graphs: a hub's
     quadratic blow-up would need high OUT-degree, which the orientation
-    forbids; hubs mostly fan IN). The triangle count then takes one of
-    two value-identical branches on MEASURED edge mass (round-12 verdict
-    #7 — the same regime-gate pattern as the ANN `wide_queries` flag):
+    forbids; hubs mostly fan IN). The triangles are then counted by the
+    WEDGE self-join: each directed 2-path u→m→e is enumerated once at its
+    middle node and closed by one more join on the canonical edge table.
+    The plan is the same for every input; building it runs only the two
+    lazy checkpoints (edges, degrees), which AQE runs at construction.
+    An adjacency-array form (sorted out-neighbour arrays, |N+(u) ∩ N+(v)|
+    per oriented edge) was measured slower at 3M edges (17.1 s vs
+    14.5 s, BENCH_sf1_pair.json round 12) and is not kept.
 
-    * m <= GR2_ADJ_EDGES (20M): the WEDGE self-join
-      form — each directed 2-path u→m→e enumerated once at its middle
-      node, closed by one more join on the canonical edge table. Fewer
-      stages (no adjacency build), and at gate/sf1 scale (<=3M edges)
-      measured FASTER than the adjacency form (~18% at 3M edges,
-      BENCH_sf1_pair.json round 12) because wedge mass is still cheap
-      and the extra array build/shuffle floors dominate.
-    * m above the cap: the forward/compact ADJACENCY-ARRAY form — each
-      vertex's oriented out-neighborhood ships once as a sorted array
-      and every oriented edge (u,v) contributes |N+(u) ∩ N+(v)| — a
-      map-side sorted-array merge, no wedge rows ever materialized.
-      Shuffle mass stays edge-count where the wedge form's grows with
-      Σ indeg·outdeg ≫ m on power-law graphs. Total work O(m^1.5).
-
-    The edge count that picks the branch materializes the edge
-    checkpoint every branch needs anyway. Tests run the adjacency form by
-    patching GR2_ADJ_EDGES to 0. The DuckDB twin counts the
-    same triangles via the a<b<c form (orientation changes enumeration
-    order, not the count); wedges = Σ d(d−1)/2 exact; n_nodes/n_edges/
-    n_wedges fold into ONE aggregate over the degree table (Σd = 2m),
-    replacing three separately-planned scalar subtrees.
+    The DuckDB twin counts the same triangles via the a<b<c form
+    (orientation changes enumeration order, not the count); wedges =
+    Σ d(d−1)/2 exact; n_nodes/n_edges/n_wedges fold into ONE aggregate
+    over the degree table (Σd = 2m), replacing three separately-planned
+    scalar subtrees.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"),
@@ -1227,9 +1211,6 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
     ).distinct()
     e = e.localCheckpoint(eager=False)
-    # regime gate: one count materializes the checkpoint (paid once, every
-    # downstream branch reads the cached edges) and picks the triangle plan
-    m = e.count()
     # the degree table feeds the fused stats row AND both orientation
     # joins — checkpoint it so the union+agg runs once, not three times
     deg = (
@@ -1250,37 +1231,17 @@ def gr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
-    if m <= GR2_ADJ_EDGES:
-        # wedge self-join form: enumerate each directed 2-path once at its
-        # middle node, close with one join on the canonical edge table
-        w1 = o.select(F.col("u"), F.col("v").alias("w_mid"))
-        w2 = o.select(F.col("u").alias("w_mid"), F.col("v").alias("w_end"))
-        wedges = w1.join(w2, "w_mid").filter(F.col("u") != F.col("w_end"))
-        closing = wedges.join(
-            e,
-            (F.least("u", "w_end") == F.col("a"))
-            & (F.greatest("u", "w_end") == F.col("b")),
-        )
-        n_tri = closing.agg(
-            F.count(F.lit(1)).cast("long").alias("n_triangles")
-        )
-    else:
-        # adjacency-array form (round-11 verdict #5): ship each vertex's
-        # oriented out-neighborhood ONCE as a sorted array; a triangle
-        # {u<v<w} (degree order) is exactly one oriented edge (u,v) plus
-        # w ∈ N+(u) ∩ N+(v), so n_tri = Σ_(u,v)∈o |N+(u) ∩ N+(v)| with
-        # each triangle counted once; the intersection is a map-side
-        # merge of two sorted arrays, shuffles move edge-mass rows only
-        adj = o.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("nbrs"))
-        au = adj.select("u", F.col("nbrs").alias("_nu"))
-        av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("_nv"))
-        n_tri = (
-            o.join(au, "u")
-            .join(av, "v")
-            .select(F.size(F.array_intersect("_nu", "_nv")).cast("long").alias("_c"))
-            .agg(F.sum("_c").cast("long").alias("n_triangles"))
-            .select(F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"))
-        )
+    # enumerate each directed 2-path once at its middle node, close with
+    # one join on the canonical edge table
+    w1 = o.select(F.col("u"), F.col("v").alias("w_mid"))
+    w2 = o.select(F.col("u").alias("w_mid"), F.col("v").alias("w_end"))
+    wedges = w1.join(w2, "w_mid").filter(F.col("u") != F.col("w_end"))
+    closing = wedges.join(
+        e,
+        (F.least("u", "w_end") == F.col("a"))
+        & (F.greatest("u", "w_end") == F.col("b")),
+    )
+    n_tri = closing.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     # one aggregate over deg replaces three scalar subtrees: n_nodes =
     # count, n_edges = Σd div 2 (each edge contributes 2 degree), wedges =
     # Σ d(d-1)/2 — values and BIGINT types identical to the separate aggs
@@ -1427,19 +1388,22 @@ def tp16_quality_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s9_wap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s9: the write-audit-publish gold protocol, gate-visible — the same
     pattern as x2_served_topk made the ANN persistence layer visible.
-    In-query: build a v1 gold layer (orders through 1995), PUBLISH it
-    (write into an immutable `_v/v1` dir, audit the files by read-back
-    row counts, atomically flip `_CURRENT`); build and publish v2 (all
-    years) the same way; then TIME-TRAVEL — read `_CURRENT` (resolves
-    v2) AND the superseded `_v/v1` directly — and emit the per-year row
-    counts of both versions side by side. A hash mismatch isolates the
-    versioned-publish layer: pointer resolution, immutable version dirs,
-    read-back parity. The oracle derives both versions' contents from
+    In-query, on a freshly cleared scratch base: build a v1 gold layer
+    (orders through 1995), PUBLISH it (write into an immutable `_v/v1`
+    dir, audit the files by read-back row counts, claim generation 1 of
+    the `_ptr/` chain); build and publish v2 (all years) the same way;
+    then TIME-TRAVEL — read the chain head (resolves v2) AND the
+    superseded `_v/v1` directly — and emit the per-year row counts of
+    both versions side by side. A hash mismatch isolates the
+    versioned-publish layer: chain-head resolution, immutable version
+    dirs, read-back parity. The oracle derives both versions' contents from
     the same source filters (engine-blind; the protocol is what's under
     test — old versions double as time travel until vacuumed, the
     parquet-only answer to the reference's per-statement
     transactionality without a table format).
     """
+    import shutil
+
     from .plans.star import (
         Warehouse,
         _read_warehouse_dir,
@@ -1478,10 +1442,13 @@ def s9_wap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         return wh
 
     base = _scratch_dir("s9_wap")
+    # a second build in this process would otherwise re-publish v1 onto
+    # the first build's chain, which publish_warehouse refuses
+    shutil.rmtree(base, ignore_errors=True)
     publish_warehouse(gold(sub.filter(F.col("ano") <= 1995)), base, version="v1")
     publish_warehouse(gold(sub), base, version="v2")
 
-    cur = read_warehouse(spark, base)  # resolves _CURRENT -> v2
+    cur = read_warehouse(spark, base)  # chain head -> v2
     old = _read_warehouse_dir(spark, f"{base}/_v/v1")  # time travel
 
     def per_year(wh: Warehouse, out: str) -> DataFrame:

@@ -12,17 +12,15 @@ execution modes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.star import (
-    Warehouse,
+    publish_warehouse,
     read_warehouse,
     run_etl,
     stage_lancamentos,
-    write_warehouse,
+    vacuum_versions,
 )
 from ..schemas import LANCAMENTOS_CSV_SCHEMA
 
@@ -63,34 +61,29 @@ def start_gold_sink(
     staged: DataFrame, gold_path: str, checkpoint_dir: str
 ) -> StreamingQuery:
     """Streaming EP2: every micro-batch runs the star-schema ETL
-    incrementally against the persisted gold layer (foreachBatch).
+    incrementally against the published gold layer (foreachBatch).
 
     foreachBatch gives at-least-once batch delivery; the upsert-ignore
     semantics inside run_etl (anti-join on the natural/hash keys) make
     replays idempotent — the same exactly-once-net-effect contract the
     reference gets from ON CONFLICT DO NOTHING (app/etl.py:48-129).
 
-    The gold tables are re-read each batch and the fact grows by
-    append-only new rows; the fact, the one table whose plan reads the gold
-    files, is localCheckpoint'ed before the overwrite so Spark never reads
-    and overwrites the same files in one plan. (On a real deployment this
-    is a Delta/Iceberg MERGE; plain parquet keeps the engine
-    dependency-free here.) Nothing is cached, so a long-running stream
-    pins no batch.
+    Each batch reads the chain head (an empty Warehouse on a fresh base),
+    runs run_etl over it, and publish_warehouse writes, audits and
+    publishes the result as a new immutable version — a crash mid-batch
+    leaves readers on the previous version, and the new version dir never
+    reads and overwrites the same files. vacuum_versions then retires all
+    but the newest two versions. Nothing stays cached, so a long-running
+    stream pins no batch.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        existing = (
-            read_warehouse(spark, gold_path)
-            if os.path.isdir(f"{gold_path}/fato_lancamento")
-            else Warehouse()
-        )
-        wh = run_etl(batch_df, existing)
-        wh.fato_lancamento = wh.fato_lancamento.localCheckpoint(eager=True)
-        write_warehouse(wh, gold_path)
+        wh = run_etl(batch_df, read_warehouse(spark, gold_path))
+        publish_warehouse(wh, gold_path)
+        vacuum_versions(spark, gold_path)
 
     return (
         staged.writeStream.foreachBatch(process_batch)

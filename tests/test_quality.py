@@ -204,19 +204,24 @@ def test_triangle_count_matches_bruteforce_on_known_graph(spark, tmp_path):
     assert out["n_wedges"] == 3 * 3 + 6
 
 
-def test_triangle_count_adjacency_branch_matches_wedge(spark, sf_small, monkeypatch):
-    """gr2's adjacency-array form, which runs above GR2_ADJ_EDGES edges,
-    gives the same row as the wedge self-join form it replaces there."""
-    from etl_lorettoscarpa_1asfb2jf21_spark import queries_catalog_quality as qcq
+# Jobs launched while gr2_triangle_count builds its plan on sf_small.
+GR2_BUILD_JOBS = 3
 
-    wedge = qcq.gr2_triangle_count(spark, sf_small)
-    monkeypatch.setattr(qcq, "GR2_ADJ_EDGES", 0)
-    adj = qcq.gr2_triangle_count(spark, sf_small)
-    plan = adj._jdf.queryExecution().optimizedPlan().toString()
-    assert "array_intersect" in plan
-    rows = adj.collect()
-    assert rows == wedge.collect()
-    assert rows[0]["n_triangles"] > 0
+
+def test_gr2_triangle_count_job_budget(spark, sf_small, jobs_during):
+    """Building gr2_triangle_count launches only the jobs of its two lazy
+    checkpoints (edges, degrees), which AQE runs at construction, all in
+    the caller's job group."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog_quality import (
+        gr2_triangle_count,
+    )
+    from etl_lorettoscarpa_1asfb2jf21_spark.sources.tables import load_table
+
+    load_table(spark, sf_small, "lineitem")  # its schema read is a job
+    df, build_jobs, grouped = jobs_during(lambda: gr2_triangle_count(spark, sf_small))
+    assert build_jobs == grouped
+    assert len(build_jobs) <= GR2_BUILD_JOBS, sorted(build_jobs)
+    assert df.collect()[0]["n_triangles"] > 0
 
 
 def test_range_search_contains_self_and_respects_threshold(spark, sf_medium):

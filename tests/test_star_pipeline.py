@@ -138,19 +138,19 @@ def test_gold_write_partition_pruning(spark, staging, tmp_path):
     """The written fact is partitioned by (ano, mes) and a month-scoped
     query prunes to that partition at the scan."""
     from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
+        publish_warehouse,
         read_warehouse,
-        write_warehouse,
     )
 
     valid, _ = staging
     wh = run_etl(valid)
     base = str(tmp_path / "gold")
-    write_warehouse(wh, base)
+    version = publish_warehouse(wh, base)
 
     back = read_warehouse(spark, base)
     assert back.fato_lancamento.count() == wh.fato_lancamento.count()
 
-    fact_disk = spark.read.parquet(f"{base}/fato_lancamento")
+    fact_disk = spark.read.parquet(f"{base}/_v/{version}/fato_lancamento")
     jan = fact_disk.filter("ano = 2024 AND mes = 1")
     plan = jan._sc._jvm.PythonSQLUtils.explainString(
         jan._jdf.queryExecution(), "formatted"
@@ -162,14 +162,15 @@ def test_gold_write_partition_pruning(spark, staging, tmp_path):
 
 def test_publish_crash_leaves_readers_on_old_version(spark, staging, tmp_path):
     """Write-audit-publish: a writer that dies after writing files but
-    BEFORE the pointer flip must be invisible — readers keep resolving
-    the previous complete version; a later successful publish supersedes
-    it; a failed audit aborts without touching the pointer."""
+    BEFORE claiming its generation must be invisible — readers keep
+    resolving the previous complete version; a later successful publish
+    supersedes it; a failed audit aborts without touching the chain."""
     import os
 
     import pytest
 
     from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
+        _resolve_head,
         publish_warehouse,
         read_warehouse,
         run_etl,
@@ -184,15 +185,14 @@ def test_publish_crash_leaves_readers_on_old_version(spark, staging, tmp_path):
     assert n1 == wh.fato_lancamento.count()
 
     # Simulated crash: a second writer lands a (half-)version on disk but
-    # never reaches the pointer flip. Readers must not see it.
+    # never claims its generation. Readers must not see it.
     crashed = str(tmp_path / "gold/_v/crashed-version")
     write_warehouse(wh, crashed)
     os.remove(os.path.join(crashed, "dim_tempo", "_SUCCESS"))
-    with open(os.path.join(base, "_CURRENT"), encoding="utf-8") as f:
-        assert f.read().strip() == v1  # pointer untouched
+    assert _resolve_head(spark, base) == v1  # chain untouched
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
 
-    # A failed audit must abort WITHOUT moving the pointer.
+    # A failed audit must abort WITHOUT moving the chain head.
     import etl_lorettoscarpa_1asfb2jf21_spark.plans.star as star_mod
 
     real_write = star_mod.write_warehouse
@@ -213,11 +213,10 @@ def test_publish_crash_leaves_readers_on_old_version(spark, staging, tmp_path):
         star_mod.write_warehouse = star_mod_write
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
 
-    # A successful publish flips the pointer atomically.
+    # A successful publish moves the chain head atomically.
     v2 = publish_warehouse(wh, base)
     assert v2 != v1
-    with open(os.path.join(base, "_CURRENT"), encoding="utf-8") as f:
-        assert f.read().strip() == v2
+    assert _resolve_head(spark, base) == v2
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
 
 
@@ -363,7 +362,7 @@ def test_publish_slot_atomic_with_content_and_broken_head_fallback(
     high): a claimed slot carries its version id atomically (os.link of
     a fsynced temp locally / rename-no-overwrite on HDFS), no temp
     litter survives, and readers walk PAST an empty or unreadable head
-    slot (a legacy torn writer / broken store) to the newest readable
+    slot (a torn writer / broken store) to the newest readable
     generation instead of failing forever."""
     import os
 
@@ -391,22 +390,80 @@ def test_publish_slot_atomic_with_content_and_broken_head_fallback(
     assert [n for n in os.listdir(ptr) if not n.isdigit()] == []
     os.remove(os.path.join(ptr, f"{5:020d}"))
 
-    # broken head slot (empty file, as a legacy create-then-crash writer
-    # would leave): reads fall back to v1, not a '_v/' load failure
+    # broken head slot (an empty file, as a torn store could leave):
+    # reads fall back to v1, not a '_v/' load failure
     broken = os.path.join(ptr, f"{7:020d}")
     with open(broken, "wb"):
         pass
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
     # vacuum treats the broken slot as referencing nothing and keeps v1
-    # reachable (it is the newest READABLE generation)
-    deleted = vacuum_versions(spark, base, keep=2, orphan_grace_sec=0.0)
+    # reachable, slot and dir, even under keep=1: it is the newest
+    # READABLE generation
+    deleted = vacuum_versions(spark, base, keep=1, orphan_grace_sec=0.0)
     assert v1 not in deleted
+    assert os.path.isfile(os.path.join(ptr, f"{1:020d}"))
+    assert os.path.isdir(os.path.join(base, "_v", v1))
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
     # the chain heals: a new publish claims past the broken slot and
     # becomes the head
     v2 = publish_warehouse(wh, base)
     assert v2 != v1
     assert read_warehouse(spark, base).fato_lancamento.count() == n1
+
+
+def test_publish_refuses_an_existing_version(spark, staging, tmp_path):
+    """A published version is immutable: publishing the same version id
+    again raises before writing, and the chain head does not move."""
+    import os
+
+    from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
+        _list_generations,
+        _resolve_head,
+        publish_warehouse,
+        read_warehouse,
+    )
+
+    valid, _ = staging
+    wh = run_etl(valid)
+    base = str(tmp_path / "gold_immutable")
+    publish_warehouse(wh, base, version="v1")
+    v2 = publish_warehouse(wh, base)
+    n = read_warehouse(spark, base).fato_lancamento.count()
+    v1_files = sorted(os.listdir(os.path.join(base, "_v", "v1", "dim_tipo")))
+
+    with pytest.raises(FileExistsError, match="v1"):
+        publish_warehouse(wh, base, version="v1")
+    assert _resolve_head(spark, base) == v2
+    assert _list_generations(spark, base) == [1, 2]
+    assert sorted(os.listdir(os.path.join(base, "_v", "v1", "dim_tipo"))) == v1_files
+    assert read_warehouse(spark, base).fato_lancamento.count() == n
+
+
+def test_s9_wap_time_travel_rebuilds_identically(spark, sf_small):
+    """s9 publishes fixed version ids; building it twice in one process
+    starts from a cleared base each time and gives the same rows."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog_quality import (
+        s9_wap_time_travel,
+    )
+
+    first = sorted(s9_wap_time_travel(spark, sf_small).collect())
+    second = sorted(s9_wap_time_travel(spark, sf_small).collect())
+    assert first and first == second
+
+
+def test_read_warehouse_bootstraps_only_an_empty_chain(spark, tmp_path):
+    """A base with no generation reads as an empty Warehouse; a chain
+    whose every slot is unreadable raises instead of passing for one."""
+    import os
+
+    from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import read_warehouse
+
+    base = str(tmp_path / "gold_boot")
+    assert read_warehouse(spark, base) == Warehouse()
+    os.makedirs(os.path.join(base, "_ptr"))
+    open(os.path.join(base, "_ptr", f"{1:020d}"), "wb").close()
+    with pytest.raises(RuntimeError, match="readable"):
+        read_warehouse(spark, base)
 
 
 def test_corrupt_record_quarantine(spark, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import time
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_lorettoscarpa_1asfb2jf21_spark.streaming.ingest import (
@@ -249,6 +250,45 @@ def test_gold_sink_pins_no_batch(spark, tmp_path):
     assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
     assert read_warehouse(spark, gold).fato_lancamento.count() == 3
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("scheme", ["path", "file_uri"])
+def test_gold_sink_keeps_history_and_bounded_versions(spark, tmp_path, scheme):
+    """Three one-file micro-batches through the gold sink: every batch
+    loads on top of the published history, whether the gold base is a
+    plain path or a file: URI, and vacuum keeps at most two versions."""
+    import os
+
+    from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
+        read_warehouse,
+        stage_lancamentos,
+    )
+    from etl_lorettoscarpa_1asfb2jf21_spark.schemas import LANCAMENTOS_CSV_SCHEMA
+    from etl_lorettoscarpa_1asfb2jf21_spark.streaming.ingest import start_gold_sink
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "m1.csv").write_text(CSV1, encoding="utf-8")
+    (in_dir / "m2.csv").write_text(CSV2, encoding="utf-8")
+    (in_dir / "m3.csv").write_text(CSV2.replace("02/2024", "03/2024"), encoding="utf-8")
+    staged, _ = stage_lancamentos(
+        spark.readStream.schema(LANCAMENTOS_CSV_SCHEMA)
+        .option("header", True)
+        .option("maxFilesPerTrigger", 1)
+        .csv(str(in_dir))
+    )
+    gold_dir = tmp_path / "gold"
+    gold = gold_dir.as_uri() if scheme == "file_uri" else str(gold_dir)
+    q = start_gold_sink(staged, gold, str(tmp_path / "ckpt"))
+    q.awaitTermination(180)
+    assert not q.isActive
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+
+    wh = read_warehouse(spark, gold)
+    assert wh.fato_lancamento.count() == 4
+    assert wh.dim_tipo.count() == 2  # Despesa, Receita
+    assert wh.dim_tempo.count() == 3  # 01, 02 and 03/2024
+    assert 1 <= len(os.listdir(gold_dir / "_v")) <= 2
 
 
 def test_stream_static_enrichment_matches_batch(spark, tmp_path, sf_small):
