@@ -12,10 +12,10 @@ equivalent is:
     2. left-anti join against the existing table on the key
     3. append
 
-Scale notes: the anti-join shuffles both sides on the key. When the existing
-table is large and the batch is small, Spark's AQE flips to a broadcast of
-the *batch* side automatically. Single-writer-per-table assumed (the
-reference is single-user too, app/app.py:74).
+Scale notes: the anti-join's right side is the existing keys, duplicates
+and all (a left-anti join keeps the same rows either way). The join shuffles
+both sides on the key, or broadcasts the keys when they are small.
+Single-writer-per-table assumed (the reference is single-user, app/app.py:74).
 """
 
 from __future__ import annotations
@@ -34,5 +34,5 @@ def insert_if_absent(
     deduped = batch.dropDuplicates(key)
     if existing is None:
         return deduped
-    return deduped.join(existing.select(*key).distinct(), on=key, how="left_anti")
+    return deduped.join(existing.select(*key), on=key, how="left_anti")
 

@@ -9,8 +9,8 @@ existing dims; new SERIAL ids continue after each dim's max id in
 natural-key order. The dims come back as small Arrow-backed frames, and
 the fact is one lazy broadcast join of staging to the tuple → five ids map,
 ON CONFLICT(id_hash) via operators.upsert.insert_if_absent. The publish
-writes the six tables at once, the fact one file per month, and audits
-with two concurrent union counts.
+writes the six tables at once, the fact one file per month, counts the
+sources beside the writes and audits that count against the read-back.
 
 Scale notes: the driver holds the dims and the batch's distinct
 (Data, Tipo, Grupo, Categoria, Classificacao) tuples, both bounded by dim
@@ -105,12 +105,6 @@ class Warehouse:
         return out
 
 
-def _append(existing: DataFrame | None, new: DataFrame) -> DataFrame:
-    if existing is None:
-        return new
-    return existing.unionByName(new)
-
-
 # The staging columns a fact row resolves its five dimension keys from, and
 # the five keys; the dims in their (id, *natural key, *attributes) column
 # order, nullable as planned frames are (a stored NULL-keyed row still loads).
@@ -171,7 +165,7 @@ def run_etl(staging: DataFrame, warehouse: Warehouse | None = None) -> Warehouse
 
     Pass an existing Warehouse for incremental (idempotent) loads;
     re-running with the same staging batch grows no table (tested).
-    Nothing is cached: the key collect reads only the five natural
+    No frame is kept: the key collect reads only the five natural
     columns of staging, and the publish reads staging again for the fact.
     """
     spark = staging.sparkSession
@@ -232,8 +226,9 @@ def run_etl(staging: DataFrame, warehouse: Warehouse | None = None) -> Warehouse
         F.col("Valor").alias("valor"),
         "id_hash",
     )
-    out.fato_lancamento = _append(
-        wh.fato_lancamento, insert_if_absent(fact, wh.fato_lancamento, ["id_hash"])
+    new = insert_if_absent(fact, wh.fato_lancamento, ["id_hash"])
+    out.fato_lancamento = (
+        new if wh.fato_lancamento is None else wh.fato_lancamento.unionByName(new)
     )
     return out
 
@@ -271,7 +266,8 @@ def write_warehouse(wh: Warehouse, base_path: str) -> None:
     by (ano, mes).
 
     The six tables are written concurrently: each dim is a few tiny jobs,
-    which serial writes would leave the cores idle between.
+    which serial writes would leave the cores idle between. No frame is
+    kept: each write evaluates its frame's lineage itself.
 
     Dims are small — one parquet file each (coalesce(1): no point paying a
     shuffle's worth of tiny files). The fact carries denormalized (ano, mes)
@@ -309,8 +305,8 @@ def write_warehouse(wh: Warehouse, base_path: str) -> None:
 #      version id that already exists is refused before anything is
 #      written: a published version is never rewritten.
 #   2. AUDIT  the written files by reading them back and running checks
-#      (row counts vs the source frames here; extend with FK/null checks
-#      as needed). A failed audit aborts before anything is visible.
+#      (row counts vs a recount of the sources here; extend with FK/null
+#      checks as needed). A failed audit aborts before anything is visible.
 #   3. PUBLISH by a compare-and-swap on the generation chain under
 #      `{base}/_ptr/`: the publisher captured the head generation g at
 #      entry and now claims slot `_ptr/{g+1:020d}` with an ATOMIC
@@ -483,11 +479,14 @@ def publish_warehouse(
     exists under ``_v/`` raises FileExistsError before anything is
     written.
 
-    The tables are written concurrently, the fact one file per month; the
-    audit counts sources and read-back in two concurrent union queries."""
+    The tables are written concurrently, the fact one file per month,
+    beside one union count of the sources; the audit compares it with one
+    union count of the files read back. That is a *recount* of the source
+    lineage, no frame kept, so ``wh`` must be deterministic: a source
+    whose row count changes in between (an upload file replaced
+    mid-publish, say) fails the audit and publishes nothing. A kept frame
+    would promise no more: a lost block is recomputed from its lineage."""
     import uuid
-
-    from pyspark import StorageLevel
 
     version = version or uuid.uuid4().hex
     vdir = f"{base_path}/_v/{version}"
@@ -504,32 +503,25 @@ def publish_warehouse(
         else _current_generation(spark, base_path)
     )
 
-    # persist the source frames FIRST so the write and the audit count
-    # share one computation of each lineage instead of recomputing the
-    # full upstream plan per consumer (spill-safe level — a huge gold
-    # layer must not be pinned to executor memory)
-    cached = Warehouse(**{
-        name: df.persist(StorageLevel.MEMORY_AND_DISK) for name, df in vars(wh).items()
-    })
-    try:
-        write_warehouse(cached, vdir)  # WRITE: into the immutable version dir
+    # WRITE into the immutable version dir beside the source count, which
+    # prunes every payload column: cheaper than keeping the frames for both
+    _, expect = _in_pool(
+        spark, lambda f: f(), [lambda: write_warehouse(wh, vdir), wh.counts]
+    )
 
-        # AUDIT: re-read what actually landed on disk and compare counts
-        written = {**vars(cached), "fato_lancamento": _fact_with_month(cached)}
-        back = Warehouse(**{
-            name: spark.read.schema(df.schema).parquet(f"{vdir}/{name}")
-            for name, df in written.items()
-        })
-        expect, got = _in_pool(spark, Warehouse.counts, [cached, back])
-        for name in GOLD_TABLES:
-            if expect[name] != got[name]:
-                raise RuntimeError(
-                    f"audit failed for {name}: wrote {expect[name]} rows, "
-                    f"read back {got[name]}; version {version} NOT published"
-                )
-    finally:
-        for name in GOLD_TABLES:
-            getattr(cached, name).unpersist()
+    # AUDIT: re-read what actually landed on disk and compare counts
+    written = {**vars(wh), "fato_lancamento": _fact_with_month(wh)}
+    back = Warehouse(**{
+        name: spark.read.schema(df.schema).parquet(f"{vdir}/{name}")
+        for name, df in written.items()
+    })
+    got = back.counts()
+    for name in GOLD_TABLES:
+        if expect[name] != got[name]:
+            raise RuntimeError(
+                f"audit failed for {name}: wrote {expect[name]} rows, "
+                f"read back {got[name]}; version {version} NOT published"
+            )
 
     # PUBLISH: compare-and-swap on the generation chain — exactly one
     # publisher can create slot base_gen+1; the loser's version dir

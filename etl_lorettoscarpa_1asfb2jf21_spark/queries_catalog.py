@@ -20,6 +20,12 @@ Output-dtype policy (so both engines land on identical pandas values):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
@@ -656,14 +662,17 @@ def k1_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-def _scratch_dir(name: str) -> str:
-    """Per-process scratch under the system temp dir (the engine's own
-    shuffle/scratch space lives there too). PID-scoped so a concurrent
-    bench + gate run can't clobber each other's round-trip files."""
-    import os
-    import tempfile
+@functools.cache
+def _scratch_root() -> str:
+    """This process's scratch root under the system temp dir: made on
+    first use, removed at exit, shared with no other process."""
+    root = tempfile.mkdtemp(prefix="spark_graft_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{os.getpid()}")
+
+def _scratch_dir(name: str) -> str:
+    return os.path.join(_scratch_root(), name)
 
 
 @query(
@@ -873,8 +882,6 @@ def s7_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     file (app/app.py:17-19); on a cluster the upload already lives on
     shared storage and only the spark.read path below runs.
     """
-    import os
-
     from .sources.csv_locale import read_lancamentos_csv_with_quarantine
 
     out = _scratch_dir("s7_csv_quarantine")

@@ -9,6 +9,9 @@ oracle-checked twins sat outside it).  These tests make the invariant
 structural: every rows-only query must register after every oracle-checked
 one, so the first-50 window — and indeed any prefix up to the number of
 oracle-checked queries — is fully oracle-backed.
+
+Also here: the catalog's round-trip queries write under one per-process
+scratch root, which is removed when the process exits.
 """
 
 from __future__ import annotations
@@ -49,3 +52,28 @@ def test_oracle_keys_subset_of_queries():
     queries, oracles = _load()
     orphans = sorted(set(oracles) - set(queries))
     assert not orphans, f"oracle_sql entries without a queries() twin: {orphans}"
+
+
+def test_scratch_root_removed_at_process_exit(tmp_path):
+    """A process's catalog scratch dirs share one root under the system
+    temp dir, which is gone once the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import os\n"
+        "from etl_lorettoscarpa_1asfb2jf21_spark.queries_catalog import _scratch_dir\n"
+        "d = _scratch_dir('x')\n"
+        "os.makedirs(d)\n"
+        "open(os.path.join(d, 'f'), 'w').close()\n"
+        "print(d)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    d = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo, capture_output=True, text=True, check=True,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    ).stdout.strip()
+    assert d.startswith(str(tmp_path)) and not os.path.exists(d)
+    assert os.listdir(tmp_path) == []

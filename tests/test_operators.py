@@ -33,6 +33,20 @@ def test_insert_if_absent_intra_and_cross_batch(spark):
     assert ks == [3, 4]  # 2 dropped (exists), one 3 dropped (intra-batch)
 
 
+def test_insert_if_absent_plans_one_aggregate(spark):
+    """The anti-join's right side is the key projection, duplicates kept:
+    the batch dedup is the plan's only Aggregate, and a duplicated key in
+    ``existing`` changes no output row."""
+    import re
+
+    existing = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b2")], ["k", "v"])
+    batch = spark.createDataFrame([(2, "x"), (3, "c"), (3, "c-dup")], ["k", "v"])
+    out = insert_if_absent(batch, existing, ["k"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bAggregate \[", plan)) == 1, plan
+    assert [r["k"] for r in out.collect()] == [3]
+
+
 def test_insert_if_absent_no_existing(spark):
     batch = spark.createDataFrame([(1,), (1,), (2,)], ["k"])
     assert insert_if_absent(batch, None, ["k"]).count() == 2

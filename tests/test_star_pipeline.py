@@ -222,8 +222,9 @@ def test_publish_crash_leaves_readers_on_old_version(spark, staging, tmp_path):
 
 # Jobs one load may launch, run_etl and publish_warehouse together: the
 # key-resolution collect (+ the existing dims' collects on an incremental
-# load), the six writes and the two audit counts. Surrogate keys computed
-# in the plan run as one-task jobs per dim and stage, ~50 per load.
+# load), the six writes, the source count run beside them, and the
+# read-back count. Surrogate keys computed in the plan run as one-task
+# jobs per dim and stage, ~50 per load.
 LOAD_PATH_JOBS = 25
 
 
@@ -247,6 +248,31 @@ def test_load_path_job_budget(spark, staging, tmp_path, jobs_during):
         _, launched, grouped = jobs_during(lambda: load(prev))
         assert grouped and launched == grouped
         assert len(launched) <= LOAD_PATH_JOBS, sorted(launched)
+
+
+def test_publish_persists_nothing(spark, staging, tmp_path, monkeypatch):
+    """publish_warehouse keeps no frame: with persist and cache refused, a
+    fresh and an incremental publish both succeed, and each read-back
+    matches the source counts."""
+    from etl_lorettoscarpa_1asfb2jf21_spark.plans.star import (
+        publish_warehouse,
+        read_warehouse,
+    )
+
+    valid, _ = staging
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("publish_warehouse kept a frame")
+
+    for method in ("persist", "cache"):
+        monkeypatch.setattr(type(valid), method, refuse)
+    base = str(tmp_path / "gold_unkept")
+    prev = None
+    for _ in ("fresh", "incremental"):
+        wh = run_etl(valid, prev)
+        publish_warehouse(wh, base)
+        prev = read_warehouse(spark, base)
+        assert prev.counts() == wh.counts()
 
 
 def test_publish_writes_one_file_per_month(spark, staging, tmp_path):
